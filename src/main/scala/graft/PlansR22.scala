@@ -89,10 +89,10 @@ object PlansR22 {
     // BEFORE (reconstructed): the r21 commit shape — staged write,
     // then the fused read-back stats scan over the written files.
     val beforeTrace = jobTrace(spark) {
-      val staged = graft.sources.StagedWrite.parquetWithCounts(
+      val staged = graft.sources.StagedWrite.stage(
         TxnLog.readVersion(spark, tbl, TxnLog.latest(tbl).get).coalesce(1),
-        tbl, "c_before")
-      TxnLog.commitStatsFor(spark, tbl, staged.map(_._1), Some("k"),
+        tbl, "c_before", TxnLog.PreCreate)
+      TxnLog.commitStatsFor(spark, tbl, staged.paths, Some("k"),
         Seq.empty, Seq.empty)
     }
     // AFTER: the committed code path — TxnLog.compact, whose write

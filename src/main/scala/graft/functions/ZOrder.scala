@@ -196,7 +196,8 @@ object ZOrder {
     * indicator chain — identical output for every input including
     * NULL (the chain's `otherwise(0)` summed to 0 on NULL input, so
     * this expression is non-nullable and maps NULL to 0) and NaN
-    * (primitive `>` is false, bucket 0). `cuts` ride the expression
+    * (under `gtSql` NaN compares greater than every non-NaN cut, so
+    * it lands in bucket `cuts.length`). `cuts` ride the expression
     * as a referenced sorted array; order-independence of the count
     * makes defensive sorting semantics-free. */
   case class BucketIndex(child: Expression, cuts: Seq[Double])

@@ -3327,7 +3327,8 @@ object SourceSinkQueries {
     // 1)`) measured ~15 µs/row — past codegen comfort — and
     // repartitionByRange evaluates the projection twice (sampling +
     // shuffle). BucketIndex is output-identical for every input
-    // (ties, NULL→0, NaN→0; ZOrderSpec pins it against the chain).
+    // (ties, NULL→0, NaN→cuts.length; ZOrderSpec pins it against the
+    // chain).
     def bucketCol(c: org.apache.spark.sql.Column,
         cuts: Array[Double]): org.apache.spark.sql.Column =
       graft.functions.ZOrder.bucketIndexCol(c, cuts)

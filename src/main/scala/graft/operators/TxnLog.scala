@@ -56,6 +56,12 @@ import org.apache.spark.sql.types.StructType
   *   and reads exactly its files — later commits are invisible
   *   (snapshot isolation), and a pinned read never sees a torn table
   *   because manifests only ever reference fully-written files.
+  * - **Replacing files is one builder.** Every commit that swaps a
+  *   file set for freshly staged files (MERGE, compaction, delete
+  *   materialization, the connector's copy-on-write rewrites) builds
+  *   its manifest with [[replaceFiles]] from files staged by
+  *   [[graft.sources.StagedWrite.stage]], so per-file metadata stays
+  *   exactly over the live files whichever path committed.
   * - **Vacuum liveness derives from the log.** A file is live iff some
   *   RETAINED manifest references it ([[liveFiles]]); everything else
   *   older than the retention horizon is garbage. Expiring old
@@ -137,7 +143,14 @@ object TxnLog {
       // (union, take k) into the distinct count the CBO needs for
       // columns whose type carries no min/max bounds (strings).
       // Partial coverage = no NDV reported (never a wrong one).
-      ndv: Map[String, Map[String, Seq[Long]]] = Map.empty)
+      ndv: Map[String, Map[String, Seq[Long]]] = Map.empty) {
+    /** The declared stats column sets new files are covered under:
+      * the stats key, the `colStats` columns and the `ndv` columns
+      * (sorted) — what writer-side stats specs and commit-stats
+      * caches are keyed by. */
+    def declaredSets: (Option[String], Seq[String], Seq[String]) =
+      (statsKey, colStats.keys.toSeq.sorted, ndv.keys.toSeq.sorted)
+  }
 
   final case class Committed(version: Long, conflicts: Int)
 
@@ -933,10 +946,13 @@ object TxnLog {
     tryCommitManifest(table, Manifest(parent + 1, parent, action, files,
       stats, statsKey, partitions, columns))
 
+  /** The tip of a table not yet created: no files, nothing declared. */
+  val PreCreate: Manifest = Manifest(-1L, -2L, "none", Seq.empty)
+
   /** The tip manifest, or the empty pre-create sentinel. */
   def tip(table: Path): Manifest = latest(table)
     .map(readManifest(table, _))
-    .getOrElse(Manifest(-1L, -2L, "none", Seq.empty))
+    .getOrElse(PreCreate)
 
   /** Thrown by a [[commitRetryWith]] build function (via
     * [[abortCommit]]) to abandon the commit as a NO-OP — the
@@ -1660,6 +1676,56 @@ object TxnLog {
     })
   }
 
+  /** The manifest of a commit that REPLACES files `replaced` of tip
+    * `t` with the staged files `s` — the one builder behind every
+    * file-replacing commit ([[mergeCowByKey]], [[compact]],
+    * [[compactSmall]], [[materializeDeletes]], the connector's
+    * copy-on-write DELETE and row-level rewrite; the delta row-level
+    * write appends by replacing nothing). The file list is
+    * `t.files − replaced ++ s.paths`; every per-file map (`stats`,
+    * `colStats`, `ndv`, `rows`, `sizes`, `partitions`, `seqs`) is
+    * `t`'s entries minus the replaced files' plus the staged files',
+    * so survivors keep what they earned and the new tip stays fully
+    * covered. Rewrites size their fan-out from `t.sizes`
+    * ([[rewriteFanOut]]). Whole-table
+    * fields (`statsKey`, `columns`, `constraints`, pending `deletes`)
+    * come from `t` — a caller that means otherwise passes a
+    * `t.copy(...)` or copies the result. The commit gets a fresh
+    * timestamp and no streaming stamp. */
+  def replaceFiles(table: Path, t: Manifest, action: String,
+      replaced: Set[String], s: graft.sources.StagedWrite.Staged)
+      : Manifest = {
+    val files = t.files.filterNot(replaced) ++ s.paths
+    def swap[V](old: Map[String, V], added: Map[String, V]) =
+      (old -- replaced) ++ added
+    t.copy(action = action, files = files,
+      stats = swap(t.stats, s.stats.key),
+      partitions = t.partitions -- replaced,
+      sizes = fileSizes(table, files, t.sizes),
+      colStats = t.colStats.map { case (c, pf) =>
+        c -> swap(pf, s.stats.colStats.getOrElse(c, Map.empty))
+      },
+      seqs = t.seqs -- replaced,
+      rows = swap(t.rows, s.rows),
+      ndv = (t.ndv.keySet ++ s.stats.ndv.keySet).map { c =>
+        c -> swap(t.ndv.getOrElse(c, Map.empty),
+          s.stats.ndv.getOrElse(c, Map.empty))
+      }.toMap,
+      txn = None, ts = 0L)
+  }
+
+  /** A file's byte size from `t`'s manifest, stat-ing it only when the
+    * manifest never sized it (legacy or raw-commit manifests). */
+  private def sizeOf(table: Path, t: Manifest, f: String): Long =
+    t.sizes.getOrElse(f, Files.size(table.resolve(f)))
+
+  /** Output file count for rewriting `files` of `t`:
+    * `ceil(their bytes / targetFileBytes)`, at least one. */
+  private[graft] def rewriteFanOut(table: Path, t: Manifest,
+      files: Iterable[String], targetFileBytes: Long): Int =
+    math.max(1L, (files.toSeq.map(sizeOf(table, t, _)).sum +
+      targetFileBytes - 1) / targetFileBytes).toInt
+
   /** Fold every pending equality delete back into the data files:
     * rewrite ONLY the files at least one delete applies to (with the
     * deletes applied during the read), carry the untouched files, and
@@ -1689,29 +1755,12 @@ object TxnLog {
         t.copy(action = "materialize", deletes = Seq.empty,
           txn = None, ts = 0L)
       })
-    val affectedBytes = affected
-      .map(f => Files.size(table.resolve(f))).sum
-    val nOut = math.max(1L,
-      (affectedBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // Write tasks report (file, rows) back and skip empty partitions
-    // — a rewrite that deleted everything writes nothing, so the tip
-    // stays fully stats-covered with no zero-row files to drop and no
-    // footer re-reads at commit (graft.sources.StagedWrite). The
-    // tasks ALSO fold the commit stats as they write (r22,
-    // WriterStats) — zero post-write stats jobs.
-    val rewrite = morRead(spark, table, t0, Some(affected)).coalesce(nOut)
-    val spec = graft.sources.WriterStats.spec(spark, rewrite.schema,
-      t0.statsKey, t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      rewrite, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val written = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-    val newStats = cs.key
-    val newColStats = cs.colStats
-    val newNdv = cs.ndv
-    val affectedSet = affected.toSet
+    // A rewrite that deleted everything writes nothing, so the tip
+    // stays fully stats-covered with no zero-row files to drop.
+    val nOut = rewriteFanOut(table, t0, affected, targetFileBytes)
+    val staged = graft.sources.StagedWrite.stage(
+      morRead(spark, table, t0, Some(affected)).coalesce(nOut),
+      table, subdir, t0)
     commitRetryWith(table, t => {
       // Like a CoW merge, this rewrite does not commute: it replaced
       // the files of the tip it READ. A concurrent commit means the
@@ -1719,16 +1768,8 @@ object TxnLog {
       require(t.version == t0.version,
         s"concurrent commit v${t.version} during materializeDeletes " +
           s"planned against v${t0.version}; retry")
-      Manifest(0L, 0L, "materialize",
-        t0.files.filterNot(affectedSet) ++ written,
-        stats = (t0.stats -- affected) ++ newStats,
-        statsKey = t0.statsKey,
-        partitions = t0.partitions -- affected,
-        columns = t0.columns,
-        colStats = t0.colStats.map { case (c, pf) =>
-          c -> ((pf -- affected) ++ newColStats.getOrElse(c, Map.empty))
-        },
-        rows = staged.toMap, ndv = newNdv)
+      replaceFiles(table, t0, "materialize", affected.toSet, staged)
+        .copy(deletes = Seq.empty)
     })
   }
 
@@ -1821,31 +1862,16 @@ object TxnLog {
       // coalesce(1) would funnel a many-file rewrite through one
       // task. Range partitioning keys the output files so their
       // manifest stats stay disjoint.
-      val affectedBytes = affected.toSeq
-        .map(f => Files.size(table.resolve(f))).sum
-      val nOut = math.max(1L,
-        (affectedBytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val nOut = rewriteFanOut(table, tip, affected, targetFileBytes)
       val out = if (nOut <= 1) merged.coalesce(1)
         else merged.repartitionByRange(nOut, col(key))
       val attemptDir = if (attempt == 0) subdir else s"$subdir-r$attempt"
-      // Write tasks report (file, rows) back and skip empty
-      // partitions — no zero-row outputs, no footer re-reads at
-      // commit (graft.sources.StagedWrite) — and fold the new files'
-      // stats (key bounds + multi-column bounds + NDV) as they write
-      // (r22, WriterStats): zero post-write stats jobs. Survivors
-      // keep their entries, so every merge commit leaves a fully
-      // stats-bearing tip.
-      val spec = graft.sources.WriterStats.spec(spark, out.schema,
-        Some(key), tip.colStats.keys.toSeq.sorted,
-        tip.ndv.keys.toSeq.sorted)
-      val staged3 = graft.sources.StagedWrite.parquetWithStats(
-        out, table, attemptDir, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val written = staged.map(_._1)
-      val cs = graft.sources.WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-      val newStats = cs.key
-      val newFiles = written
+      // The new files' stats are declared under the merge key; the
+      // survivors keep the (possibly bootstrapped) ranges, so every
+      // merge commit leaves a fully stats-bearing tip.
+      val keyed = tip.copy(stats = ranges, statsKey = Some(key))
+      val staged = graft.sources.StagedWrite.stage(
+        out, table, attemptDir, keyed)
       // A COW rewrite does NOT commute the way an append does: losing
       // the race means the files this attempt read (and replaced) may
       // no longer be the tip's — blindly unioning file sets would
@@ -1854,20 +1880,9 @@ object TxnLog {
       // attempt's files (left for vacuum, like any aborted write) and
       // REPLANS the whole merge against the new tip — the
       // serializable-writer discipline, not just retry-the-rename.
-      val keptFiles = tip.files.filterNot(affected) ++ newFiles
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
-      tryCommitManifest(table, Manifest(tipVersion + 1, tipVersion,
-        "merge", keptFiles,
-        (ranges -- affected) ++ newStats,
-        statsKey = Some(key),
-        partitions = tip.partitions -- affected,
-        columns = tip.columns,
-        sizes = fileSizes(table, keptFiles, tip.sizes),
-        colStats = tip.colStats.map { case (c, perFile) =>
-          c -> ((perFile -- affected) ++ newColStats.getOrElse(c, Map.empty))
-        },
-        deletes = tip.deletes, rows = staged.toMap, ndv = newNdv),
+      tryCommitManifest(table,
+        replaceFiles(table, keyed, "merge", affected, staged)
+          .copy(version = tipVersion + 1, parent = tipVersion),
         parentHint = Some(tip)) match {
         case Some(v) => return Committed(v, conflicts)
         case None => conflicts += 1; attempt += 1
@@ -1889,19 +1904,12 @@ object TxnLog {
       nFiles: Int = 1, statsKey: Option[String] = None): Committed = {
     val tipVersion = latest(table).get
     val tipM = readManifest(table, tipVersion)
-    val effKey = statsKey.orElse(tipM.statsKey)
-    // Write tasks fold the compacted files' stats as they write (r22,
-    // WriterStats) — zero post-write stats jobs; hoisted out of the
-    // commit closure (r21), so a retry never recomputes either.
-    val compacted = readVersion(spark, table, tipVersion).coalesce(nFiles)
-    val spec = graft.sources.WriterStats.spec(spark, compacted.schema,
-      effKey, tipM.colStats.keys.toSeq.sorted, tipM.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      compacted, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
+    val keyed = tipM.copy(statsKey = statsKey.orElse(tipM.statsKey))
+    // Staged (with its stats) outside the commit closure, so a retry
+    // never rewrites or recomputes.
+    val staged = graft.sources.StagedWrite.stage(
+      readVersion(spark, table, tipVersion).coalesce(nFiles),
+      table, subdir, keyed)
     commitRetryWith(table, t => {
       // A full rewrite does not commute (same discipline as
       // compactSmall/materializeDeletes): a concurrent append or
@@ -1912,9 +1920,8 @@ object TxnLog {
       require(t.version == tipVersion,
         s"concurrent commit v${t.version} during compact planned " +
           s"against v$tipVersion; retry")
-      Manifest(0L, 0L, "compact", newFiles,
-        cs.key, effKey, columns = t.columns, colStats = cs.colStats,
-        rows = staged.toMap, ndv = cs.ndv)
+      replaceFiles(table, keyed, "compact", keyed.files.toSet, staged)
+        .copy(deletes = Seq.empty)
     })
   }
 
@@ -2483,29 +2490,14 @@ object TxnLog {
       minFileBytes: Long = 32L << 20,
       targetFileBytes: Long = 128L << 20): Committed = {
     val t0 = tip(table)
-    def sizeOf(f: String): Long =
-      t0.sizes.getOrElse(f, Files.size(table.resolve(f)))
-    val small = t0.files.filter(f => sizeOf(f) < minFileBytes)
+    val small = t0.files.filter(f => sizeOf(table, t0, f) < minFileBytes)
     if (small.size < 2) return Committed(t0.version, 0)
-    val smallBytes = small.map(sizeOf).sum
-    val nOut = math.max(1L,
-      (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // Write tasks report (file, rows) back; empty partitions write
-    // nothing (graft.sources.StagedWrite) — no zero-row outputs, no
-    // footer re-reads at commit — and fold the packed files' stats as
-    // they write (r22, WriterStats): zero post-write stats jobs,
-    // hoisted out of the commit closure (r21) so retries recompute
-    // nothing.
-    val packed = morRead(spark, table, t0, Some(small)).coalesce(nOut)
-    val spec = graft.sources.WriterStats.spec(spark, packed.schema,
-      t0.statsKey, t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-    val staged3 = graft.sources.StagedWrite.parquetWithStats(
-      packed, table, subdir, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val written = staged.map(_._1)
-    val cs = graft.sources.WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-    val smallSet = small.toSet
+    val nOut = rewriteFanOut(table, t0, small, targetFileBytes)
+    // Staged (with its stats) outside the commit closure, so retries
+    // recompute nothing.
+    val staged = graft.sources.StagedWrite.stage(
+      morRead(spark, table, t0, Some(small)).coalesce(nOut),
+      table, subdir, t0)
     commitRetryWith(table, t => {
       // A pack rewrite does not commute (same discipline as
       // materializeDeletes): a concurrent commit means the plan is
@@ -2513,17 +2505,7 @@ object TxnLog {
       require(t.version == t0.version,
         s"concurrent commit v${t.version} during compactSmall " +
           s"planned against v${t0.version}; retry")
-      Manifest(0L, 0L, "optimize",
-        t0.files.filterNot(smallSet) ++ written,
-        stats = (t0.stats -- small) ++ cs.key,
-        statsKey = t0.statsKey,
-        partitions = t0.partitions -- small,
-        columns = t0.columns,
-        colStats = t0.colStats.map { case (c, pf) =>
-          c -> ((pf -- small) ++ cs.colStats.getOrElse(c, Map.empty))
-        },
-        deletes = t0.deletes, rows = staged.toMap,
-        ndv = cs.ndv)
+      replaceFiles(table, t0, "optimize", small.toSet, staged)
     })
   }
 

@@ -405,15 +405,10 @@ object GraftTables {
     // Writer-side stats (r22): the write tasks fold the commit stats
     // over the rows as they stage them, under the SNAPSHOT's declared
     // column sets — zero post-write stats jobs on the common path.
-    val snapSets = (snap.manifest.statsKey,
-      snap.manifest.colStats.keys.toSeq.sorted,
-      snap.manifest.ndv.keys.toSeq.sorted)
-    val spec = WriterStats.spec(spark, physical.schema,
-      snapSets._1, snapSets._2, snapSets._3)
-    val staged3 = stage(snap.root, physical, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val newRows = staged.toMap
+    val staged = StagedWrite.stage(physical, snap.root, stagingDir(),
+      snap.manifest)
+    val newFiles = staged.paths
+    val newRows = staged.rows
     // The staged files never change across commit retries — their
     // stats are computed once, by the write tasks themselves. The
     // cache is keyed by the declared column sets of the manifest the
@@ -424,8 +419,7 @@ object GraftTables {
     val statsCache = scala.collection.mutable.Map
       .empty[(Option[String], Seq[String], Seq[String]),
         TxnLog.CommitStats]
-    statsCache.put(snapSets, WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) }))
+    statsCache.put(snap.manifest.declaredSets, staged.stats)
     TxnLog.commitRetryWith(snap.root, tip => {
       // Idempotent-replay guard, INSIDE the attempt: if this writer's
       // (appId, batchId) already sits at or below a committed stamp —
@@ -445,11 +439,10 @@ object GraftTables {
         TxnLog.checkConstraints(data, tip.constraints)
       // Key bounds + declared column bounds + NDV sketches for the new
       // files, in ONE scan (TxnLog.commitStatsFor).
-      val cs = statsCache.getOrElseUpdate(
-        (tip.statsKey, tip.colStats.keys.toSeq.sorted,
-          tip.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, tip.statsKey,
-          tip.colStats.keys.toSeq.sorted, tip.ndv.keys.toSeq.sorted))
+      val sets @ (key, colCols, ndvCols) = tip.declaredSets
+      val cs = statsCache.getOrElseUpdate(sets,
+        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
+          ndvCols))
       val newStats = cs.key
       val newColStats = cs.colStats
       val mergedColStats = tip.colStats.map { case (c, perFile) =>
@@ -502,14 +495,11 @@ object GraftTables {
     // estimate requires every kept file to carry an entry). Sketched
     // by the write tasks themselves (r22, WriterStats) — zero
     // post-write stats jobs.
-    val spec = WriterStats.spec(data.sparkSession, data.schema,
-      None, Seq.empty, Seq.empty)
-    val staged3 = stage(root, data, Some(spec))
-    val staged = staged3.map { case (rel, n, _) => (rel, n) }
-    val newFiles = staged.map(_._1)
-    val newRows = staged.toMap
-    val newNdv = WriterStats.assemble(spec,
-      staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) }).ndv
+    val staged = StagedWrite.stage(data, root, stagingDir(),
+      TxnLog.PreCreate)
+    val newFiles = staged.paths
+    val newRows = staged.rows
+    val newNdv = staged.stats.ndv
     val cols = data.schema.fields.zipWithIndex.map { case (f, i) =>
       TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString, f.name)
     }.toSeq
@@ -536,18 +526,9 @@ object GraftTables {
     })
   }
 
-  /** Stage under a fresh subdirectory via [[StagedWrite]]: the write
-    * tasks report (file, rows) back — plus the writer-side commit
-    * stats when a spec is given (r22) — so the commit carries exact
-    * counts and stats with zero driver footer reads and zero
-    * post-write stats jobs. */
-  private def stage(root: Path, physical: DataFrame,
-      spec: Option[WriterStats.Spec] = None)
-      : Seq[(String, Long, Option[WriterStats.FileStats])] = {
-    val subdir = s"w${System.currentTimeMillis()}-" +
-      s"${stagingCounter.incrementAndGet()}"
-    StagedWrite.parquetWithStats(physical, root, subdir, spec)
-  }
+  /** A fresh staging subdirectory name for an insert or create. */
+  private def stagingDir(): String =
+    s"w${System.currentTimeMillis()}-${stagingCounter.incrementAndGet()}"
 
   /** `DELETE FROM graft.`path` WHERE pred` as a copy-on-write log
     * commit: manifest metadata ([[GraftPruning]]) picks the files that
@@ -680,29 +661,11 @@ object GraftTables {
       val keep = TxnLog
         .morRead(spark, root, tip, Some(affected.toSeq.sorted))
         .filter(!pred.eqNullSafe(lit(true)))
-      val affectedBytes = affected.toSeq
-        .map(f => tip.sizes.getOrElse(f, Files.size(root.resolve(f)))).sum
-      val nOut = math.max(1L,
-        (affectedBytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val nOut = TxnLog.rewriteFanOut(root, tip, affected, targetFileBytes)
       val out = if (nOut <= 1) keep.coalesce(1) else keep.repartition(nOut)
       val attemptDir = s"del${System.currentTimeMillis()}-" +
         s"${stagingCounter.incrementAndGet()}"
-      // Write tasks report (file, rows) back and skip empty
-      // partitions, so no count re-scan and no empty-file filter —
-      // and fold the rewritten files' stats as they write (r22,
-      // WriterStats): zero post-write stats jobs.
-      val spec = WriterStats.spec(spark, out.schema, tip.statsKey,
-        tip.colStats.keys.toSeq.sorted, tip.ndv.keys.toSeq.sorted)
-      val staged3 = StagedWrite.parquetWithStats(
-        out, root, attemptDir, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val newFiles = staged.map(_._1)
-      val cs = WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-      val newStats = cs.key
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
-      val files = tip.files.filterNot(affected) ++ newFiles
+      val staged = StagedWrite.stage(out, root, attemptDir, tip)
       // Declare columns if the tip never did — a delete that empties
       // the table must leave it readable (resolve needs declared
       // columns when no files remain to infer from).
@@ -711,15 +674,10 @@ object GraftTables {
           TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString,
             snap.physicalOf(f.name))
         }.toSeq))
-      TxnLog.tryCommitManifest(root, TxnLog.Manifest(
-        tipVersion + 1, tipVersion, "delete", files,
-        (tip.stats -- affected) ++ newStats, tip.statsKey,
-        tip.partitions -- affected, cols,
-        TxnLog.fileSizes(root, files, tip.sizes),
-        colStats = tip.colStats.map { case (c, perFile) =>
-          c -> ((perFile -- affected) ++ newColStats.getOrElse(c, Map.empty))
-        },
-        deletes = tip.deletes, rows = staged.toMap, ndv = newNdv),
+      TxnLog.tryCommitManifest(root,
+        TxnLog.replaceFiles(root, tip.copy(columns = cols), "delete",
+          affected, staged).copy(version = tipVersion + 1,
+          parent = tipVersion),
         parentHint = Some(tip)) match {
         case Some(_) => return
         case None => attempt += 1 // lost the race: replan on the new tip
@@ -859,17 +817,8 @@ object GraftTables {
         set.get(c).map(expr).getOrElse(col(c))
           .cast(snap.schema(c).dataType).as(snap.physicalOf(c))
       }: _*)
-      val spec = WriterStats.spec(spark, rewritten.schema, t0.statsKey,
-        t0.colStats.keys.toSeq.sorted, t0.ndv.keys.toSeq.sorted)
-      val staged3 = StagedWrite.parquetWithStats(
-        rewritten, root, dataSub, Some(spec))
-      val staged = staged3.map { case (rel, n, _) => (rel, n) }
-      val newFiles = staged.map(_._1)
-      val cs = WriterStats.assemble(spec,
-        staged3.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-      val newStats = cs.key
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
+      val staged = StagedWrite.stage(rewritten, root, dataSub, t0)
+      val cs = staged.stats
       TxnLog.commitRetryWith(root, t => {
         // Positions name files of the planned tip and the rewritten
         // rows were read under its delete set — a concurrent commit
@@ -878,14 +827,14 @@ object GraftTables {
           s"concurrent commit v${t.version} during updateMor planned " +
             s"against v${t0.version}; retry")
         t.copy(action = "update-mor",
-          files = t.files ++ newFiles,
-          rows = t.rows ++ staged.toMap,
+          files = t.files ++ staged.paths,
+          rows = t.rows ++ staged.rows,
           ndv = t.ndv.map { case (c, pf) =>
-            c -> (pf ++ newNdv.getOrElse(c, Map.empty))
+            c -> (pf ++ cs.ndv.getOrElse(c, Map.empty))
           },
-          stats = t.stats ++ newStats,
+          stats = t.stats ++ cs.key,
           colStats = t.colStats.map { case (c, pf) =>
-            c -> (pf ++ newColStats.getOrElse(c, Map.empty))
+            c -> (pf ++ cs.colStats.getOrElse(c, Map.empty))
           },
           deletes = t.deletes ++ posWritten.map(p => TxnLog.DeleteFile(
             p, "", t.version + 1,

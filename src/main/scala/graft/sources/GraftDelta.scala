@@ -123,18 +123,16 @@ final class GraftDeltaBatchWrite(
   // NDV sketches folded by the write tasks themselves, so the common
   // (no-rebase) commit runs zero post-write stats jobs; a rebase onto
   // a tip whose sets changed falls back to the fused read-back scan.
-  private val writerSpec = WriterStats.spec(spark, snap.physicalSchema,
-    snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-    snap.manifest.ndv.keys.toSeq.sorted)
+  private val writerSpec =
+    WriterStats.specFor(spark, snap.physicalSchema, snap.manifest)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val outs = messages.map(_.asInstanceOf[GraftDeltaFiles])
-    val newFiles = outs.flatMap(o =>
-      o.dataRel.filter(_ => o.dataRows > 0)).toSeq.sorted
-    // Exact per-file counts from the writers' own commit messages —
-    // the manifest carries them so no footer is ever re-read.
-    val newRows: Map[String, Long] = outs.flatMap(o =>
-      o.dataRel.filter(_ => o.dataRows > 0).map(_ -> o.dataRows)).toMap
+    // Exact per-file counts and writer-side stats from the writers'
+    // own commit messages — no footer is ever re-read.
+    val staged = StagedWrite.Staged.of(writerSpec, outs.toSeq.flatMap(o =>
+      o.dataRel.map(rel => (rel, o.dataRows, o.stats))))
+    val newFiles = staged.paths
     val posFiles = outs.flatMap(o =>
       o.posRel.filter(_ => o.posRows > 0)).toSeq.sorted
     if (newFiles.isEmpty && posFiles.isEmpty) return // nothing matched
@@ -156,13 +154,7 @@ final class GraftDeltaBatchWrite(
     // writing (r22) under the snapshot's declared sets — the common
     // path commits with zero post-write stats jobs; only a rebase
     // onto changed sets re-scans.
-    statsCache.put(
-      (snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-        snap.manifest.ndv.keys.toSeq.sorted),
-      WriterStats.assemble(writerSpec,
-        outs.toSeq.flatMap(o => o.dataRel
-          .filter(_ => o.dataRows > 0)
-          .flatMap(rel => o.stats.map(rel -> _)))))
+    statsCache.put(snap.manifest.declaredSets, staged.stats)
     // A statement that only deleted is a delete-mor commit (the CDF
     // classifies it as pure deletes); one that wrote rows is
     // update-mor (paired pre/post classification).
@@ -189,31 +181,20 @@ final class GraftDeltaBatchWrite(
       // (TxnLog.commitStatsFor, r21) — and the NDV leg now rides the
       // retry cache too (it used to recompute on every rebase attempt
       // even when the declaration set was unchanged).
-      val cs = statsCache.getOrElseUpdate(
-        (base.statsKey, base.colStats.keys.toSeq.sorted,
-          base.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, base.statsKey,
-          base.colStats.keys.toSeq.sorted, base.ndv.keys.toSeq.sorted))
-      val newStats = cs.key
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
-      TxnLog.tryCommitManifest(snap.root, TxnLog.Manifest(
-        base.version + 1, base.version, action,
-        base.files ++ newFiles,
-        base.stats ++ newStats,
-        base.statsKey,
-        partitions = base.partitions,
-        columns = base.columns,
-        sizes = TxnLog.fileSizes(snap.root,
-          base.files ++ newFiles, base.sizes),
-        colStats = base.colStats.map { case (c, pf) =>
-          c -> (pf ++ newColStats.getOrElse(c, Map.empty))
-        },
-        rows = newRows, ndv = newNdv,
-        deletes = base.deletes ++ posFiles.map(p => TxnLog.DeleteFile(
-          p, "", base.version + 1,
-          Files.size(snap.root.resolve(p)), kind = "pos")),
-        ), parentHint = Some(base)) match {
+      val sets @ (key, colCols, ndvCols) = base.declaredSets
+      val cs = statsCache.getOrElseUpdate(sets,
+        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
+          ndvCols))
+      // Appends the data files (a replace of none) and the position
+      // deletes, in one commit.
+      TxnLog.tryCommitManifest(snap.root,
+        TxnLog.replaceFiles(snap.root, base, action, Set.empty,
+          staged.copy(stats = cs)).copy(version = base.version + 1,
+          parent = base.version,
+          deletes = base.deletes ++ posFiles.map(p => TxnLog.DeleteFile(
+            p, "", base.version + 1,
+            Files.size(snap.root.resolve(p)), kind = "pos"))),
+        parentHint = Some(base)) match {
         case Some(_) => return
         case None =>
           attempts += 1

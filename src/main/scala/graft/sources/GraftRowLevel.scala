@@ -191,9 +191,8 @@ final class GraftReplaceDataWrite(
   // they write, so the common (no-rebase) commit runs zero post-write
   // stats jobs; a rebase onto a tip whose sets changed falls back to
   // the fused read-back scan.
-  private val writerSpec = WriterStats.spec(spark, snap.physicalSchema,
-    snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-    snap.manifest.ndv.keys.toSeq.sorted)
+  private val writerSpec =
+    WriterStats.specFor(spark, snap.physicalSchema, snap.manifest)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
@@ -229,8 +228,15 @@ final class GraftReplaceDataWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val written = messages.map(_.asInstanceOf[GraftWrittenFile])
-    val newFiles = written.filter(_.rows > 0).map(_.relPath).toSeq.sorted
+    // Row counts and writer-side stats come from the write tasks'
+    // commit messages (the StagedWrite discipline — zero footer reads,
+    // zero post-write stats jobs); zero-row outputs are dropped.
+    // Without the counts the connector's exact rowCount, which needs
+    // FULL coverage of kept files, would go dark until a compaction.
+    val staged = StagedWrite.Staged.of(writerSpec,
+      messages.toSeq.map(_.asInstanceOf[GraftWrittenFile])
+        .map(w => (w.relPath, w.rows, w.stats)))
+    val newFiles = staged.paths
     // Replace EXACTLY the files the configured scan planned (the
     // groups that participated in the rewrite); everything the
     // condition's stats pruned survives untouched, with its stats,
@@ -249,20 +255,7 @@ final class GraftReplaceDataWrite(
     // writing (r22) under the snapshot's declared sets — the common
     // path commits with zero post-write stats jobs; only a rebase
     // onto changed sets re-scans.
-    statsCache.put(
-      (snap.manifest.statsKey, snap.manifest.colStats.keys.toSeq.sorted,
-        snap.manifest.ndv.keys.toSeq.sorted),
-      WriterStats.assemble(writerSpec,
-        written.filter(_.rows > 0).toSeq
-          .flatMap(w => w.stats.map(w.relPath -> _))))
-    // Row counts came from the write tasks themselves (the
-    // StagedWrite discipline — zero footer reads); without them a
-    // copy-on-write UPDATE/MERGE/DELETE would commit files with no
-    // `rows` entries and the connector's exact rowCount (which needs
-    // FULL coverage of kept files) would go dark until a compaction
-    // rewrote them.
-    val newRows = written.filter(_.rows > 0)
-      .map(w => w.relPath -> w.rows).toMap
+    statsCache.put(snap.manifest.declaredSets, staged.stats)
     // Conflict discipline (the Delta/Iceberg WriteSerializable
     // check): a lost commit race REBASES onto the new tip iff every
     // intervening commit is DISJOINT from the rewrite's groups —
@@ -291,30 +284,18 @@ final class GraftReplaceDataWrite(
       // the NDV leg, every SQL UPDATE/MERGE/DELETE would break the
       // full-coverage requirement and blind the CBO's string-key NDV
       // until the next compaction.
-      val cs = statsCache.getOrElseUpdate(
-        (base.statsKey, base.colStats.keys.toSeq.sorted,
-          base.ndv.keys.toSeq.sorted),
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, base.statsKey,
-          base.colStats.keys.toSeq.sorted, base.ndv.keys.toSeq.sorted))
-      val newStats = cs.key
-      val newColStats = cs.colStats
-      val newNdv = cs.ndv
-      val keptFiles = base.files.filterNot(scanned) ++ newFiles
-      TxnLog.tryCommitManifest(snap.root, TxnLog.Manifest(
-        base.version + 1, base.version, "replace", keptFiles,
-        (base.stats -- scanned) ++ newStats,
-        base.statsKey,
-        partitions = base.partitions -- scanned,
-        columns = base.columns,
-        sizes = TxnLog.fileSizes(snap.root, keptFiles, base.sizes),
-        colStats = base.colStats.map { case (c, perFile) =>
-          c -> ((perFile -- scanned) ++ newColStats.getOrElse(c, Map.empty))
-        },
-        // The scan APPLIED the snapshot's pending equality deletes to
-        // the files it replaces (fresh seq, coverage baked in); the
-        // list rides along for the untouched files it still scopes.
-        deletes = base.deletes,
-        rows = newRows, ndv = newNdv), parentHint = Some(base)) match {
+      val sets @ (key, colCols, ndvCols) = base.declaredSets
+      val cs = statsCache.getOrElseUpdate(sets,
+        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
+          ndvCols))
+      // The scan APPLIED the snapshot's pending equality deletes to
+      // the files it replaces (fresh seq, coverage baked in); the list
+      // rides along for the untouched files it still scopes.
+      TxnLog.tryCommitManifest(snap.root,
+        TxnLog.replaceFiles(snap.root, base, "replace", scanned,
+          staged.copy(stats = cs)).copy(version = base.version + 1,
+          parent = base.version),
+        parentHint = Some(base)) match {
         case Some(_) => return
         case None =>
           attempts += 1

@@ -9,6 +9,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.operators.TxnLog
+
 /** Parquet staging where every write TASK reports its (file, rows)
   * back in the job result — the writer-commit-message discipline of
   * Delta (`AddFile.numRecords`) and Iceberg (`DataFile.recordCount`):
@@ -30,21 +32,50 @@ import org.apache.spark.util.SerializableConfiguration
   * filter. */
 object StagedWrite {
 
-  /** Write `physical` under `root/subdir`, one parquet per non-empty
-    * partition, and return table-relative (file, rowCount) pairs as
-    * reported by the write tasks themselves. */
-  def parquetWithCounts(physical: DataFrame, root: Path,
-      subdir: String): Seq[(String, Long)] =
-    parquetWithStats(physical, root, subdir, None)
-      .map { case (rel, n, _) => (rel, n) }
+  /** What one staged write produced: the files with their
+    * task-reported row counts (sorted by path, zero-row outputs
+    * dropped) and the [[TxnLog.CommitStats]] their tasks folded. */
+  final case class Staged(
+      files: Seq[(String, Long)], stats: TxnLog.CommitStats) {
+    def paths: Seq[String] = files.map(_._1)
+    def rows: Map[String, Long] = files.toMap
+  }
 
-  /** [[parquetWithCounts]] PLUS writer-side per-file commit stats
-    * (r22): each task folds `spec`'s key bounds / column bounds / NDV
-    * sketches over the rows as it writes them ([[WriterStats
-    * .Collector]]) and ships the result back alongside its (file,
-    * rows) pair — so the commit needs ZERO post-write stats jobs over
-    * the staged bytes. `spec = None` collects nothing (the plain
-    * count contract). */
+  object Staged {
+    /** Fold task reports — (file, rows, folded stats) — into a
+      * [[Staged]]: the one place writer results become commit stats,
+      * shared by [[stage]] and the DSv2 writers whose tasks report
+      * through commit messages. */
+    def of(spec: WriterStats.Spec,
+        reports: Seq[(String, Long, Option[WriterStats.FileStats])])
+        : Staged = {
+      val live = reports.filter(_._2 > 0).sortBy(_._1)
+      Staged(live.map { case (rel, n, _) => (rel, n) },
+        WriterStats.assemble(spec,
+          live.flatMap { case (rel, _, fs) => fs.map(rel -> _) }))
+    }
+  }
+
+  /** Stage `physical` under `root/subdir` with writer-side stats for
+    * the column sets `declared` declares (`statsKey`, `colStats` keys,
+    * `ndv` keys): the spec is validated on the driver before any task
+    * runs, each task folds its file's stats as it writes, and the
+    * result carries the files, their row counts and the assembled
+    * commit stats — zero footer reads and zero post-write stats jobs
+    * at commit. Every engine write path that stages parquet itself
+    * goes through here. */
+  def stage(physical: DataFrame, root: Path, subdir: String,
+      declared: TxnLog.Manifest): Staged = {
+    val spec = WriterStats.specFor(physical.sparkSession, physical.schema,
+      declared)
+    Staged.of(spec, parquetWithStats(physical, root, subdir, Some(spec)))
+  }
+
+  /** The task-side write under [[stage]]: one parquet per non-empty
+    * partition under `root/subdir`, each task reporting its
+    * table-relative (file, rows) and — when `spec` collects anything —
+    * the stats it folded over the rows as it wrote them
+    * ([[WriterStats.Collector]]). `spec = None` collects nothing. */
   def parquetWithStats(physical: DataFrame, root: Path,
       subdir: String, spec: Option[WriterStats.Spec])
       : Seq[(String, Long, Option[WriterStats.FileStats])] = {
@@ -79,6 +110,6 @@ object StagedWrite {
         finally out.close()
         Iterator.single((rel, n, collector.map(_.result())))
       }
-    }.collect().toSeq.sortBy(_._1)
+    }.collect().toSeq
   }
 }

@@ -59,35 +59,31 @@ object WriterStats {
 
   /** Build the spec — the driver-side half of commitStatsFor: the
     * same existence checks, the same integral contract for declared
-    * bound columns (a non-integral declaration must refuse HERE,
-    * before it can reach a manifest), the same auto-NDV expansion
-    * (declared ++ every string/integral schema column, distinct,
-    * sorted) gated on the same conf. */
+    * bound columns AND the stats key (a non-integral declaration must
+    * refuse HERE, before any task creates a file or a bound reaches a
+    * manifest), the same auto-NDV expansion (declared ++ every
+    * string/integral schema column, distinct, sorted) gated on the
+    * same conf. */
   def spec(
       spark: SparkSession, schema: StructType,
       statsKey: Option[String],
       colStatCols: Seq[String],
       ndvCols0: Seq[String], ndvAutoMode: Boolean = true): Spec = {
-    colStatCols.foreach { c =>
-      val field = schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${schema.fieldNames.mkString("[", ", ", "]")}"))
-      field.dataType match {
+    def requireIntegral(what: String, c: String): Unit =
+      schema.fields.find(_.name == c).getOrElse(
+        sys.error(s"$what `$c` does not exist in the table schema " +
+          schema.fieldNames.mkString("[", ", ", "]"))).dataType match {
         case ByteType | ShortType | IntegerType | LongType => ()
         case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
+          s"$what `$c` has non-integral type ${other.simpleString}: " +
+            "manifest bounds compare as BIGINT, so only " +
+            "byte/short/int/long columns may be declared")
       }
-    }
+    colStatCols.foreach(requireIntegral("colStats column", _))
+    statsKey.foreach(requireIntegral("stats key", _))
     ndvCols0.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"ndv column `$c` does not exist in the table schema " +
-          schema.fieldNames.mkString("[", ", ", "]"))
-    }
-    statsKey.foreach { k =>
-      require(schema.fieldNames.contains(k),
-        s"stats key `$k` does not exist in the table schema " +
           schema.fieldNames.mkString("[", ", ", "]"))
     }
     val ndvCols =
@@ -96,6 +92,13 @@ object WriterStats {
         case f if TxnLog.ndvAutoEligible(f.dataType) => f.name
       }).distinct.sorted
     Spec(schema, statsKey, colStatCols, ndvCols0, ndvCols)
+  }
+
+  /** [[spec]] for the column sets `declared` declares. */
+  def specFor(spark: SparkSession, schema: StructType,
+      declared: TxnLog.Manifest): Spec = {
+    val (key, cols, ndvCols) = declared.declaredSets
+    spec(spark, schema, key, cols, ndvCols)
   }
 
   /** One written file's folded stats. `key`/`colBounds` use the

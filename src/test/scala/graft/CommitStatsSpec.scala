@@ -191,6 +191,22 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
     assert(missing.getMessage.contains("does not exist"))
   }
 
+  test("staging with a non-integral stats key refuses on the driver " +
+      "and writes no file") {
+    import spark.implicits._
+    val t = freshTable()
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "s").repartition(2)
+    val e = intercept[RuntimeException] {
+      graft.sources.StagedWrite.stage(df, t, "d0",
+        TxnLog.PreCreate.copy(statsKey = Some("s")))
+    }
+    assert(e.getMessage.contains("stats key `s` has non-integral type"),
+      e.getMessage)
+    assert(TxnLog.dataFiles(t).isEmpty,
+      s"a refused spec must refuse before any task creates a file: " +
+        TxnLog.dataFiles(t))
+  }
+
   test("a compact commit runs ZERO post-write stats jobs (r22)") {
     val t = freshTable()
     import spark.implicits._

@@ -143,6 +143,37 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("writer-side stats are staged and assembled in ONE place") {
+    // The staging decision — driver-validated spec, task-side write,
+    // task reports folded into CommitStats — lives in
+    // StagedWrite.stage / StagedWrite.Staged.of. Hand-written copies
+    // of that sequence drift apart (they once sized rewrites from two
+    // different sources), so any production call of the task-side
+    // write or of the stats assembler outside StagedWrite.scala fails
+    // this audit, as does a second call inside it.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
+    val callPat =
+      """(?<!def )\b(parquetWithStats|WriterStats\.assemble)\s*\(""".r
+    val calls: Seq[(String, String)] = java.nio.file.Files.walk(root)
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val rel = root.relativize(f).toString
+        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+          .map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+            l.startsWith("//"))
+          .flatMap(l => callPat.findAllMatchIn(l).map(m => rel -> m.group(1)))
+      }
+    val home = "graft/sources/StagedWrite.scala"
+    assert(calls.sorted == Seq(home -> "WriterStats.assemble",
+        home -> "parquetWithStats"),
+      "stage through StagedWrite.stage (or fold DSv2 task reports " +
+        "with StagedWrite.Staged.of) instead of calling the task-side " +
+        s"write or the assembler directly: ${calls.sorted}")
+  }
+
   test("persist-heavy queries do not accumulate persisted RDD blocks") {
     // Queries that persist intermediates (shared shingle relations,
     // candidate sets, prefix relations, signatures) must unpersist them

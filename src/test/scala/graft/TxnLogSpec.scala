@@ -595,6 +595,85 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     assert(!TxnLog.liveFiles(t, Seq(mm.version)).contains(dfile))
   }
 
+  /** A table declaring a stats key (`id`), colStats (`v`) and NDV
+    * (`s`) over three small files and one big one, with a pending
+    * equality delete and one file appended after it (out of the
+    * delete's scope). 3,085 rows, 3,083 visible. */
+  private def declaredTable(): Path = {
+    val t = freshTable()
+    import spark.implicits._
+    def rows(lo: Long, hi: Long) = (lo to hi)
+      .map(i => (i, i * 7L, s"s${i % 13}")).toDF("id", "v", "s")
+    Seq((1L, 25L), (26L, 50L), (51L, 75L), (76L, 3075L)).zipWithIndex
+      .foreach { case ((lo, hi), q) =>
+        rows(lo, hi).coalesce(1).write.parquet(t.resolve(s"q$q").toString)
+      }
+    val files = (0 until 4).flatMap(q => TxnLog.parquetsUnder(t, s"q$q"))
+    val cs = TxnLog.commitStatsFor(spark, t, files, Some("id"), Seq("v"),
+      Seq("s"))
+    TxnLog.commitRetryWith(t, _ => TxnLog.Manifest(0L, 0L, "create",
+      files, cs.key, Some("id"), colStats = cs.colStats, ndv = cs.ndv))
+    TxnLog.deleteByKeyMor(spark, t, Seq(10L, 30L).toDF("id"), "id", "d0")
+    rows(5000L, 5009L).coalesce(1)
+      .write.format("graft").mode("append").save(t.toString)
+    t
+  }
+
+  test("every file-replacing commit keeps each per-file map exactly " +
+      "over the live files and carries or clears pending deletes") {
+    import spark.implicits._
+    val bigFile = (t: Path) =>
+      Files.size(t.resolve(TxnLog.parquetsUnder(t, "q3").head))
+    // (commit, action, deletes carried?, visible rows after)
+    val cases: Seq[(String, Path => Unit, Boolean, Long)] = Seq(
+      ("merge", t => TxnLog.mergeCowByKey(spark, t,
+        Seq((20L, 1L, "x", "upsert")).toDF("id", "v", "s", "op"), "id",
+        "m1"), true, 3083L),
+      ("compact", t => TxnLog.compact(spark, t, "c1", nFiles = 2),
+        false, 3083L),
+      ("optimize", t => TxnLog.compactSmall(spark, t, "o1",
+        minFileBytes = bigFile(t), targetFileBytes = Long.MaxValue / 4),
+        true, 3083L),
+      ("materialize", t => TxnLog.materializeDeletes(spark, t, "mz"),
+        false, 3083L),
+      ("delete", t => graft.sources.GraftTables.deleteWhere(
+        graft.sources.GraftTables.resolve(Map("path" -> t.toString)),
+        Array(org.apache.spark.sql.sources.EqualTo("id", 40L))),
+        true, 3082L))
+    cases.foreach { case (action, commit, carries, visible) =>
+      val t = declaredTable()
+      val t0 = TxnLog.tip(t)
+      assert(t0.deletes.nonEmpty && t0.colStats.keySet == Set("v") &&
+        t0.ndv.contains("s"), s"fixture: $t0")
+      commit(t)
+      val t1 = TxnLog.tip(t)
+      assert(t1.version == t0.version + 1 && t1.action == action, t1)
+      val replaced = t0.files.toSet -- t1.files
+      assert(replaced.nonEmpty, s"$action replaced nothing")
+      if (action != "compact")
+        assert(t1.files.exists(t0.files.contains),
+          s"$action left no survivor: the fixture must keep one")
+      assert(t1.colStats.keySet == t0.colStats.keySet &&
+        t0.ndv.keySet.subsetOf(t1.ndv.keySet), s"$action: declarations")
+      val maps: Seq[(String, Map[String, Any])] = Seq(
+        "stats" -> t1.stats, "rows" -> t1.rows, "sizes" -> t1.sizes,
+        "seqs" -> t1.seqs) ++
+        t1.colStats.toSeq.map { case (c, m) => s"colStats.$c" -> m } ++
+        t1.ndv.toSeq.map { case (c, m) => s"ndv.$c" -> m }
+      maps.foreach { case (name, m) =>
+        assert(t1.files.forall(m.contains),
+          s"$action: $name misses live files " +
+            t1.files.filterNot(m.contains))
+        assert(!m.keys.exists(replaced),
+          s"$action: $name keeps replaced files ${m.keySet & replaced}")
+      }
+      if (carries) assert(t1.deletes == t0.deletes, s"$action: deletes")
+      else assert(t1.deletes.isEmpty, s"$action must clear deletes")
+      assert(TxnLog.readVersion(spark, t, t1.version).count() == visible,
+        s"$action: visible rows")
+    }
+  }
+
   test("deleteByPosMor rewrites zero data files; reads drop the exact " +
       "ordinals; materialize folds; the resurrect guard holds") {
     val t = freshTable()
