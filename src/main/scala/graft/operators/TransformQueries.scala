@@ -76,7 +76,8 @@ object TransformQueries {
       .orderBy("check_idx")
   }
 
-  /** preview_limit — count + limit(n) + schema listing. */
+  /** preview_limit — limit(n) rows, the exact total (a count only
+    * when the limit fills) and the schema listing. */
   def previewLimit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val p = Pipeline.preview(Relational.table(spark, dir, "customer"), 5)

@@ -6,6 +6,7 @@ import graft.operators.Bronze
 import graft.sinks.Sinks
 import graft.sources.Sources
 import graft.transform.{Chain, Step, StepResult}
+import graft.util.ParquetSchema
 
 /** Medallion pipeline runner — the in-process replacement for the
   * reference's generated Airflow DAG chain (SURVEY.md §2.5,
@@ -30,10 +31,15 @@ object Pipeline {
     val Error = "error"
   }
 
+  /** One layer of a run. `outputRows`, `outputFiles` and `outputBytes`
+    * describe the layer directory after the write; bronze is an append,
+    * so its numbers are the directory's totals across runs. */
   final case class LayerRun(
       layer: String,
       inputRows: Long,
       outputRows: Long,
+      outputFiles: Int,
+      outputBytes: Long,
       durationMs: Long,
       steps: Seq[StepResult])
 
@@ -45,9 +51,12 @@ object Pipeline {
   /** Execute bronze → silver → gold over parquet layer directories.
     *
     * `count_records` semantics: input/output counts per layer
-    * (`silver_service.py:80,129`). At 100 TB counts are real jobs — they
-    * run on the already-written parquet footers (metadata-only count),
-    * not a second full scan of the input.
+    * (`silver_service.py:80,129`). Each layer's output rows, files and
+    * bytes come from the footers of the data files in its directory
+    * ([[ParquetSchema.totals]]), read on the driver after the write:
+    * no Spark job and no re-scan of the written data. Layer reads take
+    * their schema from a footer too ([[Sources.scanParquet]]), so the
+    * run adds no job beyond its steps' and the layer writes'.
     */
   def run(
       spark: SparkSession,
@@ -74,11 +83,12 @@ object Pipeline {
           pipelineId, 1),
         bronzePath)
     }
-    val bronzeDf = Sources.scanParquet(spark, bronzePath)
-    val bronzeRows = bronzeDf.count()
-    layers += LayerRun("bronze", bronzeRows, bronzeRows, bms, Nil)
+    val bronze = ParquetSchema.totals(spark, bronzePath)
+    layers += LayerRun("bronze", bronze.rows, bronze.rows, bronze.files,
+      bronze.bytes, bms, Nil)
 
     // Silver: transform chain over bronze.
+    val bronzeDf = Sources.scanParquet(spark, bronzePath)
     val silverPath = s"$layerRoot/silver"
     val (silverOut, sms) = timed {
       val (df, stepResults) = Chain.run(bronzeDf, silverSteps)
@@ -87,8 +97,9 @@ object Pipeline {
       Sinks.parquetOverwrite(df, silverPath)
       stepResults
     }
-    val silverRows = Sources.scanParquet(spark, silverPath).count()
-    layers += LayerRun("silver", bronzeRows, silverRows, sms, silverOut)
+    val silver = ParquetSchema.totals(spark, silverPath)
+    layers += LayerRun("silver", bronze.rows, silver.rows, silver.files,
+      silver.bytes, sms, silverOut)
 
     // Gold: silver_schema_handoff = gold reads the silver OUTPUT
     // (`spark_utils.py:177-238`), then its own chain.
@@ -101,22 +112,28 @@ object Pipeline {
       Sinks.parquetOverwrite(df, goldPath)
       stepResults
     }
-    val goldRows = Sources.scanParquet(spark, goldPath).count()
-    layers += LayerRun("gold", silverRows, goldRows, gms, goldOut)
+    val gold = ParquetSchema.totals(spark, goldPath)
+    layers += LayerRun("gold", silver.rows, gold.rows, gold.files,
+      gold.bytes, gms, goldOut)
 
     RunResult(Status.GoldReady, layers.result(), goldPath)
   }
 
-  /** preview_limit — count + limit(n) + schema listing
-    * (`spark_utils.py:245-274`). */
+  /** preview_limit — the first `n` rows, the exact row count and the
+    * schema listing (`spark_utils.py:245-274`). */
   final case class Preview(
       totalRows: Long,
       rows: Seq[Seq[Any]],
       schema: Seq[(String, String)])
 
-  def preview(df: DataFrame, n: Int = 10): Preview =
+  /** Collects `limit(n)` first; only when the limit fills does a
+    * `count()` run for the total, so a table smaller than `n` costs one
+    * job and `totalRows` stays exact either way. */
+  def preview(df: DataFrame, n: Int = 10): Preview = {
+    val rows = df.limit(n).collect().toSeq.map(_.toSeq)
     Preview(
-      df.count(),
-      df.limit(n).collect().toSeq.map(_.toSeq),
+      if (rows.size < n) rows.size else df.count(),
+      rows,
       df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString))
+  }
 }

@@ -14,8 +14,10 @@ import scala.jdk.CollectionConverters._
   *
   * Scale note: all file reads are plain `spark.read` scans — Catalyst
   * handles partition discovery, predicate pushdown and column pruning;
-  * nothing here forces a driver-side materialization except the REST
-  * fetch, which is inherently a driver-side HTTP loop at reference scale.
+  * the parquet scan only reads its schema off one footer on the driver
+  * first. Nothing here forces a driver-side materialization except the
+  * REST fetch, which is inherently a driver-side HTTP loop at reference
+  * scale.
   */
 object Sources {
 
@@ -49,9 +51,14 @@ object Sources {
       case None    => spark.read.json(path)
     }
 
-  /** scan_parquet. */
+  /** scan_parquet — a parquet file or directory (partitioned or flat)
+    * read with its schema taken from the first footer on the driver
+    * ([[graft.util.ParquetSchema.read]]), so the scan starts no
+    * schema-inference job; partition columns are discovered as in a
+    * plain read. A missing or empty directory fails exactly as
+    * `spark.read.parquet` does. */
   def scanParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.util.ParquetSchema.read(spark, Seq(path))
 
   private val DataExts = Set("csv", "json", "jsonl", "parquet", "pq")
 

@@ -729,14 +729,15 @@ object Streaming {
     * rename [[landSingleFile]] always ended with, so arrival-time
     * semantics (file B lands only after run 1's checkpoint commits)
     * are untouched; only the up-front staging collapsed to one pass.
-    * Moved files get strictly increasing mtimes so the file source's
-    * arrival order stays the caller's move order even when two moves
-    * share a clock tick. An empty slice (no dir written) falls back
-    * to the old filtered single-file write, preserving the
-    * zero-row-file layout. */
-  private def stageEventHalves(
-      spark: SparkSession, dir: String, tmpBase: java.nio.file.Path)
-      : (Int, java.nio.file.Path, String) => Unit = {
+    * Every landed file, staged or fallback, gets a strictly increasing
+    * mtime from one counter over `clock`, so the file source's arrival
+    * order stays the caller's move order even when two moves share a
+    * clock tick or the clock steps back. An empty slice (no dir
+    * written) falls back to the old filtered single-file write,
+    * preserving the zero-row-file layout. */
+  private[graft] def stageEventHalves(
+      spark: SparkSession, dir: String, tmpBase: java.nio.file.Path,
+      clock: () => Long): (Int, java.nio.file.Path, String) => Unit = {
     import scala.jdk.CollectionConverters._
     val stage = tmpBase.resolve("halves_stage")
     graft.operators.Relational.table(spark, dir, "events")
@@ -748,6 +749,7 @@ object Streaming {
     var lastStamp = 0L
     (parity: Int, srcDir: java.nio.file.Path, name: String) => {
       val d = stage.resolve(s"__p=$parity")
+      val dst = srcDir.resolve(name)
       if (!Files.isDirectory(d))
         landSingleFile(eventsHalf(spark, dir, parity), tmpBase,
           srcDir, name)
@@ -758,11 +760,10 @@ object Streaming {
             .find(_.getFileName.toString.startsWith("part-"))
             .getOrElse(sys.error(s"no part file under $d"))
           finally listing.close()
-        val dst = srcDir.resolve(name)
         Files.move(part, dst)
-        lastStamp = math.max(System.currentTimeMillis(), lastStamp + 1)
-        dst.toFile.setLastModified(lastStamp)
       }
+      lastStamp = math.max(clock(), lastStamp + 1)
+      dst.toFile.setLastModified(lastStamp)
     }
   }
 
@@ -778,7 +779,8 @@ object Streaming {
           // resumed stream folds batches in arrival order.
           sum(round(col("value") * 100).cast("bigint")).as("sum_cents"))
     // Both halves staged in ONE job (r22); each "arrives" at its move.
-    val land = stageEventHalves(spark, dir, base)
+    val land = stageEventHalves(spark, dir, base,
+      () => System.currentTimeMillis())
     // Run 1: only the first half of events (split by event_id parity)
     // is present.
     land(0, srcDir, "a.parquet")
@@ -845,7 +847,8 @@ object Streaming {
       q.awaitTermination()
     }
     // Both halves staged in ONE job (r22); each "arrives" at its move.
-    val land = stageEventHalves(spark, dir, base)
+    val land = stageEventHalves(spark, dir, base,
+      () => System.currentTimeMillis())
     land(0, srcDir, "a.parquet")
     run()
     land(1, srcDir, "b.parquet")
@@ -1287,7 +1290,8 @@ object Streaming {
     val ckpt = base.resolve("ckpt").toString
     Files.createDirectories(srcDir)
     // Both halves staged in ONE job (r22); moves order their arrival.
-    val land = stageEventHalves(spark, dir, base)
+    val land = stageEventHalves(spark, dir, base,
+      () => System.currentTimeMillis())
     (0 until 2).foreach(i => land(i, srcDir, s"part$i.parquet"))
     val attempts = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
     val batchRows = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Long]()

@@ -116,6 +116,27 @@ class StreamingMultimodalSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want)
   }
 
+  test("staged and fallback landings get strictly increasing mtimes in move order") {
+    // An events table with no odd event_id: the odd slice stages no
+    // directory, so landing it takes the single-file fallback. The clock
+    // stands still, as when moves share a tick or the clock steps back.
+    val base = graft.util.Scratch.dir("graft_halves_mtime")
+    val fixture = base.resolve("fx")
+    Relational.table(spark, sfDir, "events").filter(col("event_id") % 2 === 0)
+      .write.parquet(fixture.resolve("events.parquet").toString)
+    val srcDir = base.resolve("in")
+    java.nio.file.Files.createDirectories(srcDir)
+    val land = Streaming.stageEventHalves(spark, fixture.toString, base,
+      () => 1767225600000L)
+    assert(!java.nio.file.Files.exists(base.resolve("halves_stage/__p=1")))
+    land(1, srcDir, "a.parquet")
+    land(0, srcDir, "b.parquet")
+    val stamps = Seq("a.parquet", "b.parquet")
+      .map(n => srcDir.resolve(n).toFile.lastModified())
+    assert(stamps == Seq(1767225600000L, 1767225600001L),
+      s"mtimes in move order: $stamps")
+  }
+
   test("stream incremental dedup: persisted index survives the restart") {
     // Force the bloom short-circuit to engage (the fixture index sits
     // far below the cost-based threshold) so run 2 pins BOTH split
