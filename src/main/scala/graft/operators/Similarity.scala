@@ -482,8 +482,9 @@ object Similarity {
     * recall/probe-cost frontier on the UNIFORMLY RANDOM testdata
     * embeddings — the worst case for any space partitioner, where
     * true neighbors sit barely closer than random and spread across
-    * cells. An r11 sweep ([[graft.RecallSweep]], nProbe ∈ 8..16 at
-    * sf0.001/0.01/0.1) measured recall@10 0.82/0.88/0.84 at nProbe=8,
+    * cells. An r11 sweep (a one-shot recall main, since retired;
+    * nProbe ∈ 8..16 at sf0.001/0.01/0.1) measured recall@10
+    * 0.82/0.88/0.84 at nProbe=8,
     * 0.96/0.94/0.94 at the old default 12, and 1.00/1.00/0.98 at 14,
     * with probe wall time FLAT in nProbe at these corpus sizes (fixed
     * plan overheads dominate), so the 14/12 ≈ 1.17× extra read buys

@@ -9,6 +9,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.GraftTables
+
 /** A versioned transaction log for a parquet table directory — the
   * commit protocol the lakehouse ops ([[SourceSinkQueries.mergeCow]]
   * COW, snapshot reads, vacuum) previously improvised from directory
@@ -787,16 +789,19 @@ object TxnLog {
         mSeqs0.rows).view.filterKeys(mSeqs0.files.toSet).toMap)
     // NDV-sketch fold, same discipline: the declared column set is
     // the UNION of parent's and caller's (a declaration persists
-    // until dropped); survivors inherit entries, caller entries win;
-    // a new file nobody sketched stays absent (= the column's NDV
-    // goes unknown until re-covered — never wrong).
+    // until its column is dropped: a manifest declaring columns keeps
+    // sketches of those alone); survivors inherit entries, caller
+    // entries win; a new file nobody sketched stays absent (= the
+    // column's NDV goes unknown until re-covered — never wrong).
     val mSeqs = {
       val pNdv = parentM.map(_.ndv)
         .getOrElse(Map.empty[String, Map[String, Seq[Long]]])
       if (pNdv.isEmpty && mSeqs1.ndv.isEmpty) mSeqs1
       else {
         val fSet = mSeqs1.files.toSet
-        mSeqs1.copy(ndv = (pNdv.keySet ++ mSeqs1.ndv.keySet).toSeq.sorted
+        val live = mSeqs1.columns.map(_.map(_.physical).toSet)
+        mSeqs1.copy(ndv = (pNdv.keySet ++ mSeqs1.ndv.keySet)
+          .filter(c => live.forall(_(c))).toSeq.sorted
           .map { c =>
             c -> (pNdv.getOrElse(c, Map.empty) ++
               mSeqs1.ndv.getOrElse(c, Map.empty))
@@ -1474,70 +1479,16 @@ object TxnLog {
       m.files ++ m.deletes.map(_.path)
     }.toSet
 
-  /** Pin one version and read exactly its files — with any pending
-    * merge-on-read equality deletes applied. */
+  /** Pin one version and read exactly its files through the
+    * connector's scan ([[graft.sources.GraftTables.scanFiles]]): its
+    * pending merge-on-read deletes applied, its declared columns under
+    * their PHYSICAL names, and files skipped by the manifest's stats
+    * when a filter on the result pushes down. */
   def readVersion(
       spark: SparkSession, table: Path, version: Long): DataFrame = {
     val m = readManifest(table, version)
     require(m.files.nonEmpty, s"version $version is an empty table")
-    morRead(spark, table, m)
-  }
-
-  /** Read rows of `m` (optionally restricted to `onlyFiles`) with
-    * pending equality deletes APPLIED: data files group by the delete
-    * files that apply to them (per-file seq strictly below the
-    * delete's), and each group anti-joins the broadcast union of its
-    * applicable delete keys — per delete KEY column, so deletes issued
-    * against different keys over time compose. No pending deletes → a
-    * plain parquet read. Work is O(selected files + delete files);
-    * delete sides are broadcast (compaction keeps them small). */
-  private[graft] def morRead(spark: SparkSession, table: Path,
-      m: Manifest, onlyFiles: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val files = onlyFiles.getOrElse(m.files)
-    def readAbs(fs: Seq[String]): DataFrame =
-      graft.util.ParquetSchema.read(spark,
-        fs.map(f => table.resolve(f).toString))
-    if (m.deletes.isEmpty) readAbs(files)
-    else {
-      val eq = m.deletes.filter(_.kind != "pos")
-      val posByFile = posDeletePositions(spark, table,
-        m.deletes.filter(_.kind == "pos"))
-      // Position deletes name exact (file, ordinal) pairs, so each
-      // named file reads individually with its parquet row index
-      // (`_metadata.row_index`, correct under any split) anti-joined
-      // against its broadcast dropped-ordinal set. Named-file count
-      // is bounded by pending deletes — compaction cadence, as ever.
-      def readPosAware(fs: Seq[String]): DataFrame = {
-        val (named, plain) = fs.partition(posByFile.contains)
-        import spark.implicits._
-        (plain.headOption.map(_ => readAbs(plain)).toSeq ++
-          named.map { f =>
-            readAbs(Seq(f))
-              .withColumn("__graft_pos", col("_metadata.row_index"))
-              .join(broadcast(posByFile(f).toSeq.toDF("__graft_pos")),
-                Seq("__graft_pos"), "left_anti")
-              .drop("__graft_pos")
-          }).reduce(_.unionByName(_))
-      }
-      val groups = files.groupBy(f =>
-        eq.filter(d => m.seqs.getOrElse(f, -1L) < d.seq))
-      val merged = groups.toSeq.sortBy(_._2.head).map { case (dels, fs) =>
-        dels.groupBy(_.key).toSeq.sortBy(_._1)
-          .foldLeft(readPosAware(fs)) { case (acc, (k, ds)) =>
-            acc.join(
-              broadcast(readAbs(ds.map(_.path)).select(col(k)).distinct()),
-              Seq(k), "left_anti")
-          }
-      }.reduce(_.unionByName(_))
-      // The using-joins above move each join key to the front, so the
-      // folded column order varies with WHICH delete keys are
-      // pending. Restore the files' own schema order: callers stage
-      // rewrites from this frame (materialize/compact/merge), and a
-      // pending delete must never shuffle the physical column order
-      // of the files it causes to be rewritten.
-      merged.select(readAbs(files).columns.map(col(_)).toSeq: _*)
-    }
+    GraftTables.scanFiles(spark, table, m, m.files)
   }
 
   /** MERGE-ON-READ delete — the Iceberg v2 equality-delete-file idea
@@ -1547,13 +1498,14 @@ object TxnLog {
     * rewrites ZERO data files — against copy-on-write's amplification
     * of a whole file per touched row, the difference between a delete
     * and a compaction at 100 TB. Readers apply pending deletes at scan
-    * time ([[morRead]]; the graft connector applies them inside its
-    * DSv2 scan), sequence-scoped: the delete applies only to files
-    * whose [[Manifest.seqs]] entry is strictly below the delete's
-    * commit version, so later appends may legitimately re-insert a
-    * deleted key. NULL keys never match an equality delete and are
-    * ignored. [[materializeDeletes]] / [[compact]] repay the read-time
-    * debt. */
+    * time — every read of a version, the log's own rewrites included,
+    * goes through the connector's DSv2 scan
+    * ([[graft.sources.GraftTables.scanFiles]]) — sequence-scoped: the
+    * delete applies only to files whose [[Manifest.seqs]] entry is
+    * strictly below the delete's commit version, so later appends may
+    * legitimately re-insert a deleted key. NULL keys never match an
+    * equality delete and are ignored. [[materializeDeletes]] /
+    * [[compact]] repay the read-time debt. */
   def deleteByKeyMor(spark: SparkSession, table: Path,
       keys: DataFrame, key: String, subdir: String): Committed = {
     import org.apache.spark.sql.functions.col
@@ -1631,6 +1583,28 @@ object TxnLog {
       .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
   }
 
+  /** Write (`file_path`, `pos`) rows as position-delete parquet under
+    * `subdir` and return the table-relative paths. Both fields are
+    * written OPTIONAL whatever the input's nullability — the one shape
+    * the delta row-level writer also produces, and the one
+    * [[posDeleteNamedFiles]]' projection (`optional binary file_path`)
+    * reads: a `required` field fails it. */
+  private[graft] def writePosDeletes(positions: DataFrame, table: Path,
+      subdir: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.KnownNullable
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    def optional(c: org.apache.spark.sql.Column) =
+      ColumnBridge.column(KnownNullable(ColumnBridge.expression(c)))
+    positions
+      .select(optional(col("file_path")).as("file_path"),
+        optional(col("pos").cast("long")).as("pos"))
+      .na.drop().distinct()
+      .sortWithinPartitions("file_path", "pos").coalesce(1)
+      .write.parquet(table.resolve(subdir).toString)
+    parquetsUnder(table, subdir)
+  }
+
   /** MERGE-ON-READ delete by POSITION — the Iceberg v2 position-delete
     * / Delta deletion-vector idea: `positions` carries (`file_path`,
     * `pos`) rows naming exact parquet row ordinals inside existing
@@ -1644,19 +1618,13 @@ object TxnLog {
     * no longer exists). */
   def deleteByPosMor(spark: SparkSession, table: Path,
       positions: DataFrame, subdir: String): Committed = {
-    import org.apache.spark.sql.functions.col
     require(positions.columns.toSet == Set("file_path", "pos"),
       s"deleteByPosMor expects (file_path, pos), " +
         s"got ${positions.columns.mkString(",")}")
     val t0 = tip(table)
     require(t0.version >= 0L,
       s"deleteByPosMor needs an existing table at $table")
-    positions
-      .select(col("file_path"), col("pos").cast("long").as("pos"))
-      .na.drop().distinct()
-      .sortWithinPartitions("file_path", "pos").coalesce(1)
-      .write.parquet(table.resolve(subdir).toString)
-    val written = parquetsUnder(table, subdir)
+    val written = writePosDeletes(positions, table, subdir)
     val named = written
       .flatMap(p => posDeleteNamedFiles(table,
         DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
@@ -1759,7 +1727,7 @@ object TxnLog {
     // stays fully stats-covered with no zero-row files to drop.
     val nOut = rewriteFanOut(table, t0, affected, targetFileBytes)
     val staged = graft.sources.StagedWrite.stage(
-      morRead(spark, table, t0, Some(affected)).coalesce(nOut),
+      GraftTables.scanFiles(spark, table, t0, affected).coalesce(nOut),
       table, subdir, t0)
     commitRetryWith(table, t => {
       // Like a CoW merge, this rewrite does not commute: it replaced
@@ -1846,12 +1814,12 @@ object TxnLog {
         if (affected.isEmpty)
           batch.filter(col("op") =!= "delete").drop("op")
         else
-          // morRead applies any PENDING equality deletes to the
-          // affected files before merging — the rewrite's new files
-          // get a fresh seq, so those deletes stop applying to them
-          // exactly when their effect is baked in. Untouched files
-          // keep the delete list (carried below) by seq scoping.
-          morRead(spark, table, tip, Some(affected.toSeq.sorted))
+          // The scan applies any PENDING deletes to the affected
+          // files before merging — the rewrite's new files get a
+          // fresh seq, so those deletes stop applying to them exactly
+          // when their effect is baked in. Untouched files keep the
+          // delete list (carried below) by seq scoping.
+          GraftTables.scanFiles(spark, table, tip, affected.toSeq.sorted)
             .as("t")
             .join(batch.as("s"), Seq(key), "full_outer")
             .filter(col("s.op").isNull || col("s.op") =!= "delete")
@@ -2021,9 +1989,10 @@ object TxnLog {
     })
 
   /** DROP COLUMN as a manifest-only commit: the ColumnDef vanishes
-    * from the declared schema — the bytes stay in the files (pinned
-    * pre-drop versions still read them), but no later reader requests
-    * the physical column. Re-ADDing the same logical name mints a NEW
+    * from the declared schema, with the column's stats declarations
+    * (stats key, colStats, NDV sketches) — the bytes stay in the files
+    * (pinned pre-drop versions still read them), but no later reader
+    * requests the physical column and no rewrite carries it. Re-ADDing the same logical name mints a NEW
     * id + physical, so the dropped bytes are never resurrected — the
     * re-added column reads NULL everywhere until written. Refused when
     * a CHECK constraint still references the column. */
@@ -2044,8 +2013,14 @@ object TxnLog {
       require(!t.deletes.exists(_.key == phys),
         s"column '$name' keys pending equality delete(s) on $table — " +
           "run materializeDeletes first")
+      // Its stats declarations go with it: no later write stages the
+      // physical column, so none could bound or sketch it. (The
+      // commit's NDV fold drops its sketches: the column is gone.)
       t.copy(action = "schema",
         columns = Some(cols.filterNot(_.name == name)),
+        statsKey = t.statsKey.filterNot(_ == phys),
+        stats = if (t.statsKey.contains(phys)) Map.empty else t.stats,
+        colStats = t.colStats - phys,
         txn = None, ts = 0L)
     })
 
@@ -2221,7 +2196,8 @@ object TxnLog {
     * spans RENAME commits.
     *
     * Merge-on-read aware, two ways. (1) Every side is read through
-    * [[morRead]] under ITS OWN manifest, so rows a pending equality
+    * the connector's scan under ITS OWN manifest
+    * ([[graft.sources.GraftTables.scanFiles]]), so rows a pending
     * delete already removed never appear as pre-images — a
     * materialize commit (which rewrites affected files without
     * changing a visible row) correctly nets to ZERO change rows
@@ -2245,7 +2221,7 @@ object TxnLog {
       case None => df
     }
     def readFiles(fs: Seq[String], m: Manifest): DataFrame =
-      logical(morRead(spark, table, m, Some(fs)), m)
+      logical(GraftTables.scanFiles(spark, table, m, fs), m)
     // Row-by-row classification of a (pre, post) rewrite pair on the
     // unique non-NULL `key`: carried rows cancel, the rest emit as
     // insert / delete / update_preimage+postimage — shared by the
@@ -2310,8 +2286,8 @@ object TxnLog {
           // restore (a special event, never the steady state). Every
           // other action is barred from this shape at
           // [[tryCommitManifest]]'s commit-shape invariant.
-          val pre = logical(morRead(spark, table, prev), prev)
-          val post = logical(morRead(spark, table, cur), cur)
+          val pre = readFiles(prev.files, prev)
+          val post = readFiles(cur.files, cur)
           // Names AND types: a restore across a same-name type change
           // (widened column) passing a name-only guard would hand
           // exceptAll/unionByName mismatched types and fail opaquely
@@ -2342,13 +2318,10 @@ object TxnLog {
               .flatMap(d => posDeleteNamedFiles(table, d)).toSet
             cur.files.filter(n)
           }
-          val pre = logical(
-            if (named.isEmpty) {
-              val d = morRead(spark, table, cur,
-                Some(cur.files.take(1)))
-              d.filter(lit(false)) // empty, correct schema
-            } else morRead(spark, table, prev, Some(named)).exceptAll(
-              morRead(spark, table, cur, Some(named))), cur)
+          val pre =
+            if (named.isEmpty) // empty, correct schema
+              readFiles(cur.files.take(1), cur).filter(lit(false))
+            else readFiles(named, prev).exceptAll(readFiles(named, cur))
           val post =
             if (added.isEmpty) pre.filter(lit(false))
             else readFiles(added, cur)
@@ -2397,16 +2370,17 @@ object TxnLog {
               .flatMap(d => posDeleteNamedFiles(table, d)).toSet
             val named = cur.files.filter(namedSet)
             if (named.isEmpty) None
-            else Some(morRead(spark, table, prev, Some(named))
-              .exceptAll(morRead(spark, table, prevPos, Some(named))))
+            else Some(GraftTables.scanFiles(spark, table, prev, named)
+              .exceptAll(
+                GraftTables.scanFiles(spark, table, prevPos, named)))
           }
           // Equality deletes: rows visible at v-1 (prev deletes plus
           // this commit's pos deletes applied) in the files the
           // deletes scope, whose key any delete names. The delete
-          // files carry the PHYSICAL key column, matching the raw
-          // parquet read inside morRead — rename to logical only
-          // after the join. A commit may carry MANY eq files (one
-          // per parallel writer task), possibly keyed on SEVERAL
+          // files carry the PHYSICAL key column, matching the scan's
+          // physical names — rename to logical only after the join.
+          // A commit may carry MANY eq files (one per parallel
+          // writer task), possibly keyed on SEVERAL
           // different columns (r19 — the invariant that refused the
           // mixed-key shape is lifted): band the scoped files by
           // WHICH deletes apply (scopes nest by seq, so bands are
@@ -2427,7 +2401,8 @@ object TxnLog {
                 val scoped = entries.map(_._1)
                 val byKey = entries.head._2.groupBy(_.key).toSeq
                   .sortBy(_._1)
-                val base = morRead(spark, table, prevPos, Some(scoped))
+                val base = GraftTables.scanFiles(spark, table, prevPos,
+                  scoped)
                 val marked = byKey.zipWithIndex
                   .foldLeft(base) { case (acc, ((k, ds), i)) =>
                     val keys = graft.util.ParquetSchema.read(spark,
@@ -2496,7 +2471,7 @@ object TxnLog {
     // Staged (with its stats) outside the commit closure, so retries
     // recompute nothing.
     val staged = graft.sources.StagedWrite.stage(
-      morRead(spark, table, t0, Some(small)).coalesce(nOut),
+      GraftTables.scanFiles(spark, table, t0, small).coalesce(nOut),
       table, subdir, t0)
     commitRetryWith(table, t => {
       // A pack rewrite does not commute (same discipline as

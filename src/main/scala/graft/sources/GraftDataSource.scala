@@ -237,9 +237,8 @@ object GraftTables {
   /** Resolve `path` (+ optional `versionAsOf`) to a pinned snapshot.
     * Schema comes from the manifest's declared columns when present
     * (metadata-only), else from the files' parquet footers with
-    * schema merging (so an additive-evolution tip unions old and new
-    * file schemas, exactly like [[TxnLog.readVersion]] with
-    * mergeSchema).
+    * schema merging — one inference job per version, cached — so an
+    * additive-evolution tip unions old and new file schemas.
     *
     * `fromVersion = f` requests an INCREMENTAL read: exactly the rows
     * appended after version f (up to `versionAsOf`, else the tip),
@@ -336,11 +335,8 @@ object GraftTables {
         // parquet reader widens narrower physical types (int32 →
         // bigint etc.) during the vectorized read, which is what
         // makes type widening a manifest-only commit.
-        val logical = StructType.fromDDL(
-          cols.map(c => s"`${c.name}` ${c.typ}").mkString(", "))
-        val physical = StructType.fromDDL(
-          cols.map(c => s"`${c.physical}` ${c.typ}").mkString(", "))
-        GraftSnapshot(root, m, logical, physical, pinned)
+        GraftSnapshot(root, m, declaredSchema(cols, _.name),
+          declaredSchema(cols, _.physical), pinned)
       case None =>
         require(m.files.nonEmpty, s"version $version of $root is empty " +
           "and declares no schema — commit columns to read it")
@@ -348,6 +344,41 @@ object GraftTables {
           options.get("fromversion"), m.files)
         GraftSnapshot(root, m, inferred, inferred, pinned)
     }
+  }
+
+  /** The declared columns as a schema, each named by `name`. */
+  private def declaredSchema(cols: Seq[TxnLog.ColumnDef],
+      name: TxnLog.ColumnDef => String): StructType =
+    StructType.fromDDL(
+      cols.map(c => s"`${name(c)}` ${c.typ}").mkString(", "))
+
+  /** The rows of `files` under manifest `m`, read through the
+    * connector's own scan: the one read path that applies `m`'s
+    * pending equality and position deletes ([[GraftMor]]) and skips
+    * files by the manifest's stats. Columns keep their PHYSICAL names
+    * in declared order (the first file's footer schema when `m`
+    * declares none) — the shape the log's rewrites stage and the
+    * change feed renames under each side's own manifest. The relation
+    * is built straight from a pinned snapshot: no option string is
+    * parsed and no schema-inference job runs. Row provenance
+    * ([[GraftMor.MetaFileCol]], [[GraftMor.MetaPosCol]]) selects as on
+    * any connector read. */
+  private[graft] def scanFiles(spark: SparkSession, root: Path,
+      m: TxnLog.Manifest, files: Seq[String]): DataFrame = {
+    val physical = m.columns match {
+      case Some(cols) => declaredSchema(cols, _.physical)
+      case None => files.headOption
+        .flatMap(f => graft.util.ParquetSchema.footerSchema(spark,
+          root.resolve(f).toString))
+        .getOrElse(sys.error(s"no schema for v${m.version} of $root: " +
+          "it declares no columns and the first read file's footer " +
+          "is unreadable"))
+    }
+    val snap = GraftSnapshot(root, m.copy(files = files), physical,
+      physical, pinned = true)
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new GraftTable(snap), None, None))
   }
 
   // A committed version is immutable (manifests are put-if-absent,
@@ -614,34 +645,15 @@ object GraftTables {
       val tip = TxnLog.readManifest(root, tipVersion)
       val affected = GraftPruning.prune(tip, exprs)
       if (affected.isEmpty) return // no file can match: metadata no-op
-      // Raw read on purpose: a row a pending delete already dropped
-      // that matches the predicate just gets named again — dropping a
-      // dropped row is a no-op, and it keeps this pass one scan of
-      // O(affected bytes).
-      val hits = graft.util.ParquetSchema.read(spark,
-          affected.map(f => root.resolve(f).toString))
+      // The affected files through the connector scan, each matching
+      // row named by its provenance (table-relative file, ordinal).
+      val positions = scanFiles(spark, root, tip, affected)
         .filter(pred.eqNullSafe(lit(true)))
-        .select(col("_metadata.file_path").as("__fp"),
-          col("_metadata.row_index").as("pos"))
-      // Manifest entries resolve to the absolute paths the scan
-      // reports (URI-normalized on the driver — no string-format
-      // guessing), mapping each hit back to its manifest-relative
-      // file name. O(affected files) driver memory.
-      val relByAbs = manifestRelByReportedAbs(root, affected)
-      val session = spark
-      import session.implicits._
-      val fpMap = hits.select("__fp").distinct()
-        .collect().map(_.getString(0)).toSeq.map { a =>
-          a -> relByAbs.getOrElse(normalizeReportedPath(a), sys.error(
-            s"DELETE scan reported $a, not in the planned file set"))
-        }
-      val positions = hits.join(
-        org.apache.spark.sql.functions.broadcast(
-          fpMap.toDF("__fp", "file_path")), Seq("__fp"))
-        .select(col("file_path"), col("pos"))
+        .select(col(GraftMor.MetaFileCol).as("file_path"),
+          col(GraftMor.MetaPosCol).as("pos"))
       // An empty hit set after the scan (stats pruned wider than the
       // rows): metadata no-op, like the CoW path's empty prune.
-      if (fpMap.isEmpty) return
+      if (positions.isEmpty) return
       TxnLog.deleteByPosMor(spark, root, positions,
         s"morpos${System.currentTimeMillis()}-" +
           s"${stagingCounter.incrementAndGet()}")
@@ -654,12 +666,11 @@ object GraftTables {
       val tip = TxnLog.readManifest(root, tipVersion)
       val affected = GraftPruning.prune(tip, exprs).toSet
       if (affected.isEmpty) return // no file can match: metadata no-op
-      // morRead applies any PENDING equality deletes to the affected
-      // files before the rewrite — a raw read would bake deleted rows
-      // into fresh-seq files (silent resurrection). The list is
-      // carried below; untouched files stay scoped by sequence.
-      val keep = TxnLog
-        .morRead(spark, root, tip, Some(affected.toSeq.sorted))
+      // The scan applies any PENDING deletes to the affected files
+      // before the rewrite — a raw read would bake deleted rows into
+      // fresh-seq files (silent resurrection). The list is carried
+      // below; untouched files stay scoped by sequence.
+      val keep = scanFiles(spark, root, tip, affected.toSeq.sorted)
         .filter(!pred.eqNullSafe(lit(true)))
       val nOut = TxnLog.rewriteFanOut(root, tip, affected, targetFileBytes)
       val out = if (nOut <= 1) keep.coalesce(1) else keep.repartition(nOut)
@@ -686,27 +697,6 @@ object GraftTables {
     sys.error(s"delete lost $maxAttempts races on $root")
   }
 
-  /** A `_metadata.file_path` string the scan reported, normalized to
-    * the java.nio absolute-path form manifest entries resolve to —
-    * no string-format guessing (Hadoop renders single-slash
-    * authority-less URIs, `file:/x`; java.nio wants triple-slash). */
-  private def normalizeReportedPath(reported: String): String = {
-    val p =
-      if (reported.startsWith("file:"))
-        java.nio.file.Paths.get(java.net.URI.create(
-          if (reported.startsWith("file:///")) reported
-          else "file://" + reported.substring(5)))
-      else java.nio.file.Paths.get(reported)
-    p.toAbsolutePath.normalize.toString
-  }
-
-  /** normalized-absolute → manifest-relative for a planned file set. */
-  private def manifestRelByReportedAbs(
-      root: Path, files: Seq[String]): Map[String, String] = {
-    val rootAbs = root.toAbsolutePath.normalize
-    files.map(e => rootAbs.resolve(e).normalize.toString -> e).toMap
-  }
-
   /** MERGE-ON-READ UPDATE (the Iceberg v2 `write.update.mode =
     * merge-on-read` semantics): rows matching `where` are REWRITTEN as
     * appended files with the `set` assignments applied, and their old
@@ -727,7 +717,7 @@ object GraftTables {
     * concurrent commit fails the attempt loudly (replan and retry). */
   def updateMor(spark: SparkSession, root: Path,
       where: String, set: Map[String, String]): TxnLog.Committed = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max => fmax}
+    import org.apache.spark.sql.functions.{col, expr, lit}
     require(set.nonEmpty, "updateMor needs at least one assignment")
     val snap = resolve(Map("path" -> root.toString))
     val t0 = snap.manifest
@@ -735,8 +725,8 @@ object GraftTables {
     set.keys.foreach(c => require(logicalCols.contains(c),
       s"updateMor sets unknown column '$c' " +
         s"(table has ${logicalCols.mkString(",")})"))
-    val helperCols = Seq("__fp", "__pos", "__rel", "__seq")
-    helperCols.foreach(h => require(!logicalCols.contains(h),
+    val provenance = Seq(GraftMor.MetaFileCol, GraftMor.MetaPosCol)
+    provenance.foreach(h => require(!logicalCols.contains(h),
       s"updateMor reserves column name '$h'"))
     val whereExpr = spark.sessionState.sqlParser.parseExpression(where)
     val physWhere =
@@ -748,67 +738,24 @@ object GraftTables {
       }
     val affected = GraftPruning.prune(t0, Seq(physWhere))
     if (affected.isEmpty) return TxnLog.Committed(t0.version, 0)
-    // Provenance read: raw physical bytes plus (file, ordinal), the
-    // rel name and per-file sequence joined in via a broadcast map —
-    // the MoR-aware scan WITH provenance that morRead (which loses
-    // metadata columns at its joins) cannot provide.
-    val raw = graft.util.ParquetSchema.read(spark,
-        affected.map(f => root.resolve(f).toString))
-      .withColumn("__fp", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val relByAbs = manifestRelByReportedAbs(root, affected)
-    val session = spark
-    import session.implicits._
-    val fpRows = raw.select("__fp").distinct()
-      .collect().map(_.getString(0)).toSeq.map { a =>
-        val rel = relByAbs.getOrElse(normalizeReportedPath(a), sys.error(
-          s"UPDATE scan reported $a, not in the planned file set"))
-        (a, rel, t0.seqs.getOrElse(rel, -1L))
-      }
-    var df = raw
-      .join(broadcast(fpRows.toDF("__fp", "__rel", "__seq")), Seq("__fp"))
-      .drop("__fp")
-    // Pending POSITION deletes: drop the named (file, ordinal) pairs.
-    val posByFile = TxnLog.posDeletePositions(spark, root,
-      t0.deletes.filter(_.kind == "pos"))
-    if (posByFile.nonEmpty)
-      df = df.join(broadcast(posByFile.toSeq
-          .flatMap { case (f, arr) => arr.map(p => (f, p)) }
-          .toDF("__rel", "__pos")),
-        Seq("__rel", "__pos"), "left_anti")
-    // Pending EQUALITY deletes, sequence-scoped per row's file: for
-    // key value v, deleted iff fileSeq < max(seq of deletes naming v).
-    t0.deletes.filter(_.kind != "pos").groupBy(_.key).toSeq.sortBy(_._1)
-      .foreach { case (k, ds) =>
-        val keySeqs = ds.map(d => graft.util.ParquetSchema.read(
-              spark, Seq(root.resolve(d.path).toString))
-            .select(col(k).cast("long").as("__k"))
-            .na.drop().distinct()
-            .withColumn("__mseq", lit(d.seq)))
-          .reduce(_.unionByName(_))
-          .groupBy("__k").agg(fmax(col("__mseq")).as("__mseq"))
-        df = df.join(broadcast(keySeqs),
-          df(k).cast("long") === keySeqs("__k") &&
-            df("__seq") < keySeqs("__mseq"),
-          "left_anti")
-      }
-    // Survivors under LOGICAL names; match the predicate (pred IS
-    // TRUE, SQL UPDATE semantics). Persisted: read twice below.
-    val logicalDf = df.select(
-      snap.physicalSchema.fieldNames.toSeq.map(p =>
-        col(p).as(snap.logicalOf(p))) ++
-        Seq(col("__rel"), col("__pos")): _*)
-    val matched = logicalDf.filter(expr(where) <=> lit(true)).persist()
+    // The affected files through the connector scan with each row's
+    // provenance (table-relative file, parquet ordinal); the scan
+    // applies pending deletes of both forms. Survivors under LOGICAL
+    // names; match the predicate (pred IS TRUE, SQL UPDATE
+    // semantics). Persisted: read twice below.
+    val matched = scanFiles(spark, root, t0, affected)
+      .select(snap.physicalSchema.fieldNames.toSeq.map(p =>
+        col(p).as(snap.logicalOf(p))) ++ provenance.map(col): _*)
+      .filter(expr(where) <=> lit(true)).persist()
     try {
       if (matched.isEmpty) return TxnLog.Committed(t0.version, 0)
       val stamp = s"upd${System.currentTimeMillis()}-" +
         s"${stagingCounter.incrementAndGet()}"
       val posSub = s"$stamp-pos"
       val dataSub = s"$stamp-data"
-      matched.select(col("__rel").as("file_path"), col("__pos").as("pos"))
-        .sortWithinPartitions("file_path", "pos").coalesce(1)
-        .write.parquet(root.resolve(posSub).toString)
-      val posWritten = TxnLog.parquetsUnder(root, posSub)
+      val posWritten = TxnLog.writePosDeletes(
+        matched.select(col(GraftMor.MetaFileCol).as("file_path"),
+          col(GraftMor.MetaPosCol).as("pos")), root, posSub)
       // The rewritten rows, assignments applied, physical shape.
       // Write tasks report (file, rows) back — no count re-scan, no
       // empty files written — and fold the rewritten files' stats as

@@ -12,7 +12,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * `DeleteFilter` in the reference implementations). Putting the
   * filter INSIDE the scan is what makes every consumer correct with no
   * plan rewrite: SQL, time travel, catalog reads and DataFrame reads
-  * all pass through here.
+  * all pass through here, and so do the transaction log's own reads
+  * ([[GraftTables.scanFiles]]) — `readVersion`, the inputs of its
+  * rewrites (merge, compact, compactSmall, materializeDeletes), its
+  * change feed — and the connector's DELETE and `updateMor`. This is
+  * the only code that applies pending deletes.
   *
   * Shape: the snapshot's data files group by WHICH deletes apply to
   * them (equality: per-file sequence strictly below the delete's —

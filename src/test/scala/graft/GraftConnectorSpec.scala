@@ -73,20 +73,27 @@ class GraftConnectorSpec extends AnyFunSuite with SparkTestBase {
 
   test("a key-filtered read opens ONLY stats-qualifying files") {
     val tbl = quartileTable()
-    val df = GraftTables.read(spark, tbl)
-      .filter($"id" >= 30L && $"id" <= 40L)
-    val opened = plannedFiles(df)
-    assert(opened.size == 1 && opened.head.contains("/q1/"),
-      s"[30,40] lives only in quartile file q1 (26..50); opened $opened")
-    assert(df.select(sum($"v")).head.getLong(0) == (30L to 40L).map(_ * 10).sum)
-    // Cross-quartile range: exactly the two covering files.
-    val df2 = GraftTables.read(spark, tbl)
-      .filter($"id".between(20L, 30L))
-    val opened2 = plannedFiles(df2)
-    assert(opened2.size == 2 &&
-      opened2.exists(_.contains("/q0/")) && opened2.exists(_.contains("/q1/")),
-      s"[20,30] spans q0+q1; opened $opened2")
-    assert(df2.count() == 11L)
+    val v = TxnLog.tip(tbl).version
+    // The connector read and the log's own version read plan alike.
+    Seq[(String, () => DataFrame)](
+      "connector" -> (() => GraftTables.read(spark, tbl)),
+      "readVersion" -> (() => TxnLog.readVersion(spark, tbl, v))
+    ).foreach { case (via, read) =>
+      val df = read().filter($"id" >= 30L && $"id" <= 40L)
+      val opened = plannedFiles(df)
+      assert(opened.size == 1 && opened.head.contains("/q1/"),
+        s"$via: [30,40] lives only in quartile file q1 (26..50); " +
+          s"opened $opened")
+      assert(df.select(sum($"v")).head.getLong(0) ==
+        (30L to 40L).map(_ * 10).sum)
+      // Cross-quartile range: exactly the two covering files.
+      val df2 = read().filter($"id".between(20L, 30L))
+      val opened2 = plannedFiles(df2)
+      assert(opened2.size == 2 && opened2.exists(_.contains("/q0/")) &&
+        opened2.exists(_.contains("/q1/")),
+        s"$via: [20,30] spans q0+q1; opened $opened2")
+      assert(df2.count() == 11L)
+    }
   }
 
   test("a key predicate beyond every file's range opens nothing") {

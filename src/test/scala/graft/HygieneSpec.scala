@@ -69,20 +69,6 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
           "2-3x faster than 32 at bench volume); a cluster deployment " +
           "passes a cores-proportional value through the same " +
           "parameter (runAvailableNow scaladoc states the derivation)"),
-      ("RecallSweep.scala", "shuffle.partitions=8") ->
-        "diagnostic main (ANN recall sweep), not a driver query path",
-      ("PlansR21.scala", "shuffle.partitions=8") ->
-        ("r21 optimization-evidence main (plans/r21 captures): fixed " +
-          "width keeps the committed plan files host-independent; " +
-          "never a query path"),
-      ("PlansR22.scala", "shuffle.partitions=8") ->
-        ("r22 optimization-evidence main (plans/r22 captures): fixed " +
-          "width keeps the committed plan/trace files " +
-          "host-independent; never a query path"),
-      ("StreamProfile.scala", "conf.set(spark.sql.shuffle.partitions)") ->
-        ("r21 measurement main: A/Bs the state-store partition count " +
-          "behind the streaming lifecycle floor (set/restore scoped " +
-          "per probe run); diagnostic only, never a query path"),
       ("Plans.scala", "shuffle.partitions=8") ->
         ("plan-snapshot main: fixed width keeps PLANS.txt diffs " +
           "host-independent; never a query path"),
@@ -172,6 +158,38 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
       "stage through StagedWrite.stage (or fold DSv2 task reports " +
         "with StagedWrite.Staged.of) instead of calling the task-side " +
         s"write or the assembler directly: ${calls.sorted}")
+  }
+
+  test("pending deletes are applied in ONE place: the connector scan") {
+    // Every read of a table version — the log's rewrites, its change
+    // feed, the connector's DELETE and UPDATE — goes through the
+    // connector scan, whose GraftMor planner applies pending equality
+    // and position deletes. A second implementation (DataFrame
+    // anti-joins against the delete files) once disagreed with it on
+    // the schema it read, so the position-delete map may be loaded
+    // only by GraftMor, and the log and the connector build no
+    // anti-joins of their own.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
+    def code(f: java.nio.file.Path): Seq[String] =
+      new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+        .map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+          l.startsWith("//"))
+        .toSeq
+    val callers = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .filter(f => code(f).exists(l =>
+        """(?<!def )\bposDeletePositions\s*\(""".r.findFirstIn(l).isDefined))
+      .map(root.relativize(_).toString).sorted
+    assert(callers == Seq("sources/GraftMor.scala"),
+      s"position deletes loaded outside the connector scan: $callers")
+    Seq("operators/TxnLog.scala", "sources/GraftDataSource.scala")
+      .foreach { rel =>
+        val hits = code(root.resolve(rel)).filter(_.contains("\"left_anti\""))
+        assert(hits.isEmpty, s"$rel applies deletes itself: $hits")
+      }
   }
 
   test("persist-heavy queries do not accumulate persisted RDD blocks") {

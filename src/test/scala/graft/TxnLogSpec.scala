@@ -674,6 +674,82 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("maintenance rewrites read the declared schema: compact, " +
+      "compactSmall and materializeDeletes commit after ADD COLUMN") {
+    import spark.implicits._
+    // The pre-ADD file lacks the added column's bytes: a rewrite whose
+    // input schema came from that file's footer would lose the added
+    // values and refuse the column's declared NDV sketch.
+    val cases: Seq[(String, Path => TxnLog.Committed)] = Seq(
+      "compact" -> (t => TxnLog.compact(spark, t, "c1")),
+      "optimize" -> (t => TxnLog.compactSmall(spark, t, "o1",
+        minFileBytes = Long.MaxValue / 4)),
+      "materialize" -> (t => TxnLog.materializeDeletes(spark, t, "mz")))
+    cases.foreach { case (action, rewrite) =>
+      val t = freshTable()
+      graft.sources.GraftTables.createFrom(t,
+        Seq((1L, 10L)).toDF("id", "v"))
+      TxnLog.addColumn(t, "w", "bigint")
+      Seq((2L, 20L, 200L)).toDF("id", "v", "w")
+        .write.format("graft").mode("append").save(t.toString)
+      // A pending delete naming no row: materialize has files to fold.
+      TxnLog.deleteByKeyMor(spark, t, Seq(99L).toDF("id"), "id", "d1")
+      val t0 = TxnLog.tip(t)
+      val w = t0.columns.get.find(_.name == "w").get.physical
+      val expected = Set((1L, 10L, None), (2L, 20L, Some(200L)))
+      def versionRows(v: Long) = {
+        val df = TxnLog.readVersion(spark, t, v)
+        assert(df.columns.toSeq == Seq("id", "v", w),
+          s"$action: readVersion($v) columns ${df.columns.toSeq}")
+        df.as[(Long, Long, Option[Long])].collect().toSet
+      }
+      assert(versionRows(t0.version) == expected, s"$action: before")
+      val c = rewrite(t)
+      val t1 = TxnLog.tip(t)
+      assert(c.version == t0.version + 1 && t1.action == action, t1)
+      assert(graft.sources.GraftTables.read(spark, t)
+        .as[(Long, Long, Option[Long])].collect().toSet == expected,
+        s"$action: connector read after the rewrite")
+      assert(versionRows(t1.version) == expected, s"$action: after")
+      // A dropped column leaves the version read; its bytes stay.
+      TxnLog.dropColumn(t, "v")
+      val dropped = TxnLog.readVersion(spark, t, t1.version + 1)
+      assert(dropped.columns.toSeq == Seq("id", w), s"$action: drop")
+      assert(dropped.as[(Long, Option[Long])].collect().toSet ==
+        Set((1L, None), (2L, Some(200L))), s"$action: rows after drop")
+    }
+  }
+
+  test("DROP COLUMN takes the column's stats declarations with it: " +
+      "appends, merges and rewrites after it commit") {
+    import spark.implicits._
+    val t = freshTable()
+    graft.sources.GraftTables.createFrom(t,
+      Seq((1L, 10L, 100L)).toDF("id", "v", "x"))
+    TxnLog.mergeCowByKey(spark, t,
+      Seq((3L, 30L, 300L, "upsert")).toDF("id", "v", "x", "op"), "id", "m0")
+    TxnLog.commitRetryWith(t, m => m.copy(action = "stats",
+      colStats = Map("x" -> m.files.map(_ -> (100L, 300L)).toMap)))
+    val before = TxnLog.tip(t)
+    assert(before.ndv.contains("x") && before.colStats.contains("x") &&
+      before.statsKey.contains("id"), s"fixture: $before")
+    TxnLog.dropColumn(t, "x")
+    val dropped = TxnLog.tip(t)
+    assert(!dropped.ndv.contains("x") && dropped.colStats.isEmpty &&
+      dropped.statsKey.contains("id") && dropped.stats == before.stats,
+      s"declarations after the drop: $dropped")
+    Seq((2L, 20L)).toDF("id", "v")
+      .write.format("graft").mode("append").save(t.toString)
+    TxnLog.mergeCowByKey(spark, t,
+      Seq((1L, 11L, "upsert")).toDF("id", "v", "op"), "id", "m1")
+    TxnLog.compact(spark, t, "c1")
+    assert(TxnLog.tip(t).action == "compact")
+    val rows = TxnLog.readVersion(spark, t, TxnLog.tip(t).version)
+    assert(rows.columns.toSeq == Seq("id", "v"))
+    assert(rows.as[(Long, Long)].collect().toSet ==
+      Set((1L, 11L), (2L, 20L), (3L, 30L)))
+  }
+
   test("deleteByPosMor rewrites zero data files; reads drop the exact " +
       "ordinals; materialize folds; the resurrect guard holds") {
     val t = freshTable()
