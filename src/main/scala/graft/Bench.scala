@@ -12,7 +12,7 @@ object Bench {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // Same timezone as Verify/Smoke/Plans: the benchmark must time the
+      // Same timezone as Verify/Smoke: the benchmark must time the
       // exact plans the correctness gate verified — on a non-UTC host,
       // hour()/unix_timestamp predicates would otherwise select
       // different rows than the verified run.

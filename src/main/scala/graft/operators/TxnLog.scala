@@ -58,10 +58,12 @@ import graft.sources.GraftTables
   *   and reads exactly its files — later commits are invisible
   *   (snapshot isolation), and a pinned read never sees a torn table
   *   because manifests only ever reference fully-written files.
-  * - **Replacing files is one builder.** Every commit that swaps a
-  *   file set for freshly staged files (MERGE, compaction, delete
-  *   materialization, the connector's copy-on-write rewrites) builds
-  *   its manifest with [[replaceFiles]] from files staged by
+  * - **Staged commits are one builder.** Every commit of freshly
+  *   staged files — the ones that swap a file set (MERGE, compaction,
+  *   delete materialization, overwrite, the connector's copy-on-write
+  *   rewrites) and the ones that append (insert, create, the
+  *   merge-on-read row-level writes) — builds its manifest with
+  *   [[replaceFiles]] from files staged by
   *   [[graft.sources.StagedWrite.stage]], so per-file metadata stays
   *   exactly over the live files whichever path committed.
   * - **Vacuum liveness derives from the log.** A file is live iff some
@@ -1646,10 +1648,14 @@ object TxnLog {
 
   /** The manifest of a commit that REPLACES files `replaced` of tip
     * `t` with the staged files `s` — the one builder behind every
-    * file-replacing commit ([[mergeCowByKey]], [[compact]],
-    * [[compactSmall]], [[materializeDeletes]], the connector's
-    * copy-on-write DELETE and row-level rewrite; the delta row-level
-    * write appends by replacing nothing). The file list is
+    * staged commit: the file-replacing ones ([[mergeCowByKey]],
+    * [[compact]], [[compactSmall]], [[materializeDeletes]], the
+    * connector's copy-on-write DELETE and row-level rewrite, and
+    * `GraftTables.insert`'s overwrite, which replaces `t.files`) and
+    * the appending ones, which replace nothing (`insert`'s append,
+    * both arms of `GraftTables.createFrom` — the create from
+    * [[PreCreate]] — `GraftTables.updateMor` and the delta row-level
+    * write). The file list is
     * `t.files − replaced ++ s.paths`; every per-file map (`stats`,
     * `colStats`, `ndv`, `rows`, `sizes`, `partitions`, `seqs`) is
     * `t`'s entries minus the replaced files' plus the staged files',

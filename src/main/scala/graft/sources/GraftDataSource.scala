@@ -438,19 +438,11 @@ object GraftTables {
     // column sets — zero post-write stats jobs on the common path.
     val staged = StagedWrite.stage(physical, snap.root, stagingDir(),
       snap.manifest)
-    val newFiles = staged.paths
-    val newRows = staged.rows
-    // The staged files never change across commit retries — their
-    // stats are computed once, by the write tasks themselves. The
-    // cache is keyed by the declared column sets of the manifest the
-    // commit attempt targets, pre-seeded with the writer-side result
-    // under the snapshot's sets; a rebase onto a tip whose sets
-    // CHANGED falls back to the fused read-back scan (r21,
-    // TxnLog.commitStatsFor) under the new sets.
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    statsCache.put(snap.manifest.declaredSets, staged.stats)
+    // The staged files never change across commit retries; a rebase
+    // onto a tip whose declared sets changed re-derives their stats
+    // (StagedWrite.statsUnder).
+    val under = StagedWrite.statsUnder(spark, snap.root, staged,
+      snap.manifest)
     TxnLog.commitRetryWith(snap.root, tip => {
       // Idempotent-replay guard, INSIDE the attempt: if this writer's
       // (appId, batchId) already sits at or below a committed stamp —
@@ -468,18 +460,6 @@ object GraftTables {
       // pass, only in that rare window) so no unvalidated rows land.
       if (tip.constraints != snap.manifest.constraints)
         TxnLog.checkConstraints(data, tip.constraints)
-      // Key bounds + declared column bounds + NDV sketches for the new
-      // files, in ONE scan (TxnLog.commitStatsFor).
-      val sets @ (key, colCols, ndvCols) = tip.declaredSets
-      val cs = statsCache.getOrElseUpdate(sets,
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
-          ndvCols))
-      val newStats = cs.key
-      val newColStats = cs.colStats
-      val mergedColStats = tip.colStats.map { case (c, perFile) =>
-        c -> (perFile ++ newColStats.getOrElse(c, Map.empty))
-      }
-      val newNdv = cs.ndv
       // A table created without declared columns (raw commitRetry
       // fixtures) gets them declared here from the resolved schema
       // (identity mapping) — which is also what keeps an emptied
@@ -490,18 +470,16 @@ object GraftTables {
           TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString,
             snap.physicalOf(f.name))
         }.toSeq))
+      // An overwrite replaces every file and so retires every pending
+      // delete; an append keeps them, and the appended files' fresh
+      // seq keeps them out of the deletes' scope.
       if (overwrite)
-        TxnLog.Manifest(0L, 0L, "replace", newFiles, newStats,
-          tip.statsKey, columns = cols, txn = txn,
-          colStats = newColStats, rows = newRows, ndv = newNdv)
+        TxnLog.replaceFiles(snap.root,
+          tip.copy(columns = cols, deletes = Seq.empty), "replace",
+          tip.files.toSet, under(tip)).copy(txn = txn)
       else
-        TxnLog.Manifest(0L, 0L, "append", tip.files ++ newFiles,
-          tip.stats ++ newStats, tip.statsKey,
-          partitions = tip.partitions, columns = cols, txn = txn,
-          colStats = mergedColStats,
-          // Pending merge-on-read deletes ride along; the appended
-          // files' fresh seq keeps them out of the deletes' scope.
-          deletes = tip.deletes, rows = newRows, ndv = newNdv)
+        TxnLog.replaceFiles(snap.root, tip.copy(columns = cols),
+          "append", Set.empty, under(tip)).copy(txn = txn)
     })
   }
 
@@ -528,9 +506,8 @@ object GraftTables {
     // post-write stats jobs.
     val staged = StagedWrite.stage(data, root, stagingDir(),
       TxnLog.PreCreate)
-    val newFiles = staged.paths
-    val newRows = staged.rows
-    val newNdv = staged.stats.ndv
+    val under = StagedWrite.statsUnder(data.sparkSession, root, staged,
+      TxnLog.PreCreate)
     val cols = data.schema.fields.zipWithIndex.map { case (f, i) =>
       TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString, f.name)
     }.toSeq
@@ -540,19 +517,19 @@ object GraftTables {
           TxnLog.abortCommit()
       }
       if (tip.version < 0L)
-        TxnLog.Manifest(0L, 0L, "create",
-          newFiles, columns = Some(cols), txn = txn,
-          constraints = constraints, rows = newRows, ndv = newNdv)
+        TxnLog.replaceFiles(root, TxnLog.PreCreate.copy(
+          columns = Some(cols), constraints = constraints), "create",
+          Set.empty, under(tip)).copy(txn = txn)
       else {
         // Some OTHER writer created the table while we staged; the
         // create degrades to an append — which must honor THAT
-        // table's constraint set, not just ours.
+        // table's constraint set, not just ours, and record the
+        // appended files' stats under THAT table's declarations.
         if (tip.constraints != constraints)
           TxnLog.checkConstraints(data, tip.constraints)
-        TxnLog.Manifest(0L, 0L, "append", tip.files ++ newFiles,
-          tip.stats, tip.statsKey, partitions = tip.partitions,
-          columns = tip.columns.orElse(Some(cols)), txn = txn,
-          deletes = tip.deletes, rows = newRows, ndv = newNdv)
+        TxnLog.replaceFiles(root,
+          tip.copy(columns = tip.columns.orElse(Some(cols))), "append",
+          Set.empty, under(tip)).copy(txn = txn)
       }
     })
   }
@@ -765,28 +742,18 @@ object GraftTables {
           .cast(snap.schema(c).dataType).as(snap.physicalOf(c))
       }: _*)
       val staged = StagedWrite.stage(rewritten, root, dataSub, t0)
-      val cs = staged.stats
       TxnLog.commitRetryWith(root, t => {
         // Positions name files of the planned tip and the rewritten
         // rows were read under its delete set — a concurrent commit
-        // invalidates both. Fail loudly; caller replans.
+        // invalidates both. Fail loudly; caller replans. (So the
+        // staged stats are always under the committed tip's sets.)
         require(t.version == t0.version,
           s"concurrent commit v${t.version} during updateMor planned " +
             s"against v${t0.version}; retry")
-        t.copy(action = "update-mor",
-          files = t.files ++ staged.paths,
-          rows = t.rows ++ staged.rows,
-          ndv = t.ndv.map { case (c, pf) =>
-            c -> (pf ++ cs.ndv.getOrElse(c, Map.empty))
-          },
-          stats = t.stats ++ cs.key,
-          colStats = t.colStats.map { case (c, pf) =>
-            c -> (pf ++ cs.colStats.getOrElse(c, Map.empty))
-          },
-          deletes = t.deletes ++ posWritten.map(p => TxnLog.DeleteFile(
-            p, "", t.version + 1,
-            Files.size(root.resolve(p)), kind = "pos")),
-          txn = None, ts = 0L)
+        TxnLog.replaceFiles(root, t, "update-mor", Set.empty, staged)
+          .copy(deletes = t.deletes ++ posWritten.map(p =>
+            TxnLog.DeleteFile(p, "", t.version + 1,
+              Files.size(root.resolve(p)), kind = "pos")))
       })
     } finally matched.unpersist()
   }

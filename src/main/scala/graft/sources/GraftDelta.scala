@@ -42,11 +42,12 @@ import graft.operators.TxnLog
   *    0.1% of rows scattered across thousands of files at 100 TB pays
   *    for exactly those rows.
   *
-  * Conflict discipline mirrors [[GraftReplaceDataWrite]]
-  * (WriteSerializable): a lost race rebases iff every intervening
-  * commit left the position-targeted files alive and added no new
-  * equality delete (this statement's fresh-seq output would escape
-  * one); anything else refuses loudly and the user retries. */
+  * Conflict discipline is [[GraftReplaceDataWrite]]'s, through the
+  * same loop ([[RowLevelCommit]], WriteSerializable): a lost race
+  * rebases iff every intervening commit left the position-targeted
+  * files alive and added no new merge-on-read delete (this
+  * statement's fresh-seq output would escape one); anything else
+  * refuses loudly and the user retries. */
 final class GraftDeltaOperation(
     snap: GraftSnapshot, cmd: RowLevelOperation.Command)
   extends RowLevelOperation with SupportsDelta {
@@ -132,97 +133,29 @@ final class GraftDeltaBatchWrite(
     // own commit messages — no footer is ever re-read.
     val staged = StagedWrite.Staged.of(writerSpec, outs.toSeq.flatMap(o =>
       o.dataRel.map(rel => (rel, o.dataRows, o.stats))))
-    val newFiles = staged.paths
     val posFiles = outs.flatMap(o =>
       o.posRel.filter(_ => o.posRows > 0)).toSeq.sorted
-    if (newFiles.isEmpty && posFiles.isEmpty) return // nothing matched
+    if (staged.files.isEmpty && posFiles.isEmpty) return // nothing matched
     // Position scoping is file membership: know the targets so the
-    // rebase check can prove commutativity (Spark-free read, small).
+    // rebase check can prove commutativity (Spark-free read, small) —
+    // a commit that rewrote a position-targeted file relocated the
+    // ordinals this statement recorded.
     val named: Set[String] = posFiles.flatMap(p =>
       TxnLog.posDeleteNamedFiles(snap.root,
         TxnLog.DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
-    // Stats are computed under the key set of the manifest we COMMIT
-    // against, not the snapshot we read: a lost race can rebase onto
-    // a tip whose statsKey / colStats column set changed, and bounds
-    // recorded under the wrong column would silently mis-prune later
-    // scans. Memoized per key set — recomputed only when a rebase
-    // actually changed it (the append path's statsCache discipline).
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    // Pre-seed with the WRITER-SIDE stats the tasks folded while
-    // writing (r22) under the snapshot's declared sets — the common
-    // path commits with zero post-write stats jobs; only a rebase
-    // onto changed sets re-scans.
-    statsCache.put(snap.manifest.declaredSets, staged.stats)
     // A statement that only deleted is a delete-mor commit (the CDF
     // classifies it as pure deletes); one that wrote rows is
     // update-mor (paired pre/post classification).
-    val action = if (newFiles.isEmpty) "delete-mor" else "update-mor"
-    def validate(constraints: Map[String, String]): Unit = {
-      if (constraints.isEmpty || newFiles.isEmpty) return
-      import org.apache.spark.sql.functions.col
-      val staged = graft.util.ParquetSchema.read(spark,
-        newFiles.map(f => snap.root.resolve(f).toString))
-      TxnLog.checkConstraints(
-        staged.select(staged.columns.toSeq.map(c =>
-          col(c).as(snap.logicalOf(c))): _*),
-        constraints)
+    val action = if (staged.files.isEmpty) "delete-mor" else "update-mor"
+    // Appends the data files (a replace of none) and the position
+    // deletes, in one commit.
+    RowLevelCommit.commit(spark, snap, staged, named, "delta operation") {
+      (base, s) =>
+        TxnLog.replaceFiles(snap.root, base, action, Set.empty, s)
+          .copy(deletes = base.deletes ++ posFiles.map(p =>
+            TxnLog.DeleteFile(p, "", base.version + 1,
+              Files.size(snap.root.resolve(p)), kind = "pos")))
     }
-    var base = snap.manifest
-    var attempts = 0
-    var checkedUnder: Map[String, String] = null
-    while (attempts < 10) {
-      if (base.constraints != checkedUnder) {
-        validate(base.constraints)
-        checkedUnder = base.constraints
-      }
-      // Key bounds + column bounds + NDV sketches in ONE fused scan
-      // (TxnLog.commitStatsFor, r21) — and the NDV leg now rides the
-      // retry cache too (it used to recompute on every rebase attempt
-      // even when the declaration set was unchanged).
-      val sets @ (key, colCols, ndvCols) = base.declaredSets
-      val cs = statsCache.getOrElseUpdate(sets,
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
-          ndvCols))
-      // Appends the data files (a replace of none) and the position
-      // deletes, in one commit.
-      TxnLog.tryCommitManifest(snap.root,
-        TxnLog.replaceFiles(snap.root, base, action, Set.empty,
-          staged.copy(stats = cs)).copy(version = base.version + 1,
-          parent = base.version,
-          deletes = base.deletes ++ posFiles.map(p => TxnLog.DeleteFile(
-            p, "", base.version + 1,
-            Files.size(snap.root.resolve(p)), kind = "pos"))),
-        parentHint = Some(base)) match {
-        case Some(_) => return
-        case None =>
-          attempts += 1
-          val tipM = TxnLog.tip(snap.root)
-          val vs = TxnLog.versions(snap.root)
-            .filter(v => v > base.version && v <= tipM.version).sorted
-          var prevFiles = base.files.toSet
-          vs.foreach { v =>
-            val mv = TxnLog.readManifest(snap.root, v)
-            val removed = prevFiles -- mv.files.toSet
-            // A commit that rewrote a position-targeted file
-            // relocated the ordinals this statement recorded.
-            if (removed.exists(named)) sys.error(
-              s"concurrent commit $v on ${snap.root} rewrote files " +
-                "this delta operation position-deletes from — the " +
-                "statement does not commute; retry it")
-            val known = snap.manifest.deletes.toSet
-            if (mv.deletes.exists(d => !known(d))) sys.error(
-              s"concurrent merge-on-read delete at commit $v on " +
-                s"${snap.root} does not commute with this delta " +
-                "operation (fresh-seq output would escape it) — " +
-                "retry the statement")
-            prevFiles = mv.files.toSet
-          }
-          base = tipM
-      }
-    }
-    sys.error(s"delta commit lost 10 races on ${snap.root}")
   }
 
   // Staged files of an aborted write are reclaimed by the age-guarded

@@ -209,14 +209,62 @@ final class GraftReplaceDataWrite(
       Some(writerSpec))
   }
 
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    // Row counts and writer-side stats come from the write tasks'
+    // commit messages (the StagedWrite discipline — zero footer reads,
+    // zero post-write stats jobs); zero-row outputs are dropped.
+    // Without the counts the connector's exact rowCount, which needs
+    // FULL coverage of kept files, would go dark until a compaction.
+    val staged = StagedWrite.Staged.of(writerSpec,
+      messages.toSeq.map(_.asInstanceOf[GraftWrittenFile])
+        .map(w => (w.relPath, w.rows, w.stats)))
+    // Replace EXACTLY the files the configured scan planned (the
+    // groups that participated in the rewrite); everything the
+    // condition's stats pruned survives untouched, with its stats,
+    // partition values, and sizes carried forward. A concurrent
+    // commit that removed a scanned file does not commute — rebasing
+    // would clobber it.
+    val scanned = op.scannedFiles.toSet
+    // The scan APPLIED the snapshot's pending equality deletes to the
+    // files it replaces (fresh seq, coverage baked in); the list rides
+    // along for the untouched files it still scopes.
+    RowLevelCommit.commit(spark, snap, staged, scanned,
+      "row-level operation") { (base, s) =>
+      TxnLog.replaceFiles(snap.root, base, "replace", scanned, s)
+    }
+  }
+
+  // Staged files of an aborted write are reclaimed by the age-guarded
+  // vacuum, like any other lost attempt.
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+}
+
+/** The commit of a DSv2 row-level write ([[GraftReplaceDataWrite]],
+  * [[GraftDeltaBatchWrite]]) — one rebasing loop, the Delta/Iceberg
+  * WriteSerializable check. A lost commit race REBASES onto the new
+  * tip iff every intervening commit is disjoint from the write's
+  * target files: append-only commits and rewrites of other files
+  * commute (their files survive the rebased commit untouched; rows a
+  * concurrent append landed were never seen by this statement,
+  * exactly WriteSerializable's insert semantics). Two shapes do not
+  * commute, and the statement refuses loudly so the user retries
+  * against fresh data: a commit that REMOVED a target file (rebasing
+  * would clobber its rewrite, or misplace recorded ordinals), and a
+  * NEW merge-on-read delete (this statement's output files carry a
+  * fresh seq and would escape it, resurrecting rows it removes; a
+  * delete that vanished means a materialize ran, caught via the files
+  * it rewrote). */
+private[sources] object RowLevelCommit {
+
   // CHECK constraints guard every data-adding write (Delta enforces
   // invariants on UPDATE/MERGE outputs, not just inserts): validate
   // the staged files — physical columns renamed to logical, the names
-  // constraint predicates bind — before publishing. Rows the rewrite
+  // constraint predicates bind — before publishing. Rows a rewrite
   // carried verbatim re-validate too; they were valid when written
   // and stay valid, so the pass costs one scan of O(written bytes).
-  private def validateConstraints(
-      constraints: Map[String, String], newFiles: Seq[String]): Unit = {
+  private def validateConstraints(spark: SparkSession,
+      snap: GraftSnapshot, constraints: Map[String, String],
+      newFiles: Seq[String]): Unit = {
     if (constraints.isEmpty || newFiles.isEmpty) return
     import org.apache.spark.sql.functions.col
     val staged = graft.util.ParquetSchema.read(spark,
@@ -227,73 +275,30 @@ final class GraftReplaceDataWrite(
       constraints)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // Row counts and writer-side stats come from the write tasks'
-    // commit messages (the StagedWrite discipline — zero footer reads,
-    // zero post-write stats jobs); zero-row outputs are dropped.
-    // Without the counts the connector's exact rowCount, which needs
-    // FULL coverage of kept files, would go dark until a compaction.
-    val staged = StagedWrite.Staged.of(writerSpec,
-      messages.toSeq.map(_.asInstanceOf[GraftWrittenFile])
-        .map(w => (w.relPath, w.rows, w.stats)))
-    val newFiles = staged.paths
-    // Replace EXACTLY the files the configured scan planned (the
-    // groups that participated in the rewrite); everything the
-    // condition's stats pruned survives untouched, with its stats,
-    // partition values, and sizes carried forward.
-    val scanned = op.scannedFiles.toSet
-    // Stats are computed under the key set of the manifest we COMMIT
-    // against, not the snapshot we read: a lost race can rebase onto
-    // a tip whose statsKey / colStats column set changed, and bounds
-    // recorded under the wrong column would silently mis-prune later
-    // scans. Memoized per key set — recomputed only when a rebase
-    // actually changed it (the append path's statsCache discipline).
-    val statsCache = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[String], Seq[String]),
-        TxnLog.CommitStats]
-    // Pre-seed with the WRITER-SIDE stats the tasks folded while
-    // writing (r22) under the snapshot's declared sets — the common
-    // path commits with zero post-write stats jobs; only a rebase
-    // onto changed sets re-scans.
-    statsCache.put(snap.manifest.declaredSets, staged.stats)
-    // Conflict discipline (the Delta/Iceberg WriteSerializable
-    // check): a lost commit race REBASES onto the new tip iff every
-    // intervening commit is DISJOINT from the rewrite's groups —
-    // append-only commits and rewrites of unscanned files commute
-    // with this operation (their files survive the rebased commit
-    // untouched; rows a concurrent append landed were never seen by
-    // this statement, exactly WriteSerializable's insert semantics).
-    // A commit that removed/rewrote any SCANNED file does NOT
-    // commute — rebasing would clobber it — so the statement refuses
-    // loudly and the user retries against fresh data.
+  /** Commit `staged` (written against `snap`) with the manifest
+    * `build` makes from the tip it targets and the staged files'
+    * stats under that tip's declared sets, rebasing per the object
+    * doc; `targets` are the files whose removal refuses the rebase,
+    * `label` names the statement in refusals. Each attempt validates
+    * the staged files against the tip's constraint set when it
+    * differs from the one last checked. */
+  def commit(spark: SparkSession, snap: GraftSnapshot,
+      staged: StagedWrite.Staged, targets: Set[String], label: String)(
+      build: (TxnLog.Manifest, StagedWrite.Staged) => TxnLog.Manifest)
+      : Unit = {
+    val under = StagedWrite.statsUnder(spark, snap.root, staged,
+      snap.manifest)
+    val known = snap.manifest.deletes.toSet
     var base = snap.manifest
-    var attempts = 0
-    // Validate against the snapshot's constraint set; a rebase onto a
-    // tip whose set CHANGED (concurrent ADD CONSTRAINT) re-validates
-    // under the new set before committing under it.
     var checkedUnder: Map[String, String] = null
+    var attempts = 0
     while (attempts < 10) {
       if (base.constraints != checkedUnder) {
-        validateConstraints(base.constraints, newFiles)
+        validateConstraints(spark, snap, base.constraints, staged.paths)
         checkedUnder = base.constraints
       }
-      // Key bounds + column bounds + NDV sketches for the staged
-      // files in ONE fused scan (TxnLog.commitStatsFor, r21) — a
-      // rebase onto a tip whose declaration sets changed recomputes
-      // under the new sets; same-set retries hit the cache. Without
-      // the NDV leg, every SQL UPDATE/MERGE/DELETE would break the
-      // full-coverage requirement and blind the CBO's string-key NDV
-      // until the next compaction.
-      val sets @ (key, colCols, ndvCols) = base.declaredSets
-      val cs = statsCache.getOrElseUpdate(sets,
-        TxnLog.commitStatsFor(spark, snap.root, newFiles, key, colCols,
-          ndvCols))
-      // The scan APPLIED the snapshot's pending equality deletes to
-      // the files it replaces (fresh seq, coverage baked in); the list
-      // rides along for the untouched files it still scopes.
       TxnLog.tryCommitManifest(snap.root,
-        TxnLog.replaceFiles(snap.root, base, "replace", scanned,
-          staged.copy(stats = cs)).copy(version = base.version + 1,
+        build(base, under(base)).copy(version = base.version + 1,
           parent = base.version),
         parentHint = Some(base)) match {
         case Some(_) => return
@@ -302,37 +307,27 @@ final class GraftReplaceDataWrite(
           val tipM = TxnLog.tip(snap.root)
           // Walk the intervening chain; each step's REMOVED set is
           // what that commit rewrote/deleted.
-          val vs = TxnLog.versions(snap.root)
-            .filter(v => v > base.version && v <= tipM.version).sorted
           var prevFiles = base.files.toSet
-          vs.foreach { v =>
-            val mv = TxnLog.readManifest(snap.root, v)
-            val removed = prevFiles -- mv.files.toSet
-            if (removed.exists(scanned)) sys.error(
-              s"concurrent commit $v on ${snap.root} rewrote files " +
-                "this row-level operation planned: the group rewrite " +
-                "does not commute — retry the statement")
-            // A concurrent NEW equality delete does not commute
-            // either: this statement's output files carry a fresh seq
-            // and would ESCAPE it, resurrecting rows the delete must
-            // remove. (A delete that vanished means a materialize ran
-            // — caught above via the files it rewrote.)
-            val known = snap.manifest.deletes.toSet
-            if (mv.deletes.exists(d => !known(d))) sys.error(
-              s"concurrent merge-on-read delete at commit $v on " +
-                s"${snap.root} does not commute with this row-level " +
-                "operation — retry the statement")
-            prevFiles = mv.files.toSet
-          }
+          TxnLog.versions(snap.root)
+            .filter(v => v > base.version && v <= tipM.version)
+            .foreach { v =>
+              val mv = TxnLog.readManifest(snap.root, v)
+              if ((prevFiles -- mv.files).exists(targets)) sys.error(
+                s"concurrent commit $v on ${snap.root} rewrote files " +
+                  s"this $label targets — the statement does not " +
+                  "commute; retry it")
+              if (mv.deletes.exists(d => !known(d))) sys.error(
+                s"concurrent merge-on-read delete at commit $v on " +
+                  s"${snap.root} does not commute with this $label " +
+                  "(fresh-seq output would escape it) — retry the " +
+                  "statement")
+              prevFiles = mv.files.toSet
+            }
           base = tipM
       }
     }
-    sys.error(s"row-level commit lost 10 races on ${snap.root}")
+    sys.error(s"$label commit lost 10 races on ${snap.root}")
   }
-
-  // Staged files of an aborted write are reclaimed by the age-guarded
-  // vacuum, like any other lost attempt.
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 final case class GraftWriterFactory(

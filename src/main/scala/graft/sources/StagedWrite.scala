@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -69,6 +69,30 @@ object StagedWrite {
     val spec = WriterStats.specFor(physical.sparkSession, physical.schema,
       declared)
     Staged.of(spec, parquetWithStats(physical, root, subdir, Some(spec)))
+  }
+
+  /** `staged`, written under the declared column sets of
+    * `stagedUnder`, as seen by each tip a commit attempt targets: the
+    * returned function gives `staged` with its stats under that tip's
+    * [[TxnLog.Manifest.declaredSets]]. Bounds recorded under the
+    * wrong column would silently mis-prune later scans, so a rebase
+    * onto a tip whose sets differ re-computes the stats over the
+    * staged files in one fused read-back scan
+    * ([[TxnLog.commitStatsFor]]); the writer-side stats seed the
+    * staging sets, and every set is computed at most once (the files
+    * are immutable once staged). The one place staged stats follow a
+    * rebase: `GraftTables.insert`/`createFrom` and the row-level
+    * writes take theirs from here. */
+  def statsUnder(spark: SparkSession, root: Path, staged: Staged,
+      stagedUnder: TxnLog.Manifest): TxnLog.Manifest => Staged = {
+    val cache = scala.collection.mutable.Map(
+      stagedUnder.declaredSets -> staged.stats)
+    tip => {
+      val sets @ (key, colCols, ndvCols) = tip.declaredSets
+      staged.copy(stats = cache.getOrElseUpdate(sets,
+        TxnLog.commitStatsFor(spark, root, staged.paths, key, colCols,
+          ndvCols)))
+    }
   }
 
   /** The task-side write under [[stage]]: one parquet per non-empty

@@ -1799,4 +1799,65 @@ class GraftConnectorSpec extends AnyFunSuite with SparkTestBase {
     assert(TxnLog.footerReads.get() == before + extFiles.size)
     assert(TxnLog.tip(raw).rows.values.sum == 1L)
   }
+
+  test("createFrom on an existing table appends under THAT table's " +
+      "stats declarations: colStats and key stats cover every file") {
+    val tbl = graft.util.Scratch.dir("graft_connector")
+      .resolve(s"cf${System.nanoTime()}")
+    Files.createDirectories(tbl)
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl.resolve("b0").toString)
+    val base = TxnLog.parquetsUnder(tbl, "b0")
+    TxnLog.commitRetryWith(tbl, _ => TxnLog.Manifest(0L, -1L, "create",
+      base, TxnLog.keyStats(spark, tbl, base, "id"),
+      statsKey = Some("id"),
+      colStats = TxnLog.colStatsFor(spark, tbl, base, Seq("v"))))
+    // Another writer created the table first: the create degrades to
+    // an append.
+    GraftTables.createFrom(tbl,
+      Seq((3L, 30L), (4L, 40L)).toDF("id", "v").coalesce(1))
+    val tip = TxnLog.tip(tbl)
+    assert(tip.version == 1L && tip.action == "append", tip)
+    val appended = tip.files.filterNot(base.contains)
+    assert(appended.size == 1 && base.forall(tip.files.contains))
+    assert(tip.statsKey.contains("id") && tip.colStats.keySet == Set("v"),
+      s"declarations after the append: $tip")
+    assert(tip.files.forall(tip.colStats("v").contains),
+      s"colStats miss ${tip.files.filterNot(tip.colStats("v").contains)}")
+    assert(tip.files.forall(tip.stats.contains),
+      s"key stats miss ${tip.files.filterNot(tip.stats.contains)}")
+    assert(tip.colStats("v")(appended.head) == (30L, 40L))
+    assert(tip.stats(appended.head) == (3L, 4L))
+    assert(GraftTables.read(spark, tbl).filter($"v" >= 30L)
+      .select("id").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
+  }
+
+  test("an insert through a stale snapshot records its files' stats " +
+      "under the declarations of the tip it commits on") {
+    val tbl = graft.util.Scratch.dir("graft_connector")
+      .resolve(s"rb${System.nanoTime()}")
+    Files.createDirectories(tbl)
+    // Auto-NDV off: the write tasks sketch nothing under the
+    // snapshot's (empty) declarations, so a `v` sketch on the new file
+    // can only come from the re-derivation under the tip's sets.
+    try {
+      spark.conf.set(TxnLog.NdvAutoConfKey, "false")
+      Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
+        .coalesce(1).write.parquet(tbl.resolve("b0").toString)
+      TxnLog.commitRetry(tbl, "create",
+        _ => TxnLog.parquetsUnder(tbl, "b0"))
+      val snap = GraftTables.resolve(Map("path" -> tbl.toString))
+      assert(snap.manifest.ndv.isEmpty)
+      TxnLog.declareNdv(spark, tbl, Seq("v"))
+      GraftTables.insert(snap,
+        Seq((3L, 30L), (4L, 40L)).toDF("id", "v").coalesce(1),
+        overwrite = false)
+    } finally spark.conf.unset(TxnLog.NdvAutoConfKey)
+    val tip = TxnLog.tip(tbl)
+    assert(tip.version == 2L && tip.action == "append", tip)
+    assert(tip.files.size == 2 && tip.ndv.keySet == Set("v"), tip)
+    assert(tip.files.forall(tip.ndv("v").contains),
+      s"v sketch misses ${tip.files.filterNot(tip.ndv("v").contains)}")
+    assert(GraftTables.read(spark, tbl).count() == 4L)
+  }
 }

@@ -69,20 +69,6 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
           "2-3x faster than 32 at bench volume); a cluster deployment " +
           "passes a cores-proportional value through the same " +
           "parameter (runAvailableNow scaladoc states the derivation)"),
-      ("Plans.scala", "shuffle.partitions=8") ->
-        ("plan-snapshot main: fixed width keeps PLANS.txt diffs " +
-          "host-independent; never a query path"),
-      ("Plans.scala", "conf.set(spark.graft.rowlevel.mode)") ->
-        ("the WriteDelta plan witnesses (r17) route the scratch-table " +
-          "UPDATE/MERGE/DELETE through the delta contract, set/unset " +
-          "scoped around the witness block; diagnostic main, never a " +
-          "query path"),
-      ("Plans.scala", "conf.set(spark.sql.autoBroadcastJoinThreshold)") ->
-        ("the statistics witness (r18) pins a threshold BETWEEN one " +
-          "file's and the whole table's manifest-reported size to " +
-          "prove the broadcast decision flips on pruned estimates, " +
-          "set/restore scoped around the witness; diagnostic main, " +
-          "never a query path"),
       ("operators/Skew.scala", "autoBroadcastJoinThreshold=-1") ->
         ("deliberately disables broadcast inside a scoped " +
           "save/restore block so the salted sort-merge join is the " +
@@ -158,6 +144,32 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
       "stage through StagedWrite.stage (or fold DSv2 task reports " +
         "with StagedWrite.Staged.of) instead of calling the task-side " +
         s"write or the assembler directly: ${calls.sorted}")
+  }
+
+  test("staged stats follow a rebase in ONE place") {
+    // A commit that rebases onto a tip whose declared stats column
+    // sets changed must re-derive the staged files' stats under the
+    // new sets. StagedWrite.statsUnder owns that decision (seeded
+    // with the writer-side stats, memoized per set); three hand-kept
+    // copies of it once drifted apart, so any production call of the
+    // read-back stats scan outside StagedWrite.scala fails this audit.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
+    val callPat = """(?<!def )\bcommitStatsFor\s*\(""".r
+    val callers = java.nio.file.Files.walk(root)
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val rel = root.relativize(f).toString
+        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+          .map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+            l.startsWith("//"))
+          .flatMap(l => callPat.findAllMatchIn(l).map(_ => rel))
+      }
+    assert(callers == Seq("graft/sources/StagedWrite.scala"),
+      "take rebased stats from StagedWrite.statsUnder instead of " +
+        s"calling TxnLog.commitStatsFor directly: $callers")
   }
 
   test("pending deletes are applied in ONE place: the connector scan") {

@@ -97,6 +97,47 @@ class RowLevelConflictSpec extends AnyFunSuite with SparkTestBase {
       .filter($"id" === 60L).select($"v").head.getLong(0) == 60L)
   }
 
+  test("a row-level commit REFUSES when a merge-on-read delete raced in") {
+    val (tbl, loFiles, _) = twoFileTable()
+    val snap = GraftTables.resolve(Map("path" -> tbl.toString))
+    val op = new GraftRowLevelOperation(snap, RowLevelOperation.Command.UPDATE)
+    op.scannedFiles = loFiles
+    val write = new GraftReplaceDataWrite(snap, op)
+    val msg = stage(tbl, "rw2", 1L, 50L)
+    // A concurrent equality delete: the rewrite's fresh-seq output
+    // would escape it and resurrect the rows it removes.
+    TxnLog.deleteByKeyMor(spark, tbl, Seq(5L).toDF("id"), "id", "ed")
+    val e = intercept[RuntimeException](
+      write.commit(Array[WriterCommitMessage](msg)))
+    assert(e.getMessage.contains("merge-on-read delete"))
+    assert(TxnLog.latest(tbl).contains(1L))
+    assert(GraftTables.read(spark, tbl).count() == 99L)
+  }
+
+  test("a row-level commit that rebases onto CHANGED stats declarations " +
+      "records the staged files' stats under the tip's sets") {
+    val (tbl, loFiles, hiFiles) = twoFileTable()
+    val snap = GraftTables.resolve(Map("path" -> tbl.toString))
+    val op = new GraftRowLevelOperation(snap, RowLevelOperation.Command.UPDATE)
+    op.scannedFiles = loFiles
+    val write = new GraftReplaceDataWrite(snap, op)
+    // The staged message carries no writer-side stats, so every stat
+    // of the new file must come from the re-derivation under the tip.
+    val msg = stage(tbl, "rw3", 1L, 50L)
+    TxnLog.declareNdv(spark, tbl, Seq("v"))
+    write.commit(Array[WriterCommitMessage](msg))
+    val tip = TxnLog.tip(tbl)
+    assert(tip.version == 2L && tip.action == "replace", tip)
+    assert(!tip.files.exists(loFiles.contains) &&
+      hiFiles.forall(tip.files.contains))
+    val sketched = tip.ndv.getOrElse("v", Map.empty)
+    assert(tip.files.forall(sketched.contains),
+      s"v sketch misses ${tip.files.filterNot(sketched.contains)}")
+    assert(tip.files.forall(tip.stats.contains),
+      s"key stats miss ${tip.files.filterNot(tip.stats.contains)}")
+    assert(tip.stats(tip.files.filterNot(hiFiles.contains).head) == (1L, 50L))
+  }
+
   /** Stage a delta task output: a data file of rewritten rows plus a
     * position-delete file naming `target` ordinals 0..n-1. */
   private def stageDelta(tbl: Path, sub: String, target: String,
