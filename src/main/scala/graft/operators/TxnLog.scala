@@ -52,8 +52,16 @@ import graft.sources.GraftTables
   * - **Optimistic concurrency.** A writer reads the latest version V,
   *   computes its new file set against V's manifest, and tries to
   *   commit V+1. A concurrent committer winning V+1 surfaces as the
-  *   put-if-absent failure; the loser re-reads, REBASES its file set
-  *   on the new tip, and retries ([[commitRetry]]).
+  *   put-if-absent failure, and the loser takes one of three paths.
+  *   Append-shaped commits (appends, inserts, metadata commits)
+  *   re-read the tip, REBASE onto it and retry ([[commitRetryWith]]).
+  *   Commits that target files of a planned version (the compactions,
+  *   delete materialization, `GraftTables.updateMor`, the connector's
+  *   row-level writes) rebase over intervening commits that left those
+  *   files alive and added no merge-on-read delete, and refuse loudly
+  *   otherwise ([[graft.sources.StagedWrite.commit]]).
+  *   [[mergeCowByKey]] and the connector's copy-on-write DELETE
+  *   REPLAN from data against the new tip.
   * - **Readers pin a version.** [[readVersion]] resolves one manifest
   *   and reads exactly its files — later commits are invisible
   *   (snapshot isolation), and a pinned read never sees a torn table
@@ -1719,32 +1727,27 @@ object TxnLog {
       t0.deletes.exists(d =>
         d.kind != "pos" && t0.seqs.getOrElse(f, -1L) < d.seq) ||
         posNamed(f))
-    // Every targeted file already rewritten (e.g. by CoW merges) —
-    // the list is pure metadata debt; clear it in place.
-    if (affected.isEmpty)
-      return commitRetryWith(table, t => {
-        require(t.version == t0.version,
-          s"concurrent commit v${t.version} during materializeDeletes " +
-            s"planned against v${t0.version}; retry")
-        t.copy(action = "materialize", deletes = Seq.empty,
-          txn = None, ts = 0L)
-      })
-    // A rewrite that deleted everything writes nothing, so the tip
-    // stays fully stats-covered with no zero-row files to drop.
-    val nOut = rewriteFanOut(table, t0, affected, targetFileBytes)
-    val staged = graft.sources.StagedWrite.stage(
-      GraftTables.scanFiles(spark, table, t0, affected).coalesce(nOut),
-      table, subdir, t0)
-    commitRetryWith(table, t => {
-      // Like a CoW merge, this rewrite does not commute: it replaced
-      // the files of the tip it READ. A concurrent commit means the
-      // plan is stale — fail loudly rather than publish it.
-      require(t.version == t0.version,
-        s"concurrent commit v${t.version} during materializeDeletes " +
-          s"planned against v${t0.version}; retry")
-      replaceFiles(table, t0, "materialize", affected.toSet, staged)
-        .copy(deletes = Seq.empty)
-    })
+    // Every targeted file already rewritten (e.g. by CoW merges):
+    // the list is pure metadata debt, cleared in place by a commit
+    // that stages nothing. A rewrite that deleted everything writes
+    // nothing, so the tip stays fully stats-covered with no zero-row
+    // files to drop.
+    val staged =
+      if (affected.isEmpty)
+        graft.sources.StagedWrite.Staged(Seq.empty, CommitStats.empty)
+      else graft.sources.StagedWrite.stage(
+        GraftTables.scanFiles(spark, table, t0, affected).coalesce(
+          rewriteFanOut(table, t0, affected, targetFileBytes)),
+        table, subdir, t0)
+    // Rebases over commits that left the affected files alive and
+    // added no merge-on-read delete, and drops only the deletes of the
+    // version it read: each now applies to no live file.
+    graft.sources.StagedWrite.commit(spark, table, t0, staged,
+      affected.toSet, "materializeDeletes", addsRows = false) {
+      (t, under) =>
+        replaceFiles(table, t, "materialize", affected.toSet, under(t))
+          .copy(deletes = t.deletes.filterNot(t0.deletes.toSet))
+    }
   }
 
   /** Key-scoped copy-on-write MERGE as a log commit: `batch` carries
@@ -1877,26 +1880,30 @@ object TxnLog {
       spark: SparkSession, table: Path, subdir: String,
       nFiles: Int = 1, statsKey: Option[String] = None): Committed = {
     val tipVersion = latest(table).get
-    val tipM = readManifest(table, tipVersion)
-    val keyed = tipM.copy(statsKey = statsKey.orElse(tipM.statsKey))
-    // Staged (with its stats) outside the commit closure, so a retry
-    // never rewrites or recomputes.
+    // `t` declaring the effective key; bounds a surviving file holds
+    // under another key are dropped (unknown, never wrong).
+    def keyed(t: Manifest): Manifest = {
+      val key = statsKey.orElse(t.statsKey)
+      if (key == t.statsKey) t else t.copy(statsKey = key, stats = Map.empty)
+    }
+    val planned = keyed(readManifest(table, tipVersion))
+    // Staged (with its stats) before the commit loop, so a retry
+    // never rewrites.
     val staged = graft.sources.StagedWrite.stage(
       readVersion(spark, table, tipVersion).coalesce(nFiles),
-      table, subdir, keyed)
-    commitRetryWith(table, t => {
-      // A full rewrite does not commute (same discipline as
-      // compactSmall/materializeDeletes): a concurrent append or
-      // delete-mor landing between the read and this commit would be
-      // silently discarded — its files/deletes are absent from this
-      // plan, and the resurrect guard cannot see a rewrite whose
-      // outputs carry no seqs entries. Fail loudly; caller replans.
-      require(t.version == tipVersion,
-        s"concurrent commit v${t.version} during compact planned " +
-          s"against v$tipVersion; retry")
-      replaceFiles(table, keyed, "compact", keyed.files.toSet, staged)
-        .copy(deletes = Seq.empty)
-    })
+      table, subdir, planned)
+    // A full rewrite targets every planned file: it rebases over a
+    // commit that only appended (the appended files survive it) and
+    // refuses one that rewrote a planned file or added a merge-on-read
+    // delete. Each tip is re-keyed, so the staged stats follow the
+    // declaration through a rebase.
+    graft.sources.StagedWrite.commit(spark, table, planned, staged,
+      planned.files.toSet, "compact", addsRows = false) { (t, under) =>
+      val declared = keyed(t)
+      replaceFiles(table, declared, "compact", planned.files.toSet,
+        under(declared))
+        .copy(deletes = t.deletes.filterNot(planned.deletes.toSet))
+    }
   }
 
   /** RESTORE the table to `toVersion` as a NEW commit — the Delta
@@ -2474,20 +2481,17 @@ object TxnLog {
     val small = t0.files.filter(f => sizeOf(table, t0, f) < minFileBytes)
     if (small.size < 2) return Committed(t0.version, 0)
     val nOut = rewriteFanOut(table, t0, small, targetFileBytes)
-    // Staged (with its stats) outside the commit closure, so retries
+    // Staged (with its stats) before the commit loop, so retries
     // recompute nothing.
     val staged = graft.sources.StagedWrite.stage(
       GraftTables.scanFiles(spark, table, t0, small).coalesce(nOut),
       table, subdir, t0)
-    commitRetryWith(table, t => {
-      // A pack rewrite does not commute (same discipline as
-      // materializeDeletes): a concurrent commit means the plan is
-      // stale — fail loudly rather than publish it.
-      require(t.version == t0.version,
-        s"concurrent commit v${t.version} during compactSmall " +
-          s"planned against v${t0.version}; retry")
-      replaceFiles(table, t0, "optimize", small.toSet, staged)
-    })
+    // Rebases over commits that left the small files alive and added
+    // no merge-on-read delete; refuses otherwise.
+    graft.sources.StagedWrite.commit(spark, table, t0, staged,
+      small.toSet, "compactSmall", addsRows = false) { (t, under) =>
+      replaceFiles(table, t, "optimize", small.toSet, under(t))
+    }
   }
 
   /** Expire all but the last `retainLast` versions: their manifests

@@ -690,8 +690,13 @@ object GraftTables {
     * deleted row is never updated back to life. The appended files get
     * a fresh sequence, so pending equality deletes correctly do not
     * apply to them (their effect was already folded into the read).
-    * Strictly versioned: positions name files of the planned tip, so a
-    * concurrent commit fails the attempt loudly (replan and retry). */
+    * The rewritten rows are validated against the table's CHECK
+    * constraints. The commit is the delta row-level write's
+    * ([[StagedWrite.commitDelta]]): it rebases over a concurrent commit
+    * that left the position-named files alive and added no
+    * merge-on-read delete, and refuses loudly otherwise (the positions
+    * would name relocated rows, or the fresh-seq output would escape
+    * the new delete) — replan and retry. */
   def updateMor(spark: SparkSession, root: Path,
       where: String, set: Map[String, String]): TxnLog.Committed = {
     import org.apache.spark.sql.functions.{col, expr, lit}
@@ -741,20 +746,9 @@ object GraftTables {
         set.get(c).map(expr).getOrElse(col(c))
           .cast(snap.schema(c).dataType).as(snap.physicalOf(c))
       }: _*)
-      val staged = StagedWrite.stage(rewritten, root, dataSub, t0)
-      TxnLog.commitRetryWith(root, t => {
-        // Positions name files of the planned tip and the rewritten
-        // rows were read under its delete set — a concurrent commit
-        // invalidates both. Fail loudly; caller replans. (So the
-        // staged stats are always under the committed tip's sets.)
-        require(t.version == t0.version,
-          s"concurrent commit v${t.version} during updateMor planned " +
-            s"against v${t0.version}; retry")
-        TxnLog.replaceFiles(root, t, "update-mor", Set.empty, staged)
-          .copy(deletes = t.deletes ++ posWritten.map(p =>
-            TxnLog.DeleteFile(p, "", t.version + 1,
-              Files.size(root.resolve(p)), kind = "pos")))
-      })
+      StagedWrite.commitDelta(spark, root, t0,
+        StagedWrite.stage(rewritten, root, dataSub, t0), posWritten,
+        "updateMor")
     } finally matched.unpersist()
   }
 

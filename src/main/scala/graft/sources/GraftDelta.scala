@@ -17,8 +17,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.operators.TxnLog
-
 /** SQL `UPDATE` / `MERGE INTO` / row-level `DELETE` in MERGE-ON-READ
   * mode — the DSv2 DELTA row-level contract ([[SupportsDelta]], the
   * API Iceberg's `write.update.mode = merge-on-read` runs on). Under
@@ -43,8 +41,8 @@ import graft.operators.TxnLog
   *    for exactly those rows.
   *
   * Conflict discipline is [[GraftReplaceDataWrite]]'s, through the
-  * same loop ([[RowLevelCommit]], WriteSerializable): a lost race
-  * rebases iff every intervening commit left the position-targeted
+  * same loop ([[StagedWrite.commitDelta]], WriteSerializable): a lost
+  * race rebases iff every intervening commit left the position-targeted
   * files alive and added no new merge-on-read delete (this
   * statement's fresh-seq output would escape one); anything else
   * refuses loudly and the user retries. */
@@ -136,26 +134,8 @@ final class GraftDeltaBatchWrite(
     val posFiles = outs.flatMap(o =>
       o.posRel.filter(_ => o.posRows > 0)).toSeq.sorted
     if (staged.files.isEmpty && posFiles.isEmpty) return // nothing matched
-    // Position scoping is file membership: know the targets so the
-    // rebase check can prove commutativity (Spark-free read, small) —
-    // a commit that rewrote a position-targeted file relocated the
-    // ordinals this statement recorded.
-    val named: Set[String] = posFiles.flatMap(p =>
-      TxnLog.posDeleteNamedFiles(snap.root,
-        TxnLog.DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
-    // A statement that only deleted is a delete-mor commit (the CDF
-    // classifies it as pure deletes); one that wrote rows is
-    // update-mor (paired pre/post classification).
-    val action = if (staged.files.isEmpty) "delete-mor" else "update-mor"
-    // Appends the data files (a replace of none) and the position
-    // deletes, in one commit.
-    RowLevelCommit.commit(spark, snap, staged, named, "delta operation") {
-      (base, s) =>
-        TxnLog.replaceFiles(snap.root, base, action, Set.empty, s)
-          .copy(deletes = base.deletes ++ posFiles.map(p =>
-            TxnLog.DeleteFile(p, "", base.version + 1,
-              Files.size(snap.root.resolve(p)), kind = "pos")))
-    }
+    StagedWrite.commitDelta(spark, snap.root, snap.manifest, staged,
+      posFiles, "delta operation")
   }
 
   // Staged files of an aborted write are reclaimed by the age-guarded

@@ -228,106 +228,15 @@ final class GraftReplaceDataWrite(
     // The scan APPLIED the snapshot's pending equality deletes to the
     // files it replaces (fresh seq, coverage baked in); the list rides
     // along for the untouched files it still scopes.
-    RowLevelCommit.commit(spark, snap, staged, scanned,
-      "row-level operation") { (base, s) =>
-      TxnLog.replaceFiles(snap.root, base, "replace", scanned, s)
+    StagedWrite.commit(spark, snap.root, snap.manifest, staged, scanned,
+      "row-level operation", addsRows = true) { (t, under) =>
+      TxnLog.replaceFiles(snap.root, t, "replace", scanned, under(t))
     }
   }
 
   // Staged files of an aborted write are reclaimed by the age-guarded
   // vacuum, like any other lost attempt.
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** The commit of a DSv2 row-level write ([[GraftReplaceDataWrite]],
-  * [[GraftDeltaBatchWrite]]) — one rebasing loop, the Delta/Iceberg
-  * WriteSerializable check. A lost commit race REBASES onto the new
-  * tip iff every intervening commit is disjoint from the write's
-  * target files: append-only commits and rewrites of other files
-  * commute (their files survive the rebased commit untouched; rows a
-  * concurrent append landed were never seen by this statement,
-  * exactly WriteSerializable's insert semantics). Two shapes do not
-  * commute, and the statement refuses loudly so the user retries
-  * against fresh data: a commit that REMOVED a target file (rebasing
-  * would clobber its rewrite, or misplace recorded ordinals), and a
-  * NEW merge-on-read delete (this statement's output files carry a
-  * fresh seq and would escape it, resurrecting rows it removes; a
-  * delete that vanished means a materialize ran, caught via the files
-  * it rewrote). */
-private[sources] object RowLevelCommit {
-
-  // CHECK constraints guard every data-adding write (Delta enforces
-  // invariants on UPDATE/MERGE outputs, not just inserts): validate
-  // the staged files — physical columns renamed to logical, the names
-  // constraint predicates bind — before publishing. Rows a rewrite
-  // carried verbatim re-validate too; they were valid when written
-  // and stay valid, so the pass costs one scan of O(written bytes).
-  private def validateConstraints(spark: SparkSession,
-      snap: GraftSnapshot, constraints: Map[String, String],
-      newFiles: Seq[String]): Unit = {
-    if (constraints.isEmpty || newFiles.isEmpty) return
-    import org.apache.spark.sql.functions.col
-    val staged = graft.util.ParquetSchema.read(spark,
-      newFiles.map(f => snap.root.resolve(f).toString))
-    TxnLog.checkConstraints(
-      staged.select(staged.columns.toSeq.map(c =>
-        col(c).as(snap.logicalOf(c))): _*),
-      constraints)
-  }
-
-  /** Commit `staged` (written against `snap`) with the manifest
-    * `build` makes from the tip it targets and the staged files'
-    * stats under that tip's declared sets, rebasing per the object
-    * doc; `targets` are the files whose removal refuses the rebase,
-    * `label` names the statement in refusals. Each attempt validates
-    * the staged files against the tip's constraint set when it
-    * differs from the one last checked. */
-  def commit(spark: SparkSession, snap: GraftSnapshot,
-      staged: StagedWrite.Staged, targets: Set[String], label: String)(
-      build: (TxnLog.Manifest, StagedWrite.Staged) => TxnLog.Manifest)
-      : Unit = {
-    val under = StagedWrite.statsUnder(spark, snap.root, staged,
-      snap.manifest)
-    val known = snap.manifest.deletes.toSet
-    var base = snap.manifest
-    var checkedUnder: Map[String, String] = null
-    var attempts = 0
-    while (attempts < 10) {
-      if (base.constraints != checkedUnder) {
-        validateConstraints(spark, snap, base.constraints, staged.paths)
-        checkedUnder = base.constraints
-      }
-      TxnLog.tryCommitManifest(snap.root,
-        build(base, under(base)).copy(version = base.version + 1,
-          parent = base.version),
-        parentHint = Some(base)) match {
-        case Some(_) => return
-        case None =>
-          attempts += 1
-          val tipM = TxnLog.tip(snap.root)
-          // Walk the intervening chain; each step's REMOVED set is
-          // what that commit rewrote/deleted.
-          var prevFiles = base.files.toSet
-          TxnLog.versions(snap.root)
-            .filter(v => v > base.version && v <= tipM.version)
-            .foreach { v =>
-              val mv = TxnLog.readManifest(snap.root, v)
-              if ((prevFiles -- mv.files).exists(targets)) sys.error(
-                s"concurrent commit $v on ${snap.root} rewrote files " +
-                  s"this $label targets — the statement does not " +
-                  "commute; retry it")
-              if (mv.deletes.exists(d => !known(d))) sys.error(
-                s"concurrent merge-on-read delete at commit $v on " +
-                  s"${snap.root} does not commute with this $label " +
-                  "(fresh-seq output would escape it) — retry the " +
-                  "statement")
-              prevFiles = mv.files.toSet
-            }
-          base = tipM
-      }
-    }
-    sys.error(s"$label commit lost 10 races on ${snap.root}")
-  }
 }
 
 final case class GraftWriterFactory(

@@ -81,8 +81,8 @@ object StagedWrite {
     * ([[TxnLog.commitStatsFor]]); the writer-side stats seed the
     * staging sets, and every set is computed at most once (the files
     * are immutable once staged). The one place staged stats follow a
-    * rebase: `GraftTables.insert`/`createFrom` and the row-level
-    * writes take theirs from here. */
+    * rebase: `GraftTables.insert`/`createFrom` and [[commit]] take
+    * theirs from here. */
   def statsUnder(spark: SparkSession, root: Path, staged: Staged,
       stagedUnder: TxnLog.Manifest): TxnLog.Manifest => Staged = {
     val cache = scala.collection.mutable.Map(
@@ -93,6 +93,124 @@ object StagedWrite {
         TxnLog.commitStatsFor(spark, root, staged.paths, key, colCols,
           ndvCols)))
     }
+  }
+
+  /** The commit of every write that targets files of a planned
+    * version — the DSv2 row-level writes, `GraftTables.updateMor`,
+    * [[TxnLog.compact]], [[TxnLog.compactSmall]] and
+    * [[TxnLog.materializeDeletes]] — one rebasing loop, the
+    * Delta/Iceberg WriteSerializable check. A lost commit race REBASES
+    * onto the new tip iff every intervening commit is disjoint from
+    * `targets`: append-only commits and rewrites of other files
+    * commute (their files survive the rebased commit untouched; rows a
+    * concurrent append landed were never seen by this write, exactly
+    * WriteSerializable's insert semantics). Two shapes do not commute,
+    * and the write refuses loudly so the caller retries against fresh
+    * data: a commit that REMOVED a target file (rebasing would clobber
+    * its rewrite, or misplace recorded ordinals), and a NEW
+    * merge-on-read delete (this write's output files carry a fresh seq
+    * and would escape it, resurrecting rows it removes; a delete that
+    * vanished means a materialize ran, caught via the files it
+    * rewrote).
+    *
+    * `planned` is the manifest the write read and staged `staged`
+    * under, and the first attempt's parent — no tip re-read before
+    * it. `build(tip, under)` makes the manifest committed on `tip`,
+    * taking the staged files from `under(m)`: their stats under the
+    * declared sets of the manifest `m` it declares ([[statsUnder]]).
+    * `addsRows`: the staged rows are new (an update's output),
+    * validated against the CHECK constraints of each tip an attempt
+    * targets whenever that set changed, rather than rows a rewrite
+    * only carries (`setConstraint` never re-checks existing rows, so
+    * a compaction never refuses over one). `label` names the write in
+    * refusals. */
+  def commit(spark: SparkSession, root: Path, planned: TxnLog.Manifest,
+      staged: Staged, targets: Set[String], label: String,
+      addsRows: Boolean)(
+      build: (TxnLog.Manifest, TxnLog.Manifest => Staged) =>
+        TxnLog.Manifest): TxnLog.Committed = {
+    val under = statsUnder(spark, root, staged, planned)
+    val known = planned.deletes.toSet
+    var base = planned
+    var checkedUnder: Map[String, String] = Map.empty
+    var conflicts = 0
+    while (conflicts < 10) {
+      if (addsRows && base.constraints != checkedUnder) {
+        validateConstraints(spark, root, base, staged.paths)
+        checkedUnder = base.constraints
+      }
+      TxnLog.tryCommitManifest(root,
+        build(base, under).copy(version = base.version + 1,
+          parent = base.version),
+        parentHint = Some(base)) match {
+        case Some(v) => return TxnLog.Committed(v, conflicts)
+        case None =>
+          conflicts += 1
+          val tip = TxnLog.tip(root)
+          // Walk the intervening chain; each step's REMOVED set is
+          // what that commit rewrote/deleted.
+          var prevFiles = base.files.toSet
+          TxnLog.versions(root)
+            .filter(v => v > base.version && v <= tip.version)
+            .foreach { v =>
+              val mv = TxnLog.readManifest(root, v)
+              if ((prevFiles -- mv.files).exists(targets)) sys.error(
+                s"concurrent commit $v on $root rewrote files this " +
+                  s"$label targets — it does not commute; retry it")
+              if (mv.deletes.exists(d => !known(d))) sys.error(
+                s"concurrent merge-on-read delete at commit $v on " +
+                  s"$root does not commute with this $label " +
+                  "(fresh-seq output would escape it) — retry it")
+              prevFiles = mv.files.toSet
+            }
+          base = tip
+      }
+    }
+    sys.error(s"$label commit lost 10 races on $root")
+  }
+
+  /** The commit of a merge-on-read update — the delta row-level write
+    * and `GraftTables.updateMor`: `staged`'s data files appended and
+    * the position-delete files `posFiles` added in ONE [[commit]],
+    * whose targets are the files the positions name (a commit that
+    * rewrote one relocated the recorded ordinals; read Spark-free,
+    * small). A write that only deleted is a `delete-mor` commit (the
+    * change feed classifies it as pure deletes); one that wrote rows
+    * is `update-mor` (paired pre/post images). */
+  def commitDelta(spark: SparkSession, root: Path,
+      planned: TxnLog.Manifest, staged: Staged, posFiles: Seq[String],
+      label: String): TxnLog.Committed = {
+    val named = posFiles.flatMap(p => TxnLog.posDeleteNamedFiles(root,
+      TxnLog.DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
+    val action = if (staged.files.isEmpty) "delete-mor" else "update-mor"
+    commit(spark, root, planned, staged, named, label, addsRows = true) {
+      (t, under) =>
+        TxnLog.replaceFiles(root, t, action, Set.empty, under(t))
+          .copy(deletes = t.deletes ++ posFiles.map(p =>
+            TxnLog.DeleteFile(p, "", t.version + 1,
+              Files.size(root.resolve(p)), kind = "pos")))
+    }
+  }
+
+  // CHECK constraints guard every data-adding write (Delta enforces
+  // invariants on UPDATE/MERGE outputs, not just inserts): validate
+  // the staged files — physical columns renamed to the tip's logical
+  // names, the names constraint predicates bind — before publishing.
+  // The rows a copy-on-write update carried verbatim re-validate too;
+  // they were valid when written and stay valid, so the pass costs
+  // one scan of O(written bytes).
+  private def validateConstraints(spark: SparkSession, root: Path,
+      tip: TxnLog.Manifest, files: Seq[String]): Unit = {
+    if (tip.constraints.isEmpty || files.isEmpty) return
+    import org.apache.spark.sql.functions.col
+    val logical = tip.columns.toSeq.flatten
+      .map(c => c.physical -> c.name).toMap
+    val rows = graft.util.ParquetSchema.read(spark,
+      files.map(f => root.resolve(f).toString))
+    TxnLog.checkConstraints(
+      rows.select(rows.columns.toSeq.map(c =>
+        col(c).as(logical.getOrElse(c, c))): _*),
+      tip.constraints)
   }
 
   /** The task-side write under [[stage]]: one parquet per non-empty

@@ -817,6 +817,73 @@ class GraftConnectorSpec extends AnyFunSuite with SparkTestBase {
     assert(TxnLog.tip(tbl).version == v)
   }
 
+  test("CALL graft.update_mor refuses rewritten rows that violate a " +
+      "CHECK constraint and publishes nothing") {
+    val tbl = quartileTable() // ids 1..100, v = id*10
+    GraftTables.registerCatalog(spark)
+    TxnLog.setConstraint(tbl, "v_nonneg", "v >= 0")
+    val tipBefore = TxnLog.tip(tbl).version
+    val e = intercept[Throwable](spark.sql(
+      s"CALL graft.update_mor(table => '$tbl', where => 'id = 7', " +
+        "set_column => 'v', set_expr => '-1')").collect())
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(chain.contains("CHECK constraint"), chain)
+    assert(TxnLog.tip(tbl).version == tipBefore,
+      "a refused update must publish no commit")
+    assert(GraftTables.read(spark, tbl).filter($"id" === 7L)
+      .select("v").as[Long].head() == 70L)
+  }
+
+  test("updateMor REBASES over an append that lands while it stages, " +
+      "and refuses when a targeted file was rewritten") {
+    import java.util.concurrent.atomic.AtomicBoolean
+    // A UDF in the `set` expression runs inside updateMor's staging
+    // job, between its snapshot read and its commit: there it commits
+    // a change staged beforehand, once.
+    def racing(name: String, root: String,
+        files: TxnLog.Manifest => Seq[String]): Unit = {
+      val fired = new AtomicBoolean(false)
+      spark.udf.register(name, udf { (v: Long) =>
+        if (fired.compareAndSet(false, true))
+          TxnLog.commitRetry(java.nio.file.Paths.get(root), "race", files)
+        v + 1L
+      }.asNondeterministic())
+    }
+    // A disjoint append: updateMor lands as the version after it.
+    val tbl = quartileTable() // ids 1..100, v = id*10, 4 files
+    (200L to 204L).map(i => (i, i)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl.resolve("race-app").toString)
+    val appended = TxnLog.parquetsUnder(tbl, "race-app")
+    racing("race_append", tbl.toString, t => t.files ++ appended)
+    val c = GraftTables.updateMor(spark, tbl, "id = 7",
+      Map("v" -> "race_append(v)"))
+    assert(c.version == 2L && c.conflicts == 1, c)
+    assert(TxnLog.readManifest(tbl, 1L).action == "race")
+    val tip = TxnLog.tip(tbl)
+    assert(tip.action == "update-mor" && appended.forall(tip.files.contains))
+    val rows = GraftTables.read(spark, tbl)
+    assert(rows.count() == 105L)
+    assert(rows.filter($"id" === 7L).select("v").as[Long].collect()
+      .toSeq == Seq(71L))
+    assert(rows.filter($"id" >= 200L).count() == 5L)
+    // A rewrite of the file holding id 7: the positions would name
+    // relocated rows, so updateMor refuses and publishes nothing.
+    val tbl2 = quartileTable()
+    val q0 = TxnLog.parquetsUnder(tbl2, "q0")
+    (1L to 25L).map(i => (i, i)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl2.resolve("race-rw").toString)
+    val rewrite = TxnLog.parquetsUnder(tbl2, "race-rw")
+    racing("race_rewrite", tbl2.toString,
+      t => t.files.filterNot(q0.contains) ++ rewrite)
+    val e = intercept[RuntimeException](GraftTables.updateMor(spark,
+      tbl2, "id = 7", Map("v" -> "race_rewrite(v)")))
+    assert(e.getMessage.contains("does not commute"), e.getMessage)
+    assert(TxnLog.tip(tbl2).version == 1L)
+    assert(GraftTables.read(spark, tbl2).filter($"id" === 7L)
+      .select("v").as[Long].head() == 7L)
+  }
+
   test("CALL procedures run table maintenance from SQL: restore, " +
       "optimize, materialize_deletes, expire") {
     val tbl = quartileTable()

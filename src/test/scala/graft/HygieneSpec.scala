@@ -172,6 +172,42 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
         s"calling TxnLog.commitStatsFor directly: $callers")
   }
 
+  test("commits that target planned files rebase or refuse in ONE place") {
+    // A commit that targets files of a planned version — the
+    // compactions, delete materialization, updateMor, the connector's
+    // row-level writes — rebases over disjoint commits and refuses
+    // otherwise in StagedWrite.commit. Five hand-written copies that
+    // refused ANY concurrent commit once drifted from it, so the raw
+    // commit primitive may be called only by the log's own loops
+    // (tryCommit, commitRetryWith, mergeCowByKey), the connector's
+    // copy-on-write DELETE and the shared loop, and no refusal of the
+    // old "planned against v<N>" form may come back.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
+    val lines = java.nio.file.Files.walk(root)
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val rel = root.relativize(f).toString
+        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+          .map(l => rel -> l.trim)
+      }
+    val callPat = """(?<!def )\btryCommitManifest\s*\(""".r
+    val callers = lines
+      .filterNot { case (_, l) => l.startsWith("*") ||
+        l.startsWith("/*") || l.startsWith("//") }
+      .flatMap { case (rel, l) => callPat.findAllMatchIn(l).map(_ => rel) }
+      .groupBy(identity).map { case (rel, hits) => rel -> hits.size }
+    assert(callers == Map(
+        "graft/operators/TxnLog.scala" -> 3,
+        "graft/sources/GraftDataSource.scala" -> 1,
+        "graft/sources/StagedWrite.scala" -> 1),
+      "commit files of a planned version through StagedWrite.commit " +
+        s"instead of calling TxnLog.tryCommitManifest directly: $callers")
+    val stale = lines.filter(_._2.contains("planned against v"))
+    assert(stale.isEmpty, s"refuse-any commit copies: $stale")
+  }
+
   test("pending deletes are applied in ONE place: the connector scan") {
     // Every read of a table version — the log's rewrites, its change
     // feed, the connector's DELETE and UPDATE — goes through the

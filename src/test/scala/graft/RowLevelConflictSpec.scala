@@ -198,4 +198,80 @@ class RowLevelConflictSpec extends AnyFunSuite with SparkTestBase {
       write3.commit(Array[WriterCommitMessage](msg3)))
     assert(e2.getMessage.contains("merge-on-read delete"))
   }
+
+  /** Commit `staged` as a compaction of `planned` through the shared
+    * loop: replace the `targets`, clear only the planned deletes. */
+  private def compactLike(tbl: Path, planned: TxnLog.Manifest,
+      staged: StagedWrite.Staged, targets: Set[String]): TxnLog.Committed =
+    StagedWrite.commit(spark, tbl, planned, staged, targets, "compaction",
+      addsRows = false) { (t, under) =>
+      TxnLog.replaceFiles(tbl, t, "compact", targets, under(t))
+        .copy(deletes = t.deletes.filterNot(planned.deletes.toSet))
+    }
+
+  /** `files` of `planned` rewritten (pending deletes applied) and
+    * staged under `sub`, the way the compactions stage. */
+  private def stageRewrite(tbl: Path, planned: TxnLog.Manifest,
+      files: Seq[String], sub: String): StagedWrite.Staged =
+    StagedWrite.stage(GraftTables.scanFiles(spark, tbl, planned, files)
+      .coalesce(1), tbl, sub, planned)
+
+  test("a compaction-shaped commit REBASES over a disjoint append: the " +
+      "appended file survives") {
+    val (tbl, loFiles, hiFiles) = twoFileTable()
+    val planned = TxnLog.tip(tbl)
+    val staged = stageRewrite(tbl, planned, loFiles, "cmp0")
+    (200L to 210L).map(i => (i, 7L)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl.resolve("app0").toString)
+    val appended = TxnLog.parquetsUnder(tbl, "app0")
+    TxnLog.commitRetry(tbl, "append", t => t.files ++ appended)
+    val c = compactLike(tbl, planned, staged, loFiles.toSet)
+    assert(c == TxnLog.Committed(2L, 1))
+    val tip = TxnLog.tip(tbl)
+    assert(tip.action == "compact")
+    assert(tip.files.toSet == (hiFiles ++ appended ++ staged.paths).toSet)
+    assert(tip.stats(staged.paths.head) == (1L, 50L))
+    assert(GraftTables.read(spark, tbl).count() == 100L + 11L)
+  }
+
+  test("a compaction-shaped commit REFUSES when a merge-on-read delete " +
+      "raced in") {
+    val (tbl, loFiles, _) = twoFileTable()
+    val planned = TxnLog.tip(tbl)
+    val staged = stageRewrite(tbl, planned, loFiles, "cmp1")
+    // The staged rewrite still holds id 5: committing it would
+    // resurrect the row the raced-in delete removes.
+    TxnLog.deleteByKeyMor(spark, tbl, Seq(5L).toDF("id"), "id", "ed")
+    val e = intercept[RuntimeException](
+      compactLike(tbl, planned, staged, loFiles.toSet))
+    assert(e.getMessage.contains("merge-on-read delete"), e.getMessage)
+    assert(TxnLog.latest(tbl).contains(1L))
+    assert(GraftTables.read(spark, tbl).count() == 99L)
+  }
+
+  test("a clear-in-place materialize commit never drops a delete that " +
+      "raced in") {
+    val (tbl, loFiles, hiFiles) = twoFileTable()
+    // v1: delete id 5; v2: every file rewritten past it (id 5 gone),
+    // so the pending delete is pure metadata debt.
+    TxnLog.deleteByKeyMor(spark, tbl, Seq(5L).toDF("id"), "id", "ed0")
+    GraftTables.read(spark, tbl).coalesce(1)
+      .write.parquet(tbl.resolve("cc").toString)
+    TxnLog.commitRetry(tbl, "cow", t =>
+      t.files.filterNot((loFiles ++ hiFiles).contains) ++
+        TxnLog.parquetsUnder(tbl, "cc"))
+    val planned = TxnLog.tip(tbl)
+    assert(planned.version == 2L && planned.deletes.size == 1)
+    // v3: a delete of id 60 races in before the clear commits.
+    TxnLog.deleteByKeyMor(spark, tbl, Seq(60L).toDF("id"), "id", "ed1")
+    val raced = TxnLog.tip(tbl).deletes.filterNot(planned.deletes.toSet)
+    val e = intercept[RuntimeException](compactLike(tbl, planned,
+      StagedWrite.Staged(Seq.empty, TxnLog.CommitStats.empty), Set.empty))
+    assert(e.getMessage.contains("merge-on-read delete"), e.getMessage)
+    val tip = TxnLog.tip(tbl)
+    assert(tip.version == 3L && raced.nonEmpty &&
+      raced.forall(tip.deletes.contains))
+    val rows = GraftTables.read(spark, tbl)
+    assert(rows.count() == 98L && rows.filter($"id" === 60L).isEmpty)
+  }
 }
