@@ -1,6 +1,6 @@
 package graft.infer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.types.{FieldSpec, LogicalType}
@@ -15,12 +15,12 @@ import graft.types.LogicalType._
   * commas stripped), timestamp/date if >80% match the format regexes,
   * else string; all-null columns degrade to string with confidence 0.5.
   *
-  * The mechanism is Spark-native instead of pandas: ONE hash-aggregate
-  * over the sample computes every per-column vote counter in a single
-  * pass (conditional sums, all codegen'd), so the same code path scales
-  * from a 1000-row sample to a full-table profile — at 100 TB you'd feed
-  * it `df.sample(...)` instead of `df.limit(...)` and nothing else
-  * changes.
+  * The mechanism is Spark-native instead of pandas: one projection packs
+  * each string column's six vote conditions into an int of bit flags,
+  * and a collect-limit brings back the first ≤`sampleRows` packed rows
+  * in partition order. That is one job with no shuffle: it scans
+  * partitions one after another and usually reads only the first. The
+  * driver sums the bits into the vote counters.
   */
 object Infer {
 
@@ -58,48 +58,54 @@ object Infer {
 
   private def trimmed(c: String) = trim(col(c))
   private def noComma(c: String) = regexp_replace(trimmed(c), ",", "")
-  private def one(cond: org.apache.spark.sql.Column) =
-    sum(when(cond, 1L).otherwise(0L))
 
-  /** Single-pass vote counters for every string column of `sample`. */
-  def voteCounts(sample: DataFrame, cols: Seq[String]): Map[String, TypeVotes] = {
-    if (cols.isEmpty) return Map.empty
-    val aggs = cols.flatMap { c =>
-      val nn = trimmed(c).isNotNull && trimmed(c) =!= ""
-      Seq(
-        one(nn).as(s"${c}__nn"),
-        one(nn && lower(trimmed(c)).isin(BoolTokens: _*)).as(s"${c}__bool"),
-        one(nn && noComma(c).rlike(IntRe)).as(s"${c}__int"),
-        one(nn && noComma(c).rlike(FloatRe)).as(s"${c}__float"),
-        one(nn && trimmed(c).rlike(DateRe)).as(s"${c}__date"),
-        one(nn && trimmed(c).rlike(TsRe)).as(s"${c}__ts"))
+  /** Bit flags of one column's votes: bit 0 non-blank, then bool, int,
+    * float, date and timestamp; 0 for a null or blank value. */
+  private def packedVotes(c: String): Column = {
+    val votes = Seq(
+      lower(trimmed(c)).isin(BoolTokens: _*),
+      noComma(c).rlike(IntRe),
+      noComma(c).rlike(FloatRe),
+      trimmed(c).rlike(DateRe),
+      trimmed(c).rlike(TsRe))
+    val bits = votes.zipWithIndex.foldLeft(lit(1)) { case (acc, (v, i)) =>
+      acc.bitwiseOR(when(v, 2 << i).otherwise(0))
     }
-    val r = sample.agg(aggs.head, aggs.tail: _*).collect()(0)
-    def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    cols.zipWithIndex.map { case (c, i) =>
-      val b = i * 6
-      c -> TypeVotes(g(b), g(b + 1), g(b + 2), g(b + 3), g(b + 4), g(b + 5))
+    when(trimmed(c).isNotNull && trimmed(c) =!= "", bits).otherwise(0).as(c)
+  }
+
+  /** Vote counters for every string column in `cols`, over the first
+    * ≤`sampleRows` rows of `df` in partition order: one collect-limit
+    * job, summed on the driver. */
+  def voteCounts(
+      df: DataFrame, cols: Seq[String], sampleRows: Int): Map[String, TypeVotes] = {
+    if (cols.isEmpty) return Map.empty
+    val counts = Array.ofDim[Long](cols.size, 6)
+    df.select(cols.map(packedVotes): _*).limit(sampleRows).collect()
+      .foreach { r =>
+        for (i <- cols.indices; b <- 0 until 6)
+          counts(i)(b) += (r.getInt(i) >> b) & 1
+      }
+    cols.zip(counts).map { case (c, v) =>
+      c -> TypeVotes(v(0), v(1), v(2), v(3), v(4), v(5))
     }.toMap
   }
 
   /** infer_types — full inference over a DataFrame. String columns get
-    * the voting heuristic on a ≤`sampleRows` sample; typed columns keep
-    * their Spark type with confidence 1.0. */
+    * the voting heuristic on their first ≤`sampleRows` rows; typed
+    * columns keep their Spark type with confidence 1.0. */
   def inferTypes(df: DataFrame, sampleRows: Int = 1000): Seq[FieldSpec] = {
-    val sample = df.limit(sampleRows).cache()
-    try {
-      val stringCols = df.schema.fields.filter(_.dataType == StringType)
-        .map(_.name).toSeq
-      val votes = voteCounts(sample, stringCols)
-      df.schema.fields.toSeq.map { f =>
-        if (f.dataType == StringType) {
-          val (t, conf) = decide(votes(f.name))
-          FieldSpec(f.name, t, nullable = true, confidence = conf)
-        } else
-          FieldSpec(f.name, LogicalType.fromSpark(f.dataType),
-            f.nullable, confidence = 1.0)
-      }
-    } finally { sample.unpersist(); () }
+    val stringCols = df.schema.fields.filter(_.dataType == StringType)
+      .map(_.name).toSeq
+    val votes = voteCounts(df, stringCols, sampleRows)
+    df.schema.fields.toSeq.map { f =>
+      if (f.dataType == StringType) {
+        val (t, conf) = decide(votes(f.name))
+        FieldSpec(f.name, t, nullable = true, confidence = conf)
+      } else
+        FieldSpec(f.name, LogicalType.fromSpark(f.dataType),
+          f.nullable, confidence = 1.0)
+    }
   }
 
   /** column_stats — null count, distinct count, numeric min/max and up to
@@ -189,7 +195,7 @@ object Infer {
       df: DataFrame, maxRows: Int = 50): Seq[FieldSpec] = {
     val asStrings = df.select(
       df.columns.map(c => col(c).cast(StringType).as(c)).toSeq: _*)
-    inferTypes(asStrings.limit(maxRows), sampleRows = maxRows)
+    inferTypes(asStrings, sampleRows = maxRows)
   }
 
   /** sample_rows_synthesis — fabricate N rows cycling each field's sample

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import graft.types.{FieldOverride, FieldSpec}
 
@@ -58,16 +60,25 @@ object Bronze {
   /** sink_parquet_append_partitioned — bronze sink: append, partitioned by
     * `_ingestion_date` (`bronze_ingestion.py:198-206`; parquet per the
     * Kafka path `dag_generator.py:440-448`). Partitioning by ingestion
-    * date keeps per-day reprocessing pruned at 100 TB. */
-  def writeBronze(df: DataFrame, path: String): Unit =
-    // Repartition on the partition column first: without it every task
-    // writes a file into every date directory it happens to see
-    // (tasks × dates tiny files — at scale, millions). After the
-    // shuffle each date lands in one task → one well-sized file per
-    // date; AQE coalesces small dates together.
-    df.repartition(col("_ingestion_date"))
+    * date keeps per-day reprocessing pruned at 100 TB.
+    *
+    * Each date lands in one task, so each run writes one well-sized file
+    * per date, not one per task and date (tasks × dates tiny files; at
+    * scale, millions). A frame stamped with one literal date (as
+    * `metadataStamp` does) has one date, so it is written by one task
+    * with no shuffle; the source is then read and parsed in that task
+    * too. Other frames hash-repartition on the date first, and AQE
+    * coalesces small dates together. */
+  def writeBronze(df: DataFrame, path: String): Unit = {
+    val oneDate = df.queryExecution.optimizedPlan match {
+      case Project(list, _) =>
+        list.exists { case Alias(e, "_ingestion_date") => e.foldable; case _ => false }
+      case _ => false
+    }
+    (if (oneDate) df.coalesce(1) else df.repartition(col("_ingestion_date")))
       .write
       .mode("append")
       .partitionBy("_ingestion_date")
       .parquet(path)
+  }
 }

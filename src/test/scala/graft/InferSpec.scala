@@ -66,6 +66,19 @@ class InferSpec extends AnyFunSuite with SparkTestBase {
     assert(fs.forall(_.confidence == 1.0))
   }
 
+  test("inferTypes votes in one collect-limit job: 1 task, no shuffle") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(0, 4000, 1, 4).select(
+      col("id").cast("string").as("n"),
+      (col("id") % 3 === 0).cast("string").as("b"))
+    assert(df.rdd.getNumPartitions == 4)
+    val (fs, jobs) = jobsRun(Infer.inferTypes(df))
+    assert(fs.map(f => f.name -> f.tpe.name) ==
+      Seq("n" -> "long", "b" -> "boolean"))
+    assert(jobs.size == 1, jobs)
+    assert(jobs.head.tasks == 1 && jobs.head.shuffleBytes == 0L, jobs)
+  }
+
   test("columnStats: nulls, distinct, numeric min/max, samples") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

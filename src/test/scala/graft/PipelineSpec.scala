@@ -1,17 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Bronze
 import graft.pipeline.Pipeline
 import graft.sources.Sources
 import graft.transform.Step
@@ -20,7 +19,8 @@ import graft.util.{ParquetSchema, Scratch}
 /** The medallion bookkeeping: layer counts, files and bytes come off the
   * parquet footers, `scanParquet` takes its schema from a footer, and
   * `preview` collects the limit before it counts. Each result must equal
-  * what a plain Spark read of the same directory says. */
+  * what a plain Spark read of the same directory says. Bronze writes one
+  * file per ingestion date, and a one-date run does it without a shuffle. */
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   private def source(n: Long): DataFrame =
@@ -42,18 +42,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   /** Spark jobs started while `f` runs (listener events drain first). */
   private def jobsDuring[A](f: => A): (A, Int) = {
-    Thread.sleep(500)
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = f
-      Thread.sleep(500)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (a, jobs) = jobsRun(f)
+    (a, jobs.size)
   }
 
   private def fields(st: StructType): Seq[(String, String, Boolean)] =
@@ -207,5 +197,42 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val (p, jobs) = jobsDuring(Pipeline.preview(df, 1000))
     assert(p.totalRows == 48 && p.rows.size == 48)
     assert(jobs == 1, s"$jobs jobs")
+  }
+
+  /** `source`'s columns over exactly four partitions, with no shuffle. */
+  private def fourPartitions(n: Long): DataFrame =
+    spark.range(0, n, 1, 4).select(col("id"), (col("id") % 7).as("k"),
+      concat(lit("v"), col("id").cast("string")).as("s"))
+
+  /** Data files in each `_ingestion_date=` directory under `dir`. */
+  private def filesPerDate(dir: String): Map[String, Int] =
+    partFiles(dir).groupBy(_.getParent.getFileName.toString)
+      .map { case (d, fs) => d -> fs.size }
+
+  test("Pipeline.run writes its one-date bronze in one job, with no shuffle") {
+    val root = Scratch.dir("graft_pipe_bronze_one").toString
+    val src = fourPartitions(4000)
+    assert(src.rdd.getNumPartitions == 4)
+    val (r, jobs) = jobsRun(Pipeline.run(spark, src, silver, gold, root))
+    assert(r.status == Pipeline.Status.GoldReady)
+    val bronze = jobs.filter(_.callStack.contains("Bronze$.writeBronze"))
+    assert(bronze.size == 1, jobs)
+    assert(bronze.map(_.shuffleBytes).sum == 0L, bronze)
+    assert(filesPerDate(s"$root/bronze") ==
+      Map("_ingestion_date=2026-01-01" -> 1))
+    assert(r.layers.head.outputRows == 4000 && r.layers.head.outputFiles == 1)
+  }
+
+  test("writeBronze of a multi-date frame still writes one file per date") {
+    val dir = Scratch.dir("graft_pipe_bronze_dates").resolve("b").toString
+    val df = fourPartitions(3000).withColumn("_ingestion_date",
+      date_add(lit(java.sql.Date.valueOf("2026-01-01")),
+        (col("id") % 3).cast("int")))
+    Bronze.writeBronze(df, dir)
+    assert(filesPerDate(dir) == Map(
+      "_ingestion_date=2026-01-01" -> 1,
+      "_ingestion_date=2026-01-02" -> 1,
+      "_ingestion_date=2026-01-03" -> 1))
+    assert(Sources.scanParquet(spark, dir).count() == 3000)
   }
 }

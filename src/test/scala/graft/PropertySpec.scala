@@ -24,6 +24,77 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       }
   }
 
+  /** The vote counters as one aggregate over the whole sample: the
+    * single-pass form `Infer.voteCounts` had before it packed the votes
+    * into bit flags, kept here as the reference. */
+  private def aggregateVotes(
+      sample: org.apache.spark.sql.DataFrame, c: String): Infer.TypeVotes = {
+    import org.apache.spark.sql.functions._
+    val t = trim(col(c))
+    val noComma = regexp_replace(t, ",", "")
+    val nn = t.isNotNull && t =!= ""
+    def one(cond: org.apache.spark.sql.Column) =
+      sum(when(cond, 1L).otherwise(0L))
+    val r = sample.agg(
+      one(nn),
+      one(nn && lower(t).isin(Infer.BoolTokens: _*)),
+      one(nn && noComma.rlike("^[+-]?[0-9]+$")),
+      one(nn && noComma.rlike(
+        "^[+-]?(([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?|(?i:inf(inity)?|nan))$")),
+      one(nn && t.rlike(
+        "^([0-9]{4}-[0-9]{2}-[0-9]{2}|[0-9]{2}/[0-9]{2}/[0-9]{4}|[0-9]{2}-[0-9]{2}-[0-9]{4})$")),
+      one(nn && t.rlike(
+        "^([0-9]{4}-[0-9]{2}-[0-9]{2}[T ][0-9]{2}:[0-9]{2}(:[0-9]{2}(\\.[0-9]+)?)?|[0-9]{2}/[0-9]{2}/[0-9]{4} [0-9]{2}:[0-9]{2}(:[0-9]{2})?)$"))
+    ).collect()(0)
+    def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    Infer.TypeVotes(g(0), g(1), g(2), g(3), g(4), g(5))
+  }
+
+  test("packed votes equal the one-aggregate count on every vote edge") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    def d(n: Int) = Gen.listOfN(n, Gen.numChar).map(_.mkString)
+    val grouped = Gen.chooseNum(-9999999L, 9999999L)
+      .map(n => "%,d".formatLocal(java.util.Locale.US, n))
+    val signed = for {
+      s <- Gen.oneOf("", "+", "-"); n <- Gen.chooseNum(0L, 1000000L)
+    } yield s"$s$n"
+    val float = for {
+      s <- Gen.oneOf("", "+", "-"); m <- Gen.oneOf("1.5", "3.", ".25", "7")
+      e <- Gen.oneOf("", "e4", "E-2", "e+10", "e")
+    } yield s"$s$m$e"
+    val special = Gen.oneOf("inf", "-Infinity", "+INF", "NaN", "nan", "infin")
+    val date = for { y <- d(4); m <- d(2); dd <- d(2); shape <- Gen.choose(0, 2) }
+      yield Seq(s"$y-$m-$dd", s"$m/$dd/$y", s"$dd-$m-$y")(shape)
+    val ts = for {
+      y <- d(4); mo <- d(2); dd <- d(2); h <- d(2); mi <- d(2); s <- d(2)
+      shape <- Gen.choose(0, 4)
+    } yield Seq(s"$y-$mo-${dd}T$h:$mi", s"$y-$mo-$dd $h:$mi:$s",
+      s"$y-$mo-$dd $h:$mi:$s.123", s"$mo/$dd/$y $h:$mi",
+      s"$mo/$dd/$y $h:$mi:$s")(shape)
+    val bool = for {
+      tok <- Gen.oneOf(Infer.BoolTokens)
+      ups <- Gen.listOfN(tok.length, Gen.oneOf(true, false))
+    } yield tok.zip(ups).map { case (ch, u) => if (u) ch.toUpper else ch }.mkString
+    val other = Gen.oneOf("", " ", "\t", "  \t ", "café", "日本語", "Ünïcödé",
+      "1,2.5", "--1", "2024-1-5", "abc")
+    val value = for {
+      v <- Gen.frequency(3 -> grouped, 3 -> signed, 3 -> float, 1 -> special,
+        2 -> date, 2 -> ts, 3 -> bool, 2 -> other)
+      pre <- Gen.oneOf("", "", "", " ", "  ", "\t")
+      post <- Gen.oneOf("", "", "", " ", "\t", "\n")
+      isNull <- Gen.frequency(1 -> true, 19 -> false)
+    } yield if (isNull) null else pre + v + post
+    val column = Gen.chooseNum(0, 1000).flatMap(Gen.listOfN(_, value))
+    val schema = StructType(Seq(StructField("c", StringType)))
+    samples(column, 25).foreach { vs =>
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(vs.map(Row(_)), 1), schema)
+      assert(Infer.voteCounts(df, Seq("c"), 1000)("c") ==
+        aggregateVotes(df, "c"), vs.take(10))
+    }
+  }
+
   test("decide() never exceeds confidence 1.0 for consistent votes") {
     val g = for {
       nn <- Gen.chooseNum(0L, 100L)

@@ -1,6 +1,18 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+/** One Spark job seen by [[SparkTestBase.jobsRun]]: the call stack of
+  * the SQL execution it ran under ("" outside one), its finished tasks
+  * and the shuffle bytes they wrote. */
+final case class JobRun(callStack: String, tasks: Int, shuffleBytes: Long) {
+  override def toString: String = s"JobRun($tasks tasks, $shuffleBytes shuffle bytes)"
+}
 
 /** Shared test session (one per JVM; suites run sequentially). */
 trait SparkTestBase {
@@ -13,4 +25,45 @@ trait SparkTestBase {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The Spark jobs started while `f` runs, in start order (listener
+    * events drain first). */
+  def jobsRun[A](f: => A): (A, Seq[JobRun]) = {
+    Thread.sleep(500)
+    val stacks = mutable.Map.empty[Long, String]
+    val jobs = mutable.LinkedHashMap.empty[Int, (Option[Long], Int, Long)]
+    val jobOfStage = mutable.Map.empty[Int, Int]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          synchronized(stacks(s.executionId) = s.details)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+        val exec = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map(_.toLong)
+        jobs(js.jobId) = (exec, 0, 0L)
+        js.stageIds.foreach(jobOfStage(_) = js.jobId)
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
+        jobOfStage.get(te.stageId).foreach { j =>
+          val (exec, tasks, bytes) = jobs(j)
+          val written = Option(te.taskMetrics)
+            .fold(0L)(_.shuffleWriteMetrics.bytesWritten)
+          jobs(j) = (exec, tasks + 1, bytes + written)
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = f
+      Thread.sleep(500)
+      listener.synchronized {
+        (a, jobs.values.toSeq.map { case (exec, tasks, bytes) =>
+          JobRun(exec.flatMap(stacks.get).getOrElse(""), tasks, bytes)
+        })
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
