@@ -2778,12 +2778,16 @@ object SourceSinkQueries {
     * COW upserts, one delete, one pure-insert append — all with
     * DISJOINT key sets, so the serial order cannot change the final
     * table) run [[TxnLog.mergeCowByKey]] on real threads, with a
-    * Phaser barrier in the `onPlanned` hook. Each round, every still-
-    * active writer reads the SAME tip, the barrier releases, and all
-    * race the same put-if-absent — exactly one wins, every loser
-    * replans against the new tip (abandoning its rewrite: the
-    * serializable-COW discipline, not file-set union). Rounds shrink
-    * 4 → 3 → 2 → 1, so total detected conflicts is exactly
+    * Phaser barrier in the `onPlanned` hook, which fires once per
+    * commit attempt. Each round, every still-active writer holds the
+    * SAME tip, the barrier releases, and all race the same
+    * put-if-absent — exactly one wins. Each loser takes one of two
+    * paths through `StagedWrite.commit`: when the winner left its
+    * affected files alive and added none its key range may reach, it
+    * rebases its staged files onto the new tip; otherwise it abandons
+    * its rewrite and replans against the new tip (the serializable-COW
+    * discipline, not file-set union). Rounds
+    * shrink 4 → 3 → 2 → 1, so total detected conflicts is exactly
     * 4·3/2 = 6 and the log is v0..v4, parent-chained. The final
     * table — read back through the connector — equals the sequential
     * replay of all four batches in ANY order (oracle-replayed), with

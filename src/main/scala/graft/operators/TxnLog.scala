@@ -52,16 +52,19 @@ import graft.sources.GraftTables
   * - **Optimistic concurrency.** A writer reads the latest version V,
   *   computes its new file set against V's manifest, and tries to
   *   commit V+1. A concurrent committer winning V+1 surfaces as the
-  *   put-if-absent failure, and the loser takes one of three paths.
+  *   put-if-absent failure, and the loser takes one of two paths.
   *   Append-shaped commits (appends, inserts, metadata commits)
   *   re-read the tip, REBASE onto it and retry ([[commitRetryWith]]).
-  *   Commits that target files of a planned version (the compactions,
-  *   delete materialization, `GraftTables.updateMor`, the connector's
-  *   row-level writes) rebase over intervening commits that left those
-  *   files alive and added no merge-on-read delete, and refuse loudly
-  *   otherwise ([[graft.sources.StagedWrite.commit]]).
-  *   [[mergeCowByKey]] and the connector's copy-on-write DELETE
-  *   REPLAN from data against the new tip.
+  *   Commits that target files of a planned version ([[mergeCowByKey]],
+  *   the connector's copy-on-write DELETE and row-level writes, the
+  *   compactions, delete materialization, `GraftTables.updateMor`)
+  *   rebase over intervening commits that left those files alive and
+  *   added no merge-on-read delete
+  *   ([[graft.sources.StagedWrite.commit]]); the merge also replans
+  *   over a commit other than a blind append that added files in its
+  *   key range. Any other intervening commit does not commute: the
+  *   merge and the DELETE replan from data against the new tip, every
+  *   other such write refuses loudly.
   * - **Readers pin a version.** [[readVersion]] resolves one manifest
   *   and reads exactly its files — later commits are invisible
   *   (snapshot isolation), and a pinned read never sees a torn table
@@ -961,6 +964,14 @@ object TxnLog {
     tryCommitManifest(table, Manifest(parent + 1, parent, action, files,
       stats, statsKey, partitions, columns))
 
+  /** The bound on commit attempts of every commit loop, and on the
+    * plans of a rewrite that replans after a non-commuting race. */
+  val MaxCommitAttempts: Int = 10
+
+  /** The output file size a copy-on-write rewrite fans out to
+    * ([[rewriteFanOut]]) unless its caller names another. */
+  val TargetFileBytes: Long = 128L << 20
+
   /** The tip of a table not yet created: no files, nothing declared. */
   val PreCreate: Manifest = Manifest(-1L, -2L, "none", Seq.empty)
 
@@ -990,14 +1001,13 @@ object TxnLog {
     * may call [[abortCommit]] to finish as a no-op: the returned
     * `Committed` then names the tip it aborted against. */
   def commitRetryWith(
-      table: Path, build: Manifest => Manifest,
-      maxAttempts: Int = 10): Committed = {
+      table: Path, build: Manifest => Manifest): Committed = {
     var conflicts = 0
     // Footer row counts survive commit retries: a rebase re-reads the
     // tip, not the new files' footers (files are immutable once
     // staged, so a cached count can never go stale).
     val rowsCache = scala.collection.mutable.Map.empty[String, Long]
-    while (conflicts < maxAttempts) {
+    while (conflicts < MaxCommitAttempts) {
       val t = tip(table)
       val next0 =
         try build(t).copy(version = t.version + 1, parent = t.version)
@@ -1018,7 +1028,7 @@ object TxnLog {
         case None => conflicts += 1
       }
     }
-    sys.error(s"commit lost $maxAttempts races on $table")
+    sys.error(s"commit lost $MaxCommitAttempts races on $table")
   }
 
   /** Commit with rebase-and-retry: `filesFor` receives the CURRENT
@@ -1033,7 +1043,6 @@ object TxnLog {
   def commitRetry(
       table: Path, action: String,
       filesFor: Manifest => Seq[String],
-      maxAttempts: Int = 10,
       statsFor: Manifest => Map[String, (Long, Long)] =
         _ => Map.empty,
       statsKey: Option[String] = None): Committed =
@@ -1049,7 +1058,7 @@ object TxnLog {
         // generic commit must never be the thing that drops them (the
         // tryCommitManifest guard would refuse it anyway).
         deletes = t.deletes)
-    }, maxAttempts)
+    })
 
   /** Map an `input_file_name()` URI back to its table-relative
     * manifest path by RELATIVIZING the decoded path against the table
@@ -1099,7 +1108,8 @@ object TxnLog {
       .map { r =>
         val rel = attributeFile(table, r.getString(0), files)
         if (r.isNullAt(1) || r.isNullAt(2)) rel -> EmptyRange
-        else rel -> (r.getLong(1), r.getLong(2))
+        else rel -> (r.getAs[Number](1).longValue,
+          r.getAs[Number](2).longValue)
       }.toMap
   }
 
@@ -1147,21 +1157,8 @@ object TxnLog {
     if (files.isEmpty || cols.isEmpty) return cols.map(_ -> Map.empty[String, (Long, Long)]).toMap
     val df = graft.util.ParquetSchema.read(spark,
       files.map(f => table.resolve(f).toString))
-    cols.foreach { c =>
-      val field = df.schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${df.schema.fieldNames.mkString("[", ", ", "]")}"))
-      field.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => ()
-        case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
-      }
-    }
+    cols.foreach(graft.sources.WriterStats.requireIntegral(df.schema,
+      "colStats column", _))
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("bigint")).as(s"mn_$c"),
       max(col(c).cast("bigint")).as(s"mx_$c")))
@@ -1322,24 +1319,10 @@ object TxnLog {
       return CommitStats.empty
     val df = graft.util.ParquetSchema.read(spark,
       files.map(f => table.resolve(f).toString))
-    // colStatsFor's integral contract, enforced identically: manifest
-    // bounds compare as BIGINT, so a non-integral declaration must
-    // refuse here, before it can reach a manifest.
-    colStatCols.foreach { c =>
-      val field = df.schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"colStats column `$c` does not exist in the " +
-          s"table schema ${df.schema.fieldNames.mkString("[", ", ", "]")}"))
-      field.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => ()
-        case other => sys.error(
-          s"colStats column `$c` has non-integral type " +
-            s"${other.simpleString}: manifest bounds compare as BIGINT, " +
-            "so only byte/short/int/long columns may be declared")
-      }
-    }
+    // colStatsFor's integral contract: a non-integral declaration
+    // refuses here, before it can reach a manifest.
+    colStatCols.foreach(graft.sources.WriterStats.requireIntegral(
+      df.schema, "colStats column", _))
     ndvCols0.foreach { c =>
       require(df.schema.fieldNames.contains(c),
         s"ndv column `$c` does not exist in the table schema " +
@@ -1519,11 +1502,8 @@ object TxnLog {
   def deleteByKeyMor(spark: SparkSession, table: Path,
       keys: DataFrame, key: String, subdir: String): Committed = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val kt = keys.schema(key).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(kt),
-      s"deleteByKeyMor key '$key' must be integral, got $kt — " +
-        "equality deletes share the statsKey convention")
+    graft.sources.WriterStats.requireIntegral(keys.schema,
+      "deleteByKeyMor key", key)
     val t0 = tip(table)
     require(t0.version >= 0L,
       s"deleteByKeyMor needs an existing table at $table")
@@ -1663,7 +1643,10 @@ object TxnLog {
     * the appending ones, which replace nothing (`insert`'s append,
     * both arms of `GraftTables.createFrom` — the create from
     * [[PreCreate]] — `GraftTables.updateMor` and the delta row-level
-    * write). The file list is
+    * write). Each commits through one of the log's two paths:
+    * `insert` and `createFrom` through [[commitRetryWith]], every
+    * other one through [[graft.sources.StagedWrite.commit]]. The file
+    * list is
     * `t.files − replaced ++ s.paths`; every per-file map (`stats`,
     * `colStats`, `ndv`, `rows`, `sizes`, `partitions`, `seqs`) is
     * `t`'s entries minus the replaced files' plus the staged files',
@@ -1716,7 +1699,7 @@ object TxnLog {
     * merge-on-read debt is repaid at O(affected bytes), not a full
     * compaction. */
   def materializeDeletes(spark: SparkSession, table: Path,
-      subdir: String, targetFileBytes: Long = 128L << 20): Committed = {
+      subdir: String, targetFileBytes: Long = TargetFileBytes): Committed = {
     val t0 = tip(table)
     if (t0.deletes.isEmpty) return Committed(t0.version, 0)
     // Equality deletes target by sequence; position deletes exactly
@@ -1766,40 +1749,55 @@ object TxnLog {
     * `ceil(affectedBytes / targetFileBytes)` range-partitioned output
     * files, so a merge touching many files does not funnel through
     * one write task. Old files survive for time travel until expiry.
+    * `key` must be integral (byte/short/int/long): manifest bounds
+    * are BIGINT.
     *
-    * `onPlanned(attempt)` fires after the tip is read and before this
-    * attempt commits — the staging hook deterministic race tests use
-    * to interleave a competing committer. */
+    * The merge plans and stages once, then commits through
+    * [[graft.sources.StagedWrite.commit]] — of the log's two commit
+    * paths, the one for writes that target planned files — with the
+    * affected files as its targets: a lost race against a commit that
+    * left them alive rebases (a key a concurrent blind append also
+    * inserted is then ordered "merge, then append", Delta's
+    * WriteSerializable outcome), and only a non-commuting one REPLANS
+    * against the new tip — one that rewrote an affected file, added a
+    * merge-on-read delete, or (not being a blind `append`) added a
+    * file whose key range may reach the batch's, as a concurrent
+    * merge inserting the same key does.
+    * `onPlanned(attempt)` fires once per commit attempt, after staging
+    * and before that attempt commits — the hook deterministic race
+    * tests use to interleave a competing committer. */
   def mergeCowByKey(
       spark: SparkSession, table: Path, batch: DataFrame,
-      key: String, subdir: String, maxAttempts: Int = 10,
-      targetFileBytes: Long = 128L << 20,
+      key: String, subdir: String,
+      targetFileBytes: Long = TargetFileBytes,
       onPlanned: Int => Unit = _ => ()): Committed = {
     import org.apache.spark.sql.functions._
+    graft.sources.WriterStats.requireIntegral(batch.schema,
+      "mergeCowByKey key", key)
     val bounds = batch.agg(min(col(key)), max(col(key))).head()
     if (bounds.isNullAt(0) || bounds.isNullAt(1))
       return Committed(latest(table).getOrElse(
         sys.error(s"mergeCowByKey needs an existing table at $table")), 0)
-    val (bmn, bmx) = (bounds.getLong(0), bounds.getLong(1))
+    val (bmn, bmx) = (bounds.getAs[Number](0).longValue,
+      bounds.getAs[Number](1).longValue)
     // Upserted rows must satisfy the table's CHECK constraints (one
-    // pass, pre-merge; tombstones are exempt — they remove rows). If a
-    // constraint commit races in, the rebase loop below re-validates
-    // against the tip it rebases onto.
+    // pass, before any file is written; tombstones are exempt — they
+    // remove rows), re-checked when an attempt lands on a tip with a
+    // different constraint set. Carried rows are never re-validated.
     val upserts = batch.filter(col("op") =!= "delete").drop("op")
-    var consChecked = tip(table).constraints
-    checkConstraints(upserts, consChecked)
-    val valueCols = batch.columns.filterNot(c => c == key || c == "op")
-    var attempt = 0
-    var conflicts = 0
-    while (attempt < maxAttempts) {
-      val tipVersion = latest(table).getOrElse(
-        sys.error(s"mergeCowByKey needs an existing table at $table"))
-      val tip = readManifest(table, tipVersion)
-      if (tip.constraints != consChecked) {
-        checkConstraints(upserts, tip.constraints)
-        consChecked = tip.constraints
+    var checkedUnder: Option[Map[String, String]] = None
+    def check(t: Manifest): Unit =
+      if (!checkedUnder.contains(t.constraints)) {
+        checkConstraints(upserts, t.constraints)
+        checkedUnder = Some(t.constraints)
       }
-      onPlanned(attempt)
+    val valueCols = batch.columns.filterNot(c => c == key || c == "op")
+    var attempts = 0
+    val committed = graft.sources.StagedWrite.replanning { plan =>
+      val t0 = tip(table)
+      require(t0.version >= 0L,
+        s"mergeCowByKey needs an existing table at $table")
+      check(t0)
       // Affected-file planning is METADATA-ONLY when the tip's
       // manifest DECLARES stats for this key (`statsKey` — set by
       // every merge commit, so one merge heals the chain) AND every
@@ -1811,24 +1809,23 @@ object TxnLog {
       // uncovered files as unaffected, which would insert duplicate
       // keys rather than update them.
       val ranges: Map[String, (Long, Long)] =
-        if (tip.statsKey.contains(key) &&
-            tip.files.forall(tip.stats.contains)) tip.stats
-        else keyStats(spark, table, tip.files, key)
-      val affected = tip.files.filter { f =>
+        if (t0.statsKey.contains(key) && t0.files.forall(t0.stats.contains))
+          t0.stats
+        else keyStats(spark, table, t0.files, key)
+      val affected = t0.files.filter { f =>
         ranges.get(f).exists { case (kmin, kmax) =>
           kmin <= bmx && kmax >= bmn
         }
       }.toSet
       val merged =
-        if (affected.isEmpty)
-          batch.filter(col("op") =!= "delete").drop("op")
+        if (affected.isEmpty) upserts
         else
           // The scan applies any PENDING deletes to the affected
           // files before merging — the rewrite's new files get a
           // fresh seq, so those deletes stop applying to them exactly
           // when their effect is baked in. Untouched files keep the
-          // delete list (carried below) by seq scoping.
-          GraftTables.scanFiles(spark, table, tip, affected.toSeq.sorted)
+          // delete list (carried by replaceFiles) by seq scoping.
+          GraftTables.scanFiles(spark, table, t0, affected.toSeq.sorted)
             .as("t")
             .join(batch.as("s"), Seq(key), "full_outer")
             .filter(col("s.op").isNull || col("s.op") =!= "delete")
@@ -1839,33 +1836,57 @@ object TxnLog {
       // coalesce(1) would funnel a many-file rewrite through one
       // task. Range partitioning keys the output files so their
       // manifest stats stay disjoint.
-      val nOut = rewriteFanOut(table, tip, affected, targetFileBytes)
+      val nOut = rewriteFanOut(table, t0, affected, targetFileBytes)
       val out = if (nOut <= 1) merged.coalesce(1)
         else merged.repartitionByRange(nOut, col(key))
-      val attemptDir = if (attempt == 0) subdir else s"$subdir-r$attempt"
-      // The new files' stats are declared under the merge key; the
-      // survivors keep the (possibly bootstrapped) ranges, so every
-      // merge commit leaves a fully stats-bearing tip.
-      val keyed = tip.copy(stats = ranges, statsKey = Some(key))
-      val staged = graft.sources.StagedWrite.stage(
-        out, table, attemptDir, keyed)
-      // A COW rewrite does NOT commute the way an append does: losing
-      // the race means the files this attempt read (and replaced) may
-      // no longer be the tip's — blindly unioning file sets would
-      // double-apply any overlapping rewrite. So the commit targets
-      // EXACTLY the observed tip version; a conflict abandons this
-      // attempt's files (left for vacuum, like any aborted write) and
-      // REPLANS the whole merge against the new tip — the
-      // serializable-writer discipline, not just retry-the-rename.
-      tryCommitManifest(table,
-        replaceFiles(table, keyed, "merge", affected, staged)
-          .copy(version = tipVersion + 1, parent = tipVersion),
-        parentHint = Some(tip)) match {
-        case Some(v) => return Committed(v, conflicts)
-        case None => conflicts += 1; attempt += 1
+      // The new files' stats are declared under the merge key. The
+      // tip the commit builds on declares it too, and survivors keep
+      // their bounds under it: the planned files' (possibly
+      // bootstrapped) ranges, and what a tip already declaring the key
+      // holds for the rest (a tip declaring another key carries none:
+      // unknown, never wrong). So a merge that commits on its planned
+      // tip leaves a fully stats-bearing one; files a rebase adopts keep
+      // what their tip had. `planned` differs from the stored tip only
+      // in `statsKey`, so it stays a faithful parent for the commit's
+      // delta encoding.
+      val planned = t0.copy(statsKey = Some(key))
+      def keyed(t: Manifest): Manifest = t.copy(statsKey = Some(key),
+        stats = (t.stats -- t0.files).filter(_ => t.statsKey.contains(key))
+          ++ ranges.view.filterKeys(t.files.toSet))
+      // A rebase adopts the files of every commit since `t0`. A blind
+      // append's rows are ordered after the merge (WriteSerializable);
+      // a file any other commit added where the batch's keys may live
+      // (its range under `key` overlaps them, or is unknown) holds
+      // rows this plan never read, so the merge replans to read them
+      // — two merges inserting one key must not both insert it.
+      var seen = t0
+      def requireUnreached(t: Manifest): Unit =
+        (seen.version + 1 to t.version).foreach { v =>
+          val mv = readManifest(table, v)
+          val added = mv.files.filterNot(seen.files.toSet)
+          if (mv.action != "append" && added.exists(f =>
+              !mv.statsKey.contains(key) || mv.stats.get(f).forall {
+                case (kmin, kmax) => kmin <= bmx && kmax >= bmn
+              }))
+            throw new graft.sources.StagedWrite.Conflict(
+              s"concurrent ${mv.action} at commit $v on $table added " +
+                "files in this merge's key range — it does not " +
+                "commute; replan it")
+          seen = mv
+        }
+      val staged = graft.sources.StagedWrite.stage(out, table,
+        if (plan == 0) subdir else s"$subdir-r$plan", planned)
+      graft.sources.StagedWrite.commit(spark, table, planned, staged,
+        affected, "merge", addsRows = false) { (t, under) =>
+        requireUnreached(t)
+        check(t)
+        onPlanned(attempts)
+        attempts += 1
+        val declared = keyed(t)
+        replaceFiles(table, declared, "merge", affected, under(declared))
       }
     }
-    sys.error(s"merge lost $maxAttempts races on $table")
+    committed.copy(conflicts = attempts - 1)
   }
 
   /** Compaction as a pure manifest swap: the tip's contents coalesced
@@ -2476,7 +2497,7 @@ object TxnLog {
     * Fewer than two qualifying files is a no-op (nothing to pack). */
   def compactSmall(spark: SparkSession, table: Path, subdir: String,
       minFileBytes: Long = 32L << 20,
-      targetFileBytes: Long = 128L << 20): Committed = {
+      targetFileBytes: Long = TargetFileBytes): Committed = {
     val t0 = tip(table)
     val small = t0.files.filter(f => sizeOf(table, t0, f) < minFileBytes)
     if (small.size < 2) return Committed(t0.version, 0)

@@ -544,16 +544,18 @@ object GraftTables {
     * the non-matching rows kept (`pred IS TRUE` rows drop — NULL
     * predicates keep their rows, SQL DELETE semantics), and the commit
     * is (tip − affected) ∪ rewritten. A predicate whose bounds miss
-    * every file is a metadata-only no-op; a lost commit race REPLANS
-    * against the new tip (the serializable-COW discipline); a
-    * rewrite left empty (everything in the file matched) is dropped
-    * from the file set. Old files survive for time travel — at 100 TB
-    * this is the GDPR-delete path: O(affected files) work, through
-    * plain SQL. */
+    * every file is a metadata-only no-op; a rewrite left empty
+    * (everything in the file matched) is dropped from the file set.
+    * It plans from `snap`'s version and stages once, then commits
+    * through [[StagedWrite.commit]] — of the log's two commit paths,
+    * the one for writes that target planned files — with the affected
+    * files as its targets: a lost race against a commit that left them
+    * alive rebases (rows a concurrent append landed are ordered after
+    * the delete), and only a non-commuting one REPLANS against the new
+    * tip. Old files survive for time travel — at 100 TB this is the
+    * GDPR-delete path: O(affected files) work, through plain SQL. */
   def deleteWhere(snap: GraftSnapshot,
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      targetFileBytes: Long = 128L << 20,
-      maxAttempts: Int = 10): Unit = {
+      filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     import org.apache.spark.sql.functions.lit
     val spark = SparkSession.active
     val root = snap.root
@@ -636,42 +638,39 @@ object GraftTables {
           s"${stagingCounter.incrementAndGet()}")
       return
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val tipVersion = TxnLog.latest(root).getOrElse(
-        sys.error(s"DELETE on a version-less table at $root"))
-      val tip = TxnLog.readManifest(root, tipVersion)
+    StagedWrite.replanning { plan =>
+      val tip = if (plan == 0) snap.manifest else TxnLog.tip(root)
+      require(tip.version >= 0L, s"DELETE on a version-less table at $root")
       val affected = GraftPruning.prune(tip, exprs).toSet
-      if (affected.isEmpty) return // no file can match: metadata no-op
-      // The scan applies any PENDING deletes to the affected files
-      // before the rewrite — a raw read would bake deleted rows into
-      // fresh-seq files (silent resurrection). The list is carried
-      // below; untouched files stay scoped by sequence.
-      val keep = scanFiles(spark, root, tip, affected.toSeq.sorted)
-        .filter(!pred.eqNullSafe(lit(true)))
-      val nOut = TxnLog.rewriteFanOut(root, tip, affected, targetFileBytes)
-      val out = if (nOut <= 1) keep.coalesce(1) else keep.repartition(nOut)
-      val attemptDir = s"del${System.currentTimeMillis()}-" +
-        s"${stagingCounter.incrementAndGet()}"
-      val staged = StagedWrite.stage(out, root, attemptDir, tip)
-      // Declare columns if the tip never did — a delete that empties
-      // the table must leave it readable (resolve needs declared
-      // columns when no files remain to infer from).
-      val cols = tip.columns.orElse(Some(
-        snap.schema.fields.zipWithIndex.map { case (f, i) =>
-          TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString,
-            snap.physicalOf(f.name))
-        }.toSeq))
-      TxnLog.tryCommitManifest(root,
-        TxnLog.replaceFiles(root, tip.copy(columns = cols), "delete",
-          affected, staged).copy(version = tipVersion + 1,
-          parent = tipVersion),
-        parentHint = Some(tip)) match {
-        case Some(_) => return
-        case None => attempt += 1 // lost the race: replan on the new tip
+      // An empty `affected` means no file can match: a metadata no-op.
+      if (affected.nonEmpty) {
+        // The scan applies any PENDING deletes to the affected files
+        // before the rewrite — a raw read would bake deleted rows into
+        // fresh-seq files (silent resurrection). The list is carried
+        // by replaceFiles; untouched files stay scoped by sequence.
+        val keep = scanFiles(spark, root, tip, affected.toSeq.sorted)
+          .filter(!pred.eqNullSafe(lit(true)))
+        val nOut = TxnLog.rewriteFanOut(root, tip, affected,
+          TxnLog.TargetFileBytes)
+        val out = if (nOut <= 1) keep.coalesce(1) else keep.repartition(nOut)
+        val staged = StagedWrite.stage(out, root,
+          s"del${System.currentTimeMillis()}-" +
+            s"${stagingCounter.incrementAndGet()}", tip)
+        StagedWrite.commit(spark, root, tip, staged, affected, "delete",
+          addsRows = false) { (t, under) =>
+          // Declare columns if the tip never did — a delete that
+          // empties the table must leave it readable (resolve needs
+          // declared columns when no files remain to infer from).
+          val cols = t.columns.orElse(Some(
+            snap.schema.fields.zipWithIndex.map { case (f, i) =>
+              TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString,
+                snap.physicalOf(f.name))
+            }.toSeq))
+          TxnLog.replaceFiles(root, t.copy(columns = cols), "delete",
+            affected, under(t))
+        }
       }
     }
-    sys.error(s"delete lost $maxAttempts races on $root")
   }
 
   /** MERGE-ON-READ UPDATE (the Iceberg v2 `write.update.mode =

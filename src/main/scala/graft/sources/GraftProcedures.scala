@@ -114,7 +114,8 @@ object GraftProcedures {
     "incremental OPTIMIZE: bin-pack files smaller than min_file_bytes",
     Seq(("table", StringType, None),
       ("min_file_bytes", LongType, Some((32L << 20).toString)),
-      ("target_file_bytes", LongType, Some((128L << 20).toString))),
+      ("target_file_bytes", LongType,
+        Some(TxnLog.TargetFileBytes.toString))),
     OptimizeSchema) {
     override protected def run(args: InternalRow): Array[InternalRow] = {
       val root = tableRoot(args)

@@ -95,35 +95,46 @@ object StagedWrite {
     }
   }
 
+  /** A lost race [[commit]] cannot rebase over: an intervening commit
+    * removed a target file, or added a merge-on-read delete — or, thrown
+    * from a build, broke a caller's own rule ([[TxnLog.mergeCowByKey]]:
+    * a non-append commit added files in its key range). Every caller
+    * refuses with it, except the copy-on-write rewrites that read
+    * their rows from the tip, which replan from data ([[replanning]]). */
+  final class Conflict(msg: String) extends RuntimeException(msg)
+
   /** The commit of every write that targets files of a planned
-    * version — the DSv2 row-level writes, `GraftTables.updateMor`,
-    * [[TxnLog.compact]], [[TxnLog.compactSmall]] and
-    * [[TxnLog.materializeDeletes]] — one rebasing loop, the
-    * Delta/Iceberg WriteSerializable check. A lost commit race REBASES
-    * onto the new tip iff every intervening commit is disjoint from
-    * `targets`: append-only commits and rewrites of other files
+    * version — [[TxnLog.mergeCowByKey]], `GraftTables.deleteWhere`'s
+    * copy-on-write arm, the DSv2 row-level writes,
+    * `GraftTables.updateMor`, [[TxnLog.compact]],
+    * [[TxnLog.compactSmall]] and [[TxnLog.materializeDeletes]]: the
+    * second of the log's two commit paths (append-shaped commits
+    * rebase blindly in [[TxnLog.commitRetryWith]]). One rebasing loop,
+    * the Delta/Iceberg WriteSerializable check. A lost commit race
+    * REBASES onto the new tip iff every intervening commit is disjoint
+    * from `targets`: append-only commits and rewrites of other files
     * commute (their files survive the rebased commit untouched; rows a
-    * concurrent append landed were never seen by this write, exactly
-    * WriteSerializable's insert semantics). Two shapes do not commute,
-    * and the write refuses loudly so the caller retries against fresh
-    * data: a commit that REMOVED a target file (rebasing would clobber
-    * its rewrite, or misplace recorded ordinals), and a NEW
-    * merge-on-read delete (this write's output files carry a fresh seq
-    * and would escape it, resurrecting rows it removes; a delete that
-    * vanished means a materialize ran, caught via the files it
-    * rewrote).
+    * concurrent append landed were never seen by this write, so the
+    * write is ordered before the append, exactly WriteSerializable's
+    * insert semantics). Two shapes do not commute,
+    * and the write throws [[Conflict]]: a commit that REMOVED a target
+    * file (rebasing would clobber its rewrite, or misplace recorded
+    * ordinals), and a NEW merge-on-read delete (this write's output
+    * files carry a fresh seq and would escape it, resurrecting rows it
+    * removes; a delete that vanished means a materialize ran, caught
+    * via the files it rewrote).
     *
     * `planned` is the manifest the write read and staged `staged`
     * under, and the first attempt's parent — no tip re-read before
     * it. `build(tip, under)` makes the manifest committed on `tip`,
     * taking the staged files from `under(m)`: their stats under the
     * declared sets of the manifest `m` it declares ([[statsUnder]]).
-    * `addsRows`: the staged rows are new (an update's output),
-    * validated against the CHECK constraints of each tip an attempt
-    * targets whenever that set changed, rather than rows a rewrite
-    * only carries (`setConstraint` never re-checks existing rows, so
-    * a compaction never refuses over one). `label` names the write in
-    * refusals. */
+    * It runs once per attempt. `addsRows`: the staged rows are new (an
+    * update's output), validated against the CHECK constraints of each
+    * tip an attempt targets whenever that set changed, rather than rows
+    * a rewrite only carries (`setConstraint` never re-checks existing
+    * rows, so a compaction never refuses over one). `label` names the
+    * write in refusals. */
   def commit(spark: SparkSession, root: Path, planned: TxnLog.Manifest,
       staged: Staged, targets: Set[String], label: String,
       addsRows: Boolean)(
@@ -134,7 +145,7 @@ object StagedWrite {
     var base = planned
     var checkedUnder: Map[String, String] = Map.empty
     var conflicts = 0
-    while (conflicts < 10) {
+    while (conflicts < TxnLog.MaxCommitAttempts) {
       if (addsRows && base.constraints != checkedUnder) {
         validateConstraints(spark, root, base, staged.paths)
         checkedUnder = base.constraints
@@ -154,19 +165,38 @@ object StagedWrite {
             .filter(v => v > base.version && v <= tip.version)
             .foreach { v =>
               val mv = TxnLog.readManifest(root, v)
-              if ((prevFiles -- mv.files).exists(targets)) sys.error(
-                s"concurrent commit $v on $root rewrote files this " +
-                  s"$label targets — it does not commute; retry it")
-              if (mv.deletes.exists(d => !known(d))) sys.error(
-                s"concurrent merge-on-read delete at commit $v on " +
-                  s"$root does not commute with this $label " +
-                  "(fresh-seq output would escape it) — retry it")
+              if ((prevFiles -- mv.files).exists(targets))
+                throw new Conflict(s"concurrent commit $v on $root " +
+                  s"rewrote files this $label targets — it does not " +
+                  "commute; retry it")
+              if (mv.deletes.exists(d => !known(d)))
+                throw new Conflict("concurrent merge-on-read delete at " +
+                  s"commit $v on $root does not commute with this " +
+                  s"$label (fresh-seq output would escape it) — retry it")
               prevFiles = mv.files.toSet
             }
           base = tip
       }
     }
-    sys.error(s"$label commit lost 10 races on $root")
+    sys.error(s"$label commit lost ${TxnLog.MaxCommitAttempts} races on $root")
+  }
+
+  /** Run `attempt` — plan from the table, stage, [[commit]] — again
+    * whenever its commit throws [[Conflict]], up to
+    * [[TxnLog.MaxCommitAttempts]] plans; `attempt` gets the plan's
+    * ordinal (0 first). Only the copy-on-write rewrites that read
+    * their rows from the tip ([[TxnLog.mergeCowByKey]],
+    * `GraftTables.deleteWhere`) can replan from data: a lost race
+    * against a disjoint commit was already rebased by [[commit]]
+    * without re-reading or re-writing anything. */
+  def replanning[A](attempt: Int => A): A = {
+    def run(plan: Int): A =
+      try attempt(plan)
+      catch {
+        case _: Conflict if plan + 1 < TxnLog.MaxCommitAttempts =>
+          run(plan + 1)
+      }
+    run(0)
   }
 
   /** The commit of a merge-on-read update — the delta row-level write

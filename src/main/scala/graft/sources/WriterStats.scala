@@ -38,6 +38,21 @@ import graft.operators.TxnLog
   * compute stats over pre-existing files. */
 object WriterStats {
 
+  /** Refuse, on the driver, a column `c` of `schema` whose values
+    * manifest bounds cannot hold: they compare as BIGINT, so declared
+    * bound columns, stats keys, merge keys and equality-delete keys
+    * must be byte/short/int/long. `what` names the column's role. */
+  def requireIntegral(schema: StructType, what: String, c: String): Unit =
+    schema.fields.find(_.name == c).getOrElse(
+      sys.error(s"$what `$c` does not exist in the table schema " +
+        schema.fieldNames.mkString("[", ", ", "]"))).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case other => sys.error(
+        s"$what `$c` has non-integral type ${other.simpleString}: " +
+          "manifest bounds compare as BIGINT, so only " +
+          "byte/short/int/long columns may be declared")
+    }
+
   /** The per-column stats plan, resolved and VALIDATED on the driver
     * against the written schema before any task runs — serializable,
     * shipped inside the write closure / writer factory.
@@ -69,18 +84,8 @@ object WriterStats {
       statsKey: Option[String],
       colStatCols: Seq[String],
       ndvCols0: Seq[String], ndvAutoMode: Boolean = true): Spec = {
-    def requireIntegral(what: String, c: String): Unit =
-      schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"$what `$c` does not exist in the table schema " +
-          schema.fieldNames.mkString("[", ", ", "]"))).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => ()
-        case other => sys.error(
-          s"$what `$c` has non-integral type ${other.simpleString}: " +
-            "manifest bounds compare as BIGINT, so only " +
-            "byte/short/int/long columns may be declared")
-      }
-    colStatCols.foreach(requireIntegral("colStats column", _))
-    statsKey.foreach(requireIntegral("stats key", _))
+    colStatCols.foreach(requireIntegral(schema, "colStats column", _))
+    statsKey.foreach(requireIntegral(schema, "stats key", _))
     ndvCols0.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"ndv column `$c` does not exist in the table schema " +

@@ -172,39 +172,48 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
         s"calling TxnLog.commitStatsFor directly: $callers")
   }
 
-  test("commits that target planned files rebase or refuse in ONE place") {
-    // A commit that targets files of a planned version — the
-    // compactions, delete materialization, updateMor, the connector's
-    // row-level writes — rebases over disjoint commits and refuses
-    // otherwise in StagedWrite.commit. Five hand-written copies that
-    // refused ANY concurrent commit once drifted from it, so the raw
-    // commit primitive may be called only by the log's own loops
-    // (tryCommit, commitRetryWith, mergeCowByKey), the connector's
-    // copy-on-write DELETE and the shared loop, and no refusal of the
-    // old "planned against v<N>" form may come back.
+  test("tryCommitManifest is called only by the two commit loops") {
+    // Every commit goes through one of the log's two loops:
+    // commitRetryWith (and its one-attempt file-list form tryCommit)
+    // rebases append-shaped commits blindly, and StagedWrite.commit
+    // rebases commits that target planned files over disjoint commits
+    // and throws its Conflict otherwise. Copies of that decision once
+    // drifted from it — hand-written loops that refused any concurrent
+    // commit, and merge/DELETE loops that replanned after any lost race
+    // — so a production call of the raw commit primitive from any other
+    // function fails this audit, as does a refusal of the old "planned
+    // against v<N>" form.
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
-    val lines = java.nio.file.Files.walk(root)
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap { f =>
-        val rel = root.relativize(f).toString
-        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
-          .map(l => rel -> l.trim)
-      }
+    val defPat = """\bdef\s+(\w+)""".r
     val callPat = """(?<!def )\btryCommitManifest\s*\(""".r
-    val callers = lines
-      .filterNot { case (_, l) => l.startsWith("*") ||
-        l.startsWith("/*") || l.startsWith("//") }
-      .flatMap { case (rel, l) => callPat.findAllMatchIn(l).map(_ => rel) }
-      .groupBy(identity).map { case (rel, hits) => rel -> hits.size }
-    assert(callers == Map(
-        "graft/operators/TxnLog.scala" -> 3,
-        "graft/sources/GraftDataSource.scala" -> 1,
-        "graft/sources/StagedWrite.scala" -> 1),
-      "commit files of a planned version through StagedWrite.commit " +
+    val sources: Seq[(String, Seq[String])] = java.nio.file.Files
+      .walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .toSeq.map { f =>
+        root.relativize(f).toString ->
+          new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+            .map(_.trim).toSeq
+      }
+    // Each call is attributed to the last `def` above it.
+    val callers = sources.flatMap { case (rel, lines) =>
+      lines.filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+          l.startsWith("//"))
+        .scanLeft(("", 0)) { case ((enclosing, _), l) =>
+          (defPat.findFirstMatchIn(l).fold(enclosing)(_.group(1)),
+            callPat.findAllMatchIn(l).size)
+        }
+        .flatMap { case (enclosing, n) => Seq.fill(n)(rel -> enclosing) }
+    }.sorted
+    assert(callers == Seq(
+        "graft/operators/TxnLog.scala" -> "commitRetryWith",
+        "graft/operators/TxnLog.scala" -> "tryCommit",
+        "graft/sources/StagedWrite.scala" -> "commit"),
+      "commit through TxnLog.commitRetryWith or StagedWrite.commit " +
         s"instead of calling TxnLog.tryCommitManifest directly: $callers")
-    val stale = lines.filter(_._2.contains("planned against v"))
+    val stale = sources.flatMap { case (rel, lines) =>
+      lines.filter(_.contains("planned against v")).map(rel -> _)
+    }
     assert(stale.isEmpty, s"refuse-any commit copies: $stale")
   }
 
