@@ -381,6 +381,45 @@ object GraftTables {
         .create(new GraftTable(snap), None, None))
   }
 
+  /** The rows of `files` of `m` that pass `keep`, projected to `out`,
+    * as one scan's rows whose partitions each read ONE file (a file
+    * larger than a split reads as several), with each partition's
+    * table-relative file. The scan selects [[GraftMor.MetaFileCol]],
+    * which plans it with single-file partitions and tags each with its
+    * file; the tag column is projected away again task-side. */
+  private[graft] def rowsByFile(spark: SparkSession, root: Path,
+      m: TxnLog.Manifest, files: Seq[String],
+      keep: org.apache.spark.sql.Column,
+      out: Seq[org.apache.spark.sql.Column])
+      : (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+        Seq[String]) = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceRDDPartition}
+    val df = scanFiles(spark, root, m, files).filter(keep)
+      .select(out :+ org.apache.spark.sql.functions.col(GraftMor.MetaFileCol): _*)
+    val rows = df.queryExecution.toRdd
+    val partFiles = df.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.inputRDD.partitions.toSeq.map {
+        case p: DataSourceRDDPartition => p.inputPartitions match {
+          case Seq(GraftMor.MorInputPartition(_, _, Some(f))) => f
+          case other => sys.error(s"not a one-file partition: $other")
+        }
+        case other => sys.error(s"not a connector scan partition: $other")
+      }
+    }.flatten
+    require(partFiles.size == rows.getNumPartitions &&
+      partFiles.toSet == files.toSet,
+      s"the scan of ${files.size} file(s) at $root did not plan one " +
+        "file per partition")
+    val data = df.schema.fields.init.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable): Expression
+    }.toSeq
+    (rows.mapPartitions { it =>
+      val project = UnsafeProjection.create(data)
+      it.map(project)
+    }, partFiles)
+  }
+
   // A committed version is immutable (manifests are put-if-absent,
   // never replaced), so its inferred schema is too — cache it, or
   // every read of an undeclared-schema table pays a footer-merge job.

@@ -126,7 +126,10 @@ object StagedWrite {
     *
     * `planned` is the manifest the write read and staged `staged`
     * under, and the first attempt's parent — no tip re-read before
-    * it. `build(tip, under)` makes the manifest committed on `tip`,
+    * it. It may declare what the stored version does not (a re-keyed
+    * `statsKey` and stats, as [[TxnLog.compact]]'s): the commit folds
+    * and delta-encodes against the parent as stored
+    * ([[TxnLog.tryCommitManifest]]). `build(tip, under)` makes the manifest committed on `tip`,
     * taking the staged files from `under(m)`: their stats under the
     * declared sets of the manifest `m` it declares ([[statsUnder]]).
     * It runs once per attempt. `addsRows`: the staged rows are new (an
@@ -152,8 +155,7 @@ object StagedWrite {
       }
       TxnLog.tryCommitManifest(root,
         build(base, under).copy(version = base.version + 1,
-          parent = base.version),
-        parentHint = Some(base)) match {
+          parent = base.version)) match {
         case Some(v) => return TxnLog.Committed(v, conflicts)
         case None =>
           conflicts += 1

@@ -18,6 +18,14 @@ object BatchDF {
       ds.queryExecution.toRdd, ds.schema, isStreaming = false)
   }
 
+  /** Catalyst rows as a frame of `schema`, keeping the RDD's
+    * partitions: a write of it writes one file per partition. */
+  def fromRows(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Column over a raw catalyst expression (the DELETE path builds its
     * predicate once and uses it for both pruning and row filtering). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** One Spark job seen by [[SparkTestBase.jobsRun]]: the call stack of
-  * the SQL execution it ran under ("" outside one), its finished tasks
-  * and the shuffle bytes they wrote. */
-final case class JobRun(callStack: String, tasks: Int, shuffleBytes: Long) {
+  * the SQL execution it ran under ("" outside one), its finished tasks,
+  * the shuffle bytes they wrote and the input records they read. */
+final case class JobRun(callStack: String, tasks: Int, shuffleBytes: Long,
+    recordsRead: Long) {
   override def toString: String = s"JobRun($tasks tasks, $shuffleBytes shuffle bytes)"
 }
 
@@ -31,7 +32,7 @@ trait SparkTestBase {
   def jobsRun[A](f: => A): (A, Seq[JobRun]) = {
     Thread.sleep(500)
     val stacks = mutable.Map.empty[Long, String]
-    val jobs = mutable.LinkedHashMap.empty[Int, (Option[Long], Int, Long)]
+    val jobs = mutable.LinkedHashMap.empty[Int, (Option[Long], Int, Long, Long)]
     val jobOfStage = mutable.Map.empty[Int, Int]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -43,15 +44,16 @@ trait SparkTestBase {
         val exec = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
           .map(_.toLong)
-        jobs(js.jobId) = (exec, 0, 0L)
+        jobs(js.jobId) = (exec, 0, 0L, 0L)
         js.stageIds.foreach(jobOfStage(_) = js.jobId)
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
         jobOfStage.get(te.stageId).foreach { j =>
-          val (exec, tasks, bytes) = jobs(j)
-          val written = Option(te.taskMetrics)
-            .fold(0L)(_.shuffleWriteMetrics.bytesWritten)
-          jobs(j) = (exec, tasks + 1, bytes + written)
+          val (exec, tasks, bytes, records) = jobs(j)
+          val m = Option(te.taskMetrics)
+          jobs(j) = (exec, tasks + 1,
+            bytes + m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+            records + m.fold(0L)(_.inputMetrics.recordsRead))
         }
       }
     }
@@ -60,8 +62,9 @@ trait SparkTestBase {
       val a = f
       Thread.sleep(500)
       listener.synchronized {
-        (a, jobs.values.toSeq.map { case (exec, tasks, bytes) =>
-          JobRun(exec.flatMap(stacks.get).getOrElse(""), tasks, bytes)
+        (a, jobs.values.toSeq.map { case (exec, tasks, bytes, records) =>
+          JobRun(exec.flatMap(stacks.get).getOrElse(""), tasks, bytes,
+            records)
         })
       }
     } finally spark.sparkContext.removeSparkListener(listener)
