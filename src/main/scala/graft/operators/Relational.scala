@@ -37,7 +37,7 @@ object Relational {
     * fails LOUDLY with the observed type, so a future testdata
     * regeneration yields one clear error instead of silently-shrunk
     * timestamps. The NTZ→LTZ cast is value-preserving here because every
-    * session (Verify/Bench/specs) pins spark.sql.session.timeZone=UTC. */
+    * session (Verify/specs) pins spark.sql.session.timeZone=UTC. */
   /** File sets whose raw-Long ts magnitude has already been vetted
     * this JVM (the files are immutable testdata). */
   private val tsProbedFiles =

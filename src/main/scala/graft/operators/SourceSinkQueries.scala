@@ -3905,34 +3905,4 @@ object SourceSinkQueries {
           .adaptiveStatePartitions(spark, srcDir.toString)))
       .orderBy("event_type")
   }
-
-  /** Bench-only startup probe for scan_kafka_batch attribution (r16
-    * verdict task 8): the SAME AvailableNow + fresh-checkpoint +
-    * stateful-agg machinery over a 2-row source, so its cost is
-    * stream STARTUP (checkpoint init, offset/commit log, state-store
-    * open/commit) with a negligible data batch. [[graft.Bench]] times
-    * it next to the real query and emits both, so the next
-    * scan_kafka_batch drift splits into startup vs per-batch cost in
-    * one step instead of another round of A/B archaeology. */
-  def microBatchStartupProbe(spark: SparkSession): DataFrame = {
-    val base = tmpDir("microbatch_probe")
-    val srcDir = base.resolve("in")
-    import spark.implicits._
-    // No pre-create: parquet's default errorIfExists mode refuses an
-    // existing path, which made this probe THROW instantly — and the
-    // bench's exception-to-sentinel timing contract turned that into
-    // a silent ~0.03 s "startup" (caught r20 wiring the stream-floor
-    // probe; the write itself creates the directory).
-    Seq(("a", 1.0), ("b", 2.0)).toDF("event_type", "value")
-      .coalesce(1).write.parquet(srcDir.toString)
-    val agg = spark.readStream
-      .schema(spark.read.parquet(srcDir.toString).schema)
-      .parquet(srcDir.toString)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-    graft.streaming.Streaming
-      .runAvailableNow(agg, base.resolve("ckpt").toString,
-        statePartitions = Some(graft.streaming.Streaming
-          .adaptiveStatePartitions(spark, srcDir.toString)))
-  }
 }

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.GraftTables
+import graft.sources.{GraftTables, StagedWrite}
 
 /** A versioned transaction log for a parquet table directory — the
   * commit protocol the lakehouse ops ([[SourceSinkQueries.mergeCow]]
@@ -52,19 +52,22 @@ import graft.sources.GraftTables
   * - **Optimistic concurrency.** A writer reads the latest version V,
   *   computes its new file set against V's manifest, and tries to
   *   commit V+1. A concurrent committer winning V+1 surfaces as the
-  *   put-if-absent failure, and the loser takes one of two paths.
-  *   Append-shaped commits (appends, inserts, metadata commits)
-  *   re-read the tip, REBASE onto it and retry ([[commitRetryWith]]).
-  *   Commits that target files of a planned version ([[mergeCowByKey]],
-  *   the connector's copy-on-write DELETE and row-level writes, the
+  *   put-if-absent failure. Every commit then goes through one loop,
+  *   [[graft.sources.StagedWrite.commit]]: the loser reads each commit
+  *   that won since its base once, judges it by the write's rule, and
+  *   REBASES onto the new tip unless one breaks it. Appends, creates,
+  *   equality deletes and metadata commits are blind: no rule, no
+  *   walk ([[commitRetryWith]] is their nothing-staged form). Commits
+  *   that target files of a planned version ([[mergeCowByKey]], the
+  *   connector's copy-on-write DELETE and row-level writes, the
   *   compactions, delete materialization, `GraftTables.updateMor`)
-  *   rebase over intervening commits that left those files alive and
-  *   added no merge-on-read delete
-  *   ([[graft.sources.StagedWrite.commit]]); the merge also replans
-  *   over a commit other than a blind append that added files in its
-  *   key range. Any other intervening commit does not commute: the
-  *   merge and the DELETE replan from data against the new tip, every
-  *   other such write refuses loudly.
+  *   refuse a commit that removed a target or added a merge-on-read
+  *   delete; the merge also refuses one other than a blind append that
+  *   added files in its key range, and [[deleteByPosMor]] only one
+  *   that removed a file its positions name. A refusal throws
+  *   [[graft.sources.StagedWrite.Conflict]]: the merge and the DELETE
+  *   replan from data against the new tip, every other write refuses
+  *   loudly.
   * - **Readers pin a version.** [[readVersion]] resolves one manifest
   *   and reads exactly its files — later commits are invisible
   *   (snapshot isolation), and a pinned read never sees a torn table
@@ -255,13 +258,54 @@ object TxnLog {
     * by [[DeltaCheckpointInterval]] — every Nth commit is a full
     * snapshot) and applies each delta; callers always see the full
     * snapshot form, so every consumer of this API is unchanged. */
-  def readManifest(table: Path, version: Long): Manifest = {
-    val txt = new String(Files.readAllBytes(manifestPath(table, version)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    parseAny(txt) match {
+  def readManifest(table: Path, version: Long): Manifest =
+    parseAny(stored(table, version)) match {
       case Right(full) => full
       case Left(d) => applyDelta(readManifest(table, d.base), d)
     }
+
+  /** The stored JSON of one manifest. */
+  private def stored(table: Path, version: Long): String =
+    new String(Files.readAllBytes(manifestPath(table, version)),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The commits in (`base`, `upTo`], oldest first, resolved: each
+    * stored manifest is read once, a delta resolving against the one
+    * before it (the first against its stored chain). What
+    * [[graft.sources.StagedWrite.commit]] walks after a lost race (up
+    * to the tip), and what [[appendedSince]] checks. */
+  def since(table: Path, base: Long, upTo: Long): Seq[Manifest] =
+    versions(table).filter(v => v > base && v <= upTo)
+      .foldLeft(Vector.empty[Manifest]) { (walked, v) =>
+        walked :+ (parseAny(stored(table, v)) match {
+          case Right(full) => full
+          case Left(d) => applyDelta(walked.lastOption
+            .filter(_.version == d.base)
+            .getOrElse(readManifest(table, d.base)), d)
+        })
+      }
+
+  /** The slice of `end` holding exactly the rows committed in
+    * (`start`, `end.version`]: the files `end` has and `start` had not,
+    * with their per-file entries — a file diff, so every commit in the
+    * window must be an `append`; `window` names the read in the
+    * refusal. The incremental read (`fromVersion`) and the streaming
+    * source's micro-batches both plan from it. */
+  def appendedSince(table: Path, start: Long, end: Manifest,
+      window: String): Manifest = {
+    val nonAppend =
+      since(table, start, end.version).filter(_.action != "append")
+    require(nonAppend.isEmpty,
+      s"$window crosses non-append commit(s) " +
+        nonAppend.map(x => s"v${x.version}:${x.action}").mkString(", ") +
+        " — a file diff would misstate changes; read a fresh snapshot")
+    val fresh = end.files.toSet -- readManifest(table, start).files
+    end.copy(files = end.files.filter(fresh),
+      stats = end.stats.view.filterKeys(fresh).toMap,
+      partitions = end.partitions.view.filterKeys(fresh).toMap,
+      sizes = end.sizes.view.filterKeys(fresh).toMap,
+      colStats = end.colStats.view.mapValues(
+        _.view.filterKeys(fresh).toMap).toMap)
   }
 
   // Jackson's ObjectMapper is thread-safe after configuration; Spark
@@ -272,9 +316,7 @@ object TxnLog {
     * fields (`ts`, `txn`, `base`) both storage forms carry verbatim. */
   private def rawNode(
       table: Path, version: Long): com.fasterxml.jackson.databind.JsonNode =
-    mapper.readTree(new String(
-      Files.readAllBytes(manifestPath(table, version)),
-      java.nio.charset.StandardCharsets.UTF_8))
+    mapper.readTree(stored(table, version))
 
   private def rawTxn(table: Path, version: Long): Option[(String, Long)] =
     Option(rawNode(table, version).get("txn")).map(t =>
@@ -963,7 +1005,7 @@ object TxnLog {
     tryCommitManifest(table, Manifest(parent + 1, parent, action, files,
       stats, statsKey, partitions, columns))
 
-  /** The bound on commit attempts of every commit loop, and on the
+  /** The bound on attempts of the log's commit loop, and on the
     * plans of a rewrite that replans after a non-commuting race. */
   val MaxCommitAttempts: Int = 10
 
@@ -979,7 +1021,7 @@ object TxnLog {
     .map(readManifest(table, _))
     .getOrElse(PreCreate)
 
-  /** Thrown by a [[commitRetryWith]] build function (via
+  /** Thrown by a commit's build function (via
     * [[abortCommit]]) to abandon the commit as a NO-OP — the
     * idempotent-replay path: a streaming sink that discovers, on the
     * tip it is about to commit against, that its (appId, batchId) has
@@ -998,36 +1040,32 @@ object TxnLog {
     * are overwritten to tip+1/tip) — called again after every lost
     * race so the writer rebases on what actually committed. `build`
     * may call [[abortCommit]] to finish as a no-op: the returned
-    * `Committed` then names the tip it aborted against. */
+    * `Committed` then names the tip it aborted against. The
+    * nothing-staged [[graft.sources.StagedWrite.Blind]] case of the
+    * log's one loop ([[graft.sources.StagedWrite.commit]]); it needs
+    * no SparkSession. */
   def commitRetryWith(
       table: Path, build: Manifest => Manifest): Committed = {
-    var conflicts = 0
     // Footer row counts survive commit retries: a rebase re-reads the
     // tip, not the new files' footers (files are immutable once
     // staged, so a cached count can never go stale).
     val rowsCache = scala.collection.mutable.Map.empty[String, Long]
-    while (conflicts < MaxCommitAttempts) {
-      val t = tip(table)
-      val next0 =
-        try build(t).copy(version = t.version + 1, parent = t.version)
-        catch { case _: CommitAborted => return Committed(t.version, conflicts) }
+    StagedWrite.commit(SparkSession.active, table, tip(table),
+      StagedWrite.Staged.empty, StagedWrite.Blind, "blind",
+      addsRows = false) { (t, _) =>
+      val next = build(t)
       // Every commit leaves a fully size-bearing manifest: surviving
       // files inherit the tip's entry, new ones cost one local stat
       // (byte size) plus one footer read (row count) — so READERS
       // never touch the filesystem to plan, and scans report exact
       // rowCount/column bounds to the optimizer from metadata alone.
-      val newRows = fileRows(table, next0.files,
-        next0.rows ++ t.rows ++ rowsCache)
-      rowsCache ++= newRows
-      val next = next0.copy(
-        sizes = fileSizes(table, next0.files, next0.sizes ++ t.sizes),
-        rows = newRows)
-      tryCommitManifest(table, next) match {
-        case Some(v) => return Committed(v, conflicts)
-        case None => conflicts += 1
-      }
+      val rows = fileRows(table, next.files,
+        next.rows ++ t.rows ++ rowsCache)
+      rowsCache ++= rows
+      next.copy(
+        sizes = fileSizes(table, next.files, next.sizes ++ t.sizes),
+        rows = rows)
     }
-    sys.error(s"commit lost $MaxCommitAttempts races on $table")
   }
 
   /** Commit with rebase-and-retry: `filesFor` receives the CURRENT
@@ -1566,10 +1604,10 @@ object TxnLog {
     graft.util.ParquetSchema.read(spark,
         ds.map(d => table.resolve(d.path).toString))
       .select(col("file_path"), col("pos").cast("long"))
-      .na.drop().distinct()
+      .na.drop()
       .collect()
       .groupBy(_.getString(0))
-      .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
+      .map { case (f, rows) => f -> rows.map(_.getLong(1)).distinct.sorted }
   }
 
   /** Write (`file_path`, `pos`) rows as position-delete parquet under
@@ -1602,9 +1640,12 @@ object TxnLog {
     * rewritten — the shape a predicate DELETE produces on a table
     * with NO key column (where equality deletes cannot express the
     * result). Readers drop the named ordinals at scan time; scoping
-    * is by file membership, so a concurrent rewrite of a named file
-    * aborts the commit (the positions would name rows of a file that
-    * no longer exists). */
+    * is by file membership, so positions naming a file the tip does not
+    * hold are refused up front (`IllegalArgumentException`), and a
+    * concurrent commit that removed a named file throws
+    * [[graft.sources.StagedWrite.Conflict]] (the positions would name
+    * rows of a file that no longer exists). A concurrent merge-on-read
+    * delete commutes: the commit rebases over it. */
   def deleteByPosMor(spark: SparkSession, table: Path,
       positions: DataFrame, subdir: String): Committed = {
     require(positions.columns.toSet == Set("file_path", "pos"),
@@ -1617,20 +1658,22 @@ object TxnLog {
     val named = written
       .flatMap(p => posDeleteNamedFiles(table,
         DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
-    commitRetryWith(table, t => {
-      // Rebase safety: every named file must still be live — a
-      // concurrent CoW rewrite/compact relocated its rows, so the
-      // stored ordinals would delete the WRONG rows if carried.
-      val gone = named.diff(t.files.toSet)
-      require(gone.isEmpty,
-        s"deleteByPosMor positions name file(s) no longer at the tip " +
-          s"(${gone.take(3).mkString(", ")}) — replan against v${t.version}")
+    val gone = named.diff(t0.files.toSet)
+    require(gone.isEmpty,
+      s"deleteByPosMor positions name file(s) no longer at the tip " +
+        s"(${gone.take(3).mkString(", ")}) — replan against v${t0.version}")
+    // Rebase safety: every named file must stay live — a concurrent
+    // CoW rewrite/compact relocated its rows, so the stored ordinals
+    // would delete the WRONG rows if carried (the PosDelete rule).
+    StagedWrite.commit(spark, table, t0, StagedWrite.Staged.empty,
+      StagedWrite.PosDelete(named), "deleteByPosMor",
+      addsRows = false) { (t, _) =>
       t.copy(action = "delete-mor",
         deletes = t.deletes ++ written.map(p => DeleteFile(
           p, "", t.version + 1, Files.size(table.resolve(p)),
           kind = "pos")),
         txn = None, ts = 0L)
-    })
+    }
   }
 
   /** The manifest of a commit that REPLACES files `replaced` of tip
@@ -1642,10 +1685,9 @@ object TxnLog {
     * the appending ones, which replace nothing (`insert`'s append,
     * both arms of `GraftTables.createFrom` — the create from
     * [[PreCreate]] — `GraftTables.updateMor` and the delta row-level
-    * write). Each commits through one of the log's two paths:
-    * `insert` and `createFrom` through [[commitRetryWith]], every
-    * other one through [[graft.sources.StagedWrite.commit]]. The file
-    * list is
+    * write). Each commits through the log's one loop,
+    * [[graft.sources.StagedWrite.commit]], which hands it the staged
+    * files' stats under `t`'s declarations. The file list is
     * `t.files − replaced ++ s.paths`; every per-file map (`stats`,
     * `colStats`, `ndv`, `rows`, `sizes`, `partitions`, `seqs`) is
     * `t`'s entries minus the replaced files' plus the staged files',
@@ -1657,7 +1699,7 @@ object TxnLog {
     * `t.copy(...)` or copies the result. The commit gets a fresh
     * timestamp and no streaming stamp. */
   def replaceFiles(table: Path, t: Manifest, action: String,
-      replaced: Set[String], s: graft.sources.StagedWrite.Staged)
+      replaced: Set[String], s: StagedWrite.Staged)
       : Manifest = {
     val files = t.files.filterNot(replaced) ++ s.paths
     def swap[V](old: Map[String, V], added: Map[String, V]) =
@@ -1698,7 +1740,7 @@ object TxnLog {
     * merge-on-read debt is repaid at O(affected bytes), not a full
     * compaction. */
   def materializeDeletes(spark: SparkSession, table: Path,
-      subdir: String, targetFileBytes: Long = TargetFileBytes): Committed = {
+      subdir: String): Committed = {
     val t0 = tip(table)
     if (t0.deletes.isEmpty) return Committed(t0.version, 0)
     // Equality deletes target by sequence; position deletes exactly
@@ -1715,17 +1757,17 @@ object TxnLog {
     // nothing, so the tip stays fully stats-covered with no zero-row
     // files to drop.
     val staged =
-      if (affected.isEmpty)
-        graft.sources.StagedWrite.Staged(Seq.empty, CommitStats.empty)
-      else graft.sources.StagedWrite.stage(
+      if (affected.isEmpty) StagedWrite.Staged.empty
+      else StagedWrite.stage(
         GraftTables.scanFiles(spark, table, t0, affected).coalesce(
-          rewriteFanOut(table, t0, affected, targetFileBytes)),
+          rewriteFanOut(table, t0, affected, TargetFileBytes)),
         table, subdir, t0)
     // Rebases over commits that left the affected files alive and
     // added no merge-on-read delete, and drops only the deletes of the
     // version it read: each now applies to no live file.
-    graft.sources.StagedWrite.commit(spark, table, t0, staged,
-      affected.toSet, "materializeDeletes", addsRows = false) {
+    StagedWrite.commit(spark, table, t0, staged,
+      StagedWrite.Targets(affected.toSet), "materializeDeletes",
+      addsRows = false) {
       (t, under) =>
         replaceFiles(table, t, "materialize", affected.toSet, under(t))
           .copy(deletes = t.deletes.filterNot(t0.deletes.toSet))
@@ -1766,17 +1808,17 @@ object TxnLog {
     * affected files with the batch, range-partitioned into
     * `ceil(affectedBytes / targetFileBytes)` output files.
     *
-    * The merge plans and stages once, then commits through
-    * [[graft.sources.StagedWrite.commit]] — of the log's two commit
-    * paths, the one for writes that target planned files — with the
-    * affected files as its targets: a lost race against a commit that
-    * left them alive rebases (a key a concurrent blind append also
-    * inserted is then ordered "merge, then append", Delta's
-    * WriteSerializable outcome), and only a non-commuting one REPLANS
-    * against the new tip — one that rewrote an affected file, added a
-    * merge-on-read delete, or (not being a blind `append`) added a
-    * file whose key range may reach the batch's, as a concurrent
-    * merge inserting the same key does.
+    * The merge plans and stages once, then commits through the log's
+    * one loop, [[graft.sources.StagedWrite.commit]], under the
+    * [[graft.sources.StagedWrite.Merge]] rule with the affected files
+    * as its targets: a lost race against a commit that left them alive
+    * rebases (a key a concurrent blind append also inserted is then
+    * ordered "merge, then append", Delta's WriteSerializable outcome),
+    * and only a non-commuting one REPLANS against the new tip — one
+    * that rewrote an affected file, added a merge-on-read delete, or
+    * (not being a blind `append`) added a file whose key range may
+    * reach the batch's, as a concurrent merge inserting the same key
+    * does.
     * `onPlanned(attempt)` fires once per commit attempt, after staging
     * and before that attempt commits — the hook deterministic race
     * tests use to interleave a competing committer. */
@@ -1829,7 +1871,7 @@ object TxnLog {
       }
     val valueCols = batch.columns.filterNot(c => c == key || c == "op")
     var attempts = 0
-    val committed = graft.sources.StagedWrite.replanning { plan =>
+    val committed = StagedWrite.replanning { plan =>
       val t0 = tip(table)
       require(t0.version >= 0L,
         s"mergeCowByKey needs an existing table at $table")
@@ -1895,29 +1937,13 @@ object TxnLog {
       // A rebase adopts the files of every commit since `t0`. A blind
       // append's rows are ordered after the merge (WriteSerializable);
       // a file any other commit added where the batch's keys may live
-      // (its range under `key` overlaps them, or is unknown) holds
-      // rows this plan never read, so the merge replans to read them
-      // — two merges inserting one key must not both insert it.
-      var seen = t0
-      def requireUnreached(t: Manifest): Unit =
-        (seen.version + 1 to t.version).foreach { v =>
-          val mv = readManifest(table, v)
-          val added = mv.files.filterNot(seen.files.toSet)
-          if (mv.action != "append" && added.exists(f =>
-              !mv.statsKey.contains(key) || mv.stats.get(f).forall {
-                case (kmin, kmax) => kmin <= bmx && kmax >= bmn
-              }))
-            throw new graft.sources.StagedWrite.Conflict(
-              s"concurrent ${mv.action} at commit $v on $table added " +
-                "files in this merge's key range — it does not " +
-                "commute; replan it")
-          seen = mv
-        }
-      val staged = graft.sources.StagedWrite.stage(out, table,
+      // holds rows this plan never read, so the merge replans to read
+      // them (the Merge rule).
+      val staged = StagedWrite.stage(out, table,
         if (plan == 0) subdir else s"$subdir-r$plan", planned)
-      graft.sources.StagedWrite.commit(spark, table, planned, staged,
-        affected, "merge", addsRows = false) { (t, under) =>
-        requireUnreached(t)
+      StagedWrite.commit(spark, table, planned, staged,
+        StagedWrite.Merge(affected, key, bmn, bmx), "merge",
+        addsRows = false) { (t, under) =>
         check(t)
         onPlanned(attempts)
         attempts += 1
@@ -2039,7 +2065,7 @@ object TxnLog {
     val planned = keyed(readManifest(table, tipVersion))
     // Staged (with its stats) before the commit loop, so a retry
     // never rewrites.
-    val staged = graft.sources.StagedWrite.stage(
+    val staged = StagedWrite.stage(
       readVersion(spark, table, tipVersion).coalesce(nFiles),
       table, subdir, planned)
     // A full rewrite targets every planned file: it rebases over a
@@ -2047,8 +2073,9 @@ object TxnLog {
     // refuses one that rewrote a planned file or added a merge-on-read
     // delete. Each tip is re-keyed, so the staged stats follow the
     // declaration through a rebase.
-    graft.sources.StagedWrite.commit(spark, table, planned, staged,
-      planned.files.toSet, "compact", addsRows = false) { (t, under) =>
+    StagedWrite.commit(spark, table, planned, staged,
+      StagedWrite.Targets(planned.files.toSet), "compact",
+      addsRows = false) { (t, under) =>
       val declared = keyed(t)
       replaceFiles(table, declared, "compact", planned.files.toSet,
         under(declared))
@@ -2254,8 +2281,11 @@ object TxnLog {
     * evolves independently: appends land inside `dst`, and any CoW
     * rewrite (merge/delete/compact) replaces referenced source files
     * with clone-local ones, never touching the source. Per-file
-    * stats/sizes/partition values are carried (re-keyed to the
-    * absolute paths), so skipping works from the first read.
+    * stats, sizes, row counts, NDV sketches and partition values are
+    * carried (re-keyed to the absolute paths), so skipping and the
+    * optimizer's statistics work from the first read, and the commit
+    * opens no data file. The clone needs no SparkSession unless the
+    * source carries position deletes (below).
     *
     * Caveats, same as Delta's: vacuuming the SOURCE can reclaim files
     * a clone still references (the clone's references are invisible
@@ -2335,7 +2365,10 @@ object TxnLog {
         sizes = m.sizes.map { case (f, n) => abs(f) -> n },
         colStats = m.colStats.view.mapValues(
           _.map { case (f, r) => abs(f) -> r }).toMap,
-        constraints = m.constraints)
+        constraints = m.constraints,
+        rows = m.rows.map { case (f, n) => abs(f) -> n },
+        ndv = m.ndv.view.mapValues(
+          _.map { case (f, k) => abs(f) -> k }).toMap)
     })
   }
 
@@ -2633,13 +2666,14 @@ object TxnLog {
     val nOut = rewriteFanOut(table, t0, small, targetFileBytes)
     // Staged (with its stats) before the commit loop, so retries
     // recompute nothing.
-    val staged = graft.sources.StagedWrite.stage(
+    val staged = StagedWrite.stage(
       GraftTables.scanFiles(spark, table, t0, small).coalesce(nOut),
       table, subdir, t0)
     // Rebases over commits that left the small files alive and added
     // no merge-on-read delete; refuses otherwise.
-    graft.sources.StagedWrite.commit(spark, table, t0, staged,
-      small.toSet, "compactSmall", addsRows = false) { (t, under) =>
+    StagedWrite.commit(spark, table, t0, staged,
+      StagedWrite.Targets(small.toSet), "compactSmall",
+      addsRows = false) { (t, under) =>
       replaceFiles(table, t, "optimize", small.toSet, under(t))
     }
   }

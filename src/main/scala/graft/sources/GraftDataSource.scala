@@ -212,9 +212,6 @@ final class GraftStreamingSink(root: Path, appId: String,
 final case class GraftSnapshot(
     root: Path, manifest: TxnLog.Manifest, schema: StructType,
     physicalSchema: StructType, pinned: Boolean = false) {
-  def absFiles: Seq[String] =
-    manifest.files.map(f => root.resolve(f).toString)
-
   def isMapped: Boolean = schema != physicalSchema
 
   /** physical name of a logical column (identity when unmapped). */
@@ -309,23 +306,7 @@ object GraftTables {
       case Some(f) =>
         require(f <= version,
           s"fromVersion $f is beyond the read version $version")
-        val nonAppend = TxnLog.versions(root)
-          .filter(v => v > f && v <= version)
-          .map(TxnLog.readManifest(root, _))
-          .filter(_.action != "append")
-        require(nonAppend.isEmpty,
-          s"incremental read $f -> $version crosses non-append " +
-            s"commit(s) ${nonAppend.map(x => s"v${x.version}:${x.action}")
-              .mkString(", ")} — a file diff would misstate changes; " +
-            "read a full snapshot instead")
-        val old = TxnLog.readManifest(root, f).files.toSet
-        val fresh = m0.files.filterNot(old)
-        m0.copy(files = fresh,
-          stats = m0.stats.view.filterKeys(fresh.toSet).toMap,
-          partitions = m0.partitions.view.filterKeys(fresh.toSet).toMap,
-          sizes = m0.sizes.view.filterKeys(fresh.toSet).toMap,
-          colStats = m0.colStats.view.mapValues(
-            _.view.filterKeys(fresh.toSet).toMap).toMap)
+        TxnLog.appendedSince(root, f, m0, s"incremental read $f -> $version")
     }
     m.columns match {
       case Some(cols) =>
@@ -477,12 +458,10 @@ object GraftTables {
     // column sets — zero post-write stats jobs on the common path.
     val staged = StagedWrite.stage(physical, snap.root, stagingDir(),
       snap.manifest)
-    // The staged files never change across commit retries; a rebase
-    // onto a tip whose declared sets changed re-derives their stats
-    // (StagedWrite.statsUnder).
-    val under = StagedWrite.statsUnder(spark, snap.root, staged,
-      snap.manifest)
-    TxnLog.commitRetryWith(snap.root, tip => {
+    // A blind commit: it rebases onto any tip, and the staged files'
+    // stats follow each tip's declared sets (`under`).
+    StagedWrite.commit(spark, snap.root, snap.manifest, staged,
+        StagedWrite.Blind, "insert", addsRows = false) { (tip, under) =>
       // Idempotent-replay guard, INSIDE the attempt: if this writer's
       // (appId, batchId) already sits at or below a committed stamp —
       // including one a concurrent zombie instance landed while we
@@ -519,7 +498,7 @@ object GraftTables {
       else
         TxnLog.replaceFiles(snap.root, tip.copy(columns = cols),
           "append", Set.empty, under(tip)).copy(txn = txn)
-    })
+    }
   }
 
   /** First write into a fresh path: CREATE the table from the frame,
@@ -545,12 +524,11 @@ object GraftTables {
     // post-write stats jobs.
     val staged = StagedWrite.stage(data, root, stagingDir(),
       TxnLog.PreCreate)
-    val under = StagedWrite.statsUnder(data.sparkSession, root, staged,
-      TxnLog.PreCreate)
     val cols = data.schema.fields.zipWithIndex.map { case (f, i) =>
       TxnLog.ColumnDef(i + 1, f.name, f.dataType.catalogString, f.name)
     }.toSeq
-    TxnLog.commitRetryWith(root, tip => {
+    StagedWrite.commit(data.sparkSession, root, TxnLog.PreCreate, staged,
+        StagedWrite.Blind, "create", addsRows = false) { (tip, under) =>
       txn.foreach { case (app, batch) =>
         if (TxnLog.lastTxnAt(root, tip, app).exists(_ >= batch))
           TxnLog.abortCommit()
@@ -570,7 +548,7 @@ object GraftTables {
           tip.copy(columns = tip.columns.orElse(Some(cols))), "append",
           Set.empty, under(tip)).copy(txn = txn)
       }
-    })
+    }
   }
 
   /** A fresh staging subdirectory name for an insert or create. */
@@ -586,12 +564,11 @@ object GraftTables {
     * every file is a metadata-only no-op; a rewrite left empty
     * (everything in the file matched) is dropped from the file set.
     * It plans from `snap`'s version and stages once, then commits
-    * through [[StagedWrite.commit]] — of the log's two commit paths,
-    * the one for writes that target planned files — with the affected
-    * files as its targets: a lost race against a commit that left them
-    * alive rebases (rows a concurrent append landed are ordered after
-    * the delete), and only a non-commuting one REPLANS against the new
-    * tip. Old files survive for time travel — at 100 TB this is the
+    * through the log's one loop, [[StagedWrite.commit]], with the
+    * affected files as its targets: a lost race against a commit that
+    * left them alive rebases (rows a concurrent append landed are
+    * ordered after the delete), and only a non-commuting one REPLANS
+    * against the new tip. Old files survive for time travel — at 100 TB this is the
     * GDPR-delete path: O(affected files) work, through plain SQL. */
   def deleteWhere(snap: GraftSnapshot,
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
@@ -695,7 +672,8 @@ object GraftTables {
         val staged = StagedWrite.stage(out, root,
           s"del${System.currentTimeMillis()}-" +
             s"${stagingCounter.incrementAndGet()}", tip)
-        StagedWrite.commit(spark, root, tip, staged, affected, "delete",
+        StagedWrite.commit(spark, root, tip, staged,
+          StagedWrite.Targets(affected), "delete",
           addsRows = false) { (t, under) =>
           // Declare columns if the tip never did — a delete that
           // empties the table must leave it readable (resolve needs
@@ -908,17 +886,17 @@ final class GraftTable(snap: GraftSnapshot, cdf: Boolean = false)
 /** The write path: staged parquet + one optimistic log commit. The
   * incoming frame (logical column names, any order) is projected to
   * the PHYSICAL schema, written to a fresh staging subdirectory by
-  * Spark's parquet writer at full parallelism, and then a single
-  * [[TxnLog.commitRetryWith]] publishes it — `append` keeps the tip's
-  * files, `overwrite` (SaveMode.Overwrite / INSERT OVERWRITE)
-  * replaces the file set while history stays time-travelable. Key
-  * stats for the new files are computed iff the table declares a
-  * `statsKey`, so file skipping keeps working over written data; a
-  * lost commit race rebases on the new tip (appends and full
-  * overwrites both commute under rebase). Uses Spark's V1 insert
-  * fallback (`V1Write`), which hands us the whole DataFrame — the
-  * right fit when the commit is one atomic manifest put rather than
-  * per-task commit messages. */
+  * Spark's parquet writer at full parallelism, whose tasks also fold
+  * the new files' row counts and declared stats, and then one blind
+  * commit of the log's one loop ([[StagedWrite.commit]]) publishes it
+  * — `append` keeps the tip's files, `overwrite` (SaveMode.Overwrite /
+  * INSERT OVERWRITE) replaces the file set while history stays
+  * time-travelable. A lost commit race rebases on the new tip with no
+  * check (appends and full overwrites both commute under rebase), and
+  * the staged stats follow the new tip's declarations. Uses Spark's V1
+  * insert fallback (`V1Write`), which hands us the whole DataFrame —
+  * the right fit when the commit is one atomic manifest put rather
+  * than per-task commit messages. */
 final class GraftWriteBuilder(snap: GraftSnapshot)
   extends WriteBuilder with SupportsTruncate {
 
@@ -1406,24 +1384,8 @@ final class GraftMicroBatchStream(
   private def diffManifest(startV: Long, endV: Long): TxnLog.Manifest = {
     val endM = TxnLog.readManifest(root, endV)
     if (startV < 0L) endM
-    else {
-      val nonAppend = TxnLog.versions(root)
-        .filter(v => v > startV && v <= endV)
-        .map(TxnLog.readManifest(root, _))
-        .filter(_.action != "append")
-      require(nonAppend.isEmpty,
-        s"stream window $startV -> $endV crosses non-append commit(s) " +
-          nonAppend.map(x => s"v${x.version}:${x.action}").mkString(", ") +
-          " — restart the stream from a fresh snapshot")
-      val old = TxnLog.readManifest(root, startV).files.toSet
-      val fresh = endM.files.filterNot(old)
-      endM.copy(files = fresh,
-        stats = endM.stats.view.filterKeys(fresh.toSet).toMap,
-        partitions = endM.partitions.view.filterKeys(fresh.toSet).toMap,
-        sizes = endM.sizes.view.filterKeys(fresh.toSet).toMap,
-        colStats = endM.colStats.view.mapValues(
-          _.view.filterKeys(fresh.toSet).toMap).toMap)
-    }
+    else TxnLog.appendedSince(root, startV, endM,
+      s"stream window $startV -> $endV")
   }
 
   override def planInputPartitions(

@@ -234,12 +234,14 @@ private[sources] object GraftMor {
     import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
     val m = snap.manifest
     val eqDeletes = m.deletes.filter(_.kind != "pos")
+    // Deduplicated after the collect: a `distinct` would cost a shuffle
+    // per delete file on every planned scan.
     val keysByFile: Map[String, Array[Long]] = eqDeletes.map { d =>
       d.path -> graft.util.ParquetSchema.read(spark,
           Seq(snap.root.resolve(d.path).toString))
         .select(org.apache.spark.sql.functions.col(d.key).cast("long"))
-        .na.drop().distinct()
-        .collect().map(_.getLong(0)).sorted
+        .na.drop()
+        .collect().map(_.getLong(0)).distinct.sorted
     }.toMap
     // Dropped row ordinals per position-targeted data file —
     // O(pending deleted rows) driver memory, the eq-key-array bound.

@@ -228,8 +228,9 @@ final class GraftReplaceDataWrite(
     // The scan APPLIED the snapshot's pending equality deletes to the
     // files it replaces (fresh seq, coverage baked in); the list rides
     // along for the untouched files it still scopes.
-    StagedWrite.commit(spark, snap.root, snap.manifest, staged, scanned,
-      "row-level operation", addsRows = true) { (t, under) =>
+    StagedWrite.commit(spark, snap.root, snap.manifest, staged,
+      StagedWrite.Targets(scanned), "row-level operation",
+      addsRows = true) { (t, under) =>
       TxnLog.replaceFiles(snap.root, t, "replace", scanned, under(t))
     }
   }

@@ -42,6 +42,10 @@ object StagedWrite {
   }
 
   object Staged {
+    /** Nothing staged: the commits that only change metadata or add
+      * delete files. */
+    val empty: Staged = Staged(Seq.empty, TxnLog.CommitStats.empty)
+
     /** Fold task reports — (file, rows, folded stats) — into a
       * [[Staged]]: the one place writer results become commit stats,
       * shared by [[stage]] and the DSv2 writers whose tasks report
@@ -81,9 +85,8 @@ object StagedWrite {
     * ([[TxnLog.commitStatsFor]]); the writer-side stats seed the
     * staging sets, and every set is computed at most once (the files
     * are immutable once staged). The one place staged stats follow a
-    * rebase: `GraftTables.insert`/`createFrom` and [[commit]] take
-    * theirs from here. */
-  def statsUnder(spark: SparkSession, root: Path, staged: Staged,
+    * rebase: every [[commit]] takes them from here. */
+  private def statsUnder(spark: => SparkSession, root: Path, staged: Staged,
       stagedUnder: TxnLog.Manifest): TxnLog.Manifest => Staged = {
     val cache = scala.collection.mutable.Map(
       stagedUnder.declaredSets -> staged.stats)
@@ -96,55 +99,73 @@ object StagedWrite {
   }
 
   /** A lost race [[commit]] cannot rebase over: an intervening commit
-    * removed a target file, or added a merge-on-read delete — or, thrown
-    * from a build, broke a caller's own rule ([[TxnLog.mergeCowByKey]]:
-    * a non-append commit added files in its key range). Every caller
-    * refuses with it, except the copy-on-write rewrites that read
-    * their rows from the tip, which replan from data ([[replanning]]). */
+    * that breaks the write's [[Rule]]. Every caller refuses with it,
+    * except the copy-on-write rewrites that read their rows from the
+    * tip, which replan from data ([[replanning]]). */
   final class Conflict(msg: String) extends RuntimeException(msg)
 
-  /** The commit of every write that targets files of a planned
-    * version — [[TxnLog.mergeCowByKey]], `GraftTables.deleteWhere`'s
-    * copy-on-write arm, the DSv2 row-level writes,
-    * `GraftTables.updateMor`, [[TxnLog.compact]],
-    * [[TxnLog.compactSmall]] and [[TxnLog.materializeDeletes]]: the
-    * second of the log's two commit paths (append-shaped commits
-    * rebase blindly in [[TxnLog.commitRetryWith]]). One rebasing loop,
-    * the Delta/Iceberg WriteSerializable check. A lost commit race
-    * REBASES onto the new tip iff every intervening commit is disjoint
-    * from `targets`: append-only commits and rewrites of other files
-    * commute (their files survive the rebased commit untouched; rows a
-    * concurrent append landed were never seen by this write, so the
-    * write is ordered before the append, exactly WriteSerializable's
-    * insert semantics). Two shapes do not commute,
-    * and the write throws [[Conflict]]: a commit that REMOVED a target
-    * file (rebasing would clobber its rewrite, or misplace recorded
-    * ordinals), and a NEW merge-on-read delete (this write's output
-    * files carry a fresh seq and would escape it, resurrecting rows it
-    * removes; a delete that vanished means a materialize ran, caught
-    * via the files it rewrote).
+  /** How [[commit]] judges each commit that won a race against a write
+    * — the Delta/Iceberg WriteSerializable check, one rule per write.
+    * `targets` are the files of the planned version the write depends
+    * on: a commit that REMOVED one does not commute (rebasing would
+    * clobber its rewrite, or misplace recorded ordinals). */
+  sealed abstract class Rule(val targets: Set[String])
+
+  /** No check and no walk: appends, creates, equality deletes, restore
+    * and metadata commits rebase onto whatever committed. */
+  case object Blind extends Rule(Set.empty)
+
+  /** A write that targets `files`: also refuses a NEW merge-on-read
+    * delete (this write's output files carry a fresh seq and would
+    * escape it, resurrecting rows it removes; a delete that vanished
+    * means a materialize ran, caught via the files it rewrote). Append
+    * and rewrites of other files commute: their files survive the
+    * rebased commit untouched, and rows a concurrent append landed
+    * were never seen by this write, so the write is ordered before the
+    * append, exactly WriteSerializable's insert semantics. */
+  final case class Targets(files: Set[String]) extends Rule(files)
+
+  /** [[TxnLog.mergeCowByKey]]: [[Targets]], and also a commit other
+    * than a blind `append` that added a file whose range under `key`
+    * meets the batch's [`lo`, `hi`] or is unknown — it holds rows the
+    * merge never read, so two merges inserting one key must not both
+    * insert it. */
+  final case class Merge(files: Set[String], key: String, lo: Long,
+      hi: Long) extends Rule(files)
+
+  /** [[TxnLog.deleteByPosMor]]: only a commit that removed a file the
+    * positions `named`; a concurrent merge-on-read delete commutes. */
+  final case class PosDelete(named: Set[String]) extends Rule(named)
+
+  /** The log's one commit loop. `planned` is the manifest the write
+    * read and staged `staged` under, and the first attempt's parent —
+    * no tip re-read before it. It may declare what the stored version
+    * does not (a re-keyed `statsKey` and stats, as [[TxnLog.compact]]'s):
+    * the commit folds and delta-encodes against the parent as stored
+    * ([[TxnLog.tryCommitManifest]]). `build(tip, under)` makes the
+    * manifest committed on `tip`, taking the staged files from
+    * `under(m)`: their stats under the declared sets of the manifest
+    * `m` it declares ([[statsUnder]]). It runs once per attempt, and
+    * may call [[TxnLog.abortCommit]] to end the loop as a no-op on the
+    * tip it was given.
     *
-    * `planned` is the manifest the write read and staged `staged`
-    * under, and the first attempt's parent — no tip re-read before
-    * it. It may declare what the stored version does not (a re-keyed
-    * `statsKey` and stats, as [[TxnLog.compact]]'s): the commit folds
-    * and delta-encodes against the parent as stored
-    * ([[TxnLog.tryCommitManifest]]). `build(tip, under)` makes the manifest committed on `tip`,
-    * taking the staged files from `under(m)`: their stats under the
-    * declared sets of the manifest `m` it declares ([[statsUnder]]).
-    * It runs once per attempt. `addsRows`: the staged rows are new (an
-    * update's output), validated against the CHECK constraints of each
-    * tip an attempt targets whenever that set changed, rather than rows
-    * a rewrite only carries (`setConstraint` never re-checks existing
-    * rows, so a compaction never refuses over one). `label` names the
-    * write in refusals. */
-  def commit(spark: SparkSession, root: Path, planned: TxnLog.Manifest,
-      staged: Staged, targets: Set[String], label: String,
-      addsRows: Boolean)(
+    * A lost race REBASES onto the new tip unless an intervening commit
+    * breaks `rule`: each commit since the base is read once, in order
+    * ([[TxnLog.since]]), and judged against the one before it; a
+    * [[Blind]] write walks nothing and re-reads only the tip.
+    * `addsRows`: the staged rows are new (an update's output),
+    * validated against the CHECK constraints of each tip an attempt
+    * targets whenever that set changed, rather than rows a rewrite only
+    * carries (`setConstraint` never re-checks existing rows, so a
+    * compaction never refuses over one). `label` names the write in
+    * refusals. `spark` is used only to re-derive staged stats or
+    * validate added rows, so a commit that stages nothing runs without
+    * a session. */
+  def commit(spark: => SparkSession, root: Path, planned: TxnLog.Manifest,
+      staged: Staged, rule: Rule, label: String, addsRows: Boolean)(
       build: (TxnLog.Manifest, TxnLog.Manifest => Staged) =>
         TxnLog.Manifest): TxnLog.Committed = {
     val under = statsUnder(spark, root, staged, planned)
-    val known = planned.deletes.toSet
     var base = planned
     var checkedUnder: Map[String, String] = Map.empty
     var conflicts = 0
@@ -153,34 +174,47 @@ object StagedWrite {
         validateConstraints(spark, root, base, staged.paths)
         checkedUnder = base.constraints
       }
+      val next = try build(base, under) catch {
+        case _: TxnLog.CommitAborted =>
+          return TxnLog.Committed(base.version, conflicts)
+      }
       TxnLog.tryCommitManifest(root,
-        build(base, under).copy(version = base.version + 1,
-          parent = base.version)) match {
+        next.copy(version = base.version + 1, parent = base.version)) match {
         case Some(v) => return TxnLog.Committed(v, conflicts)
         case None =>
           conflicts += 1
-          val tip = TxnLog.tip(root)
-          // Walk the intervening chain; each step's REMOVED set is
-          // what that commit rewrote/deleted.
-          var prevFiles = base.files.toSet
-          TxnLog.versions(root)
-            .filter(v => v > base.version && v <= tip.version)
-            .foreach { v =>
-              val mv = TxnLog.readManifest(root, v)
-              if ((prevFiles -- mv.files).exists(targets))
-                throw new Conflict(s"concurrent commit $v on $root " +
-                  s"rewrote files this $label targets — it does not " +
-                  "commute; retry it")
-              if (mv.deletes.exists(d => !known(d)))
-                throw new Conflict("concurrent merge-on-read delete at " +
-                  s"commit $v on $root does not commute with this " +
-                  s"$label (fresh-seq output would escape it) — retry it")
-              prevFiles = mv.files.toSet
-            }
-          base = tip
+          base =
+            if (rule == Blind) TxnLog.tip(root)
+            else TxnLog.since(root, base.version, Long.MaxValue)
+              .foldLeft(base)(judge(root, rule, planned.deletes.toSet, label))
       }
     }
     sys.error(s"$label commit lost ${TxnLog.MaxCommitAttempts} races on $root")
+  }
+
+  /** `mv`, a commit that won a race, judged against `prev`, the version
+    * before it: throws [[Conflict]] when it breaks `rule`, else returns
+    * it as the next base. `known` are the deletes the write planned
+    * against. */
+  private def judge(root: Path, rule: Rule, known: Set[TxnLog.DeleteFile],
+      label: String)(prev: TxnLog.Manifest, mv: TxnLog.Manifest)
+      : TxnLog.Manifest = {
+    val why = rule match {
+      case _ if prev.files.filterNot(mv.files.toSet).exists(rule.targets) =>
+        Some("removed files it targets")
+      case _: Targets | _: Merge if mv.deletes.exists(d => !known(d)) =>
+        Some("added a merge-on-read delete (fresh-seq output would escape it)")
+      case Merge(_, key, lo, hi) if mv.action != "append" &&
+          mv.files.filterNot(prev.files.toSet).exists(f =>
+            !mv.statsKey.contains(key) || mv.stats.get(f).forall {
+              case (kmin, kmax) => kmin <= hi && kmax >= lo
+            }) => Some("added files in its key range")
+      case _ => None
+    }
+    why.foreach(w => throw new Conflict(s"concurrent ${mv.action} at " +
+      s"commit ${mv.version} on $root $w — it does not commute with this " +
+      s"$label; retry it"))
+    mv
   }
 
   /** Run `attempt` — plan from the table, stage, [[commit]] — again
@@ -215,7 +249,8 @@ object StagedWrite {
     val named = posFiles.flatMap(p => TxnLog.posDeleteNamedFiles(root,
       TxnLog.DeleteFile(p, "", 0L, 0L, kind = "pos"))).toSet
     val action = if (staged.files.isEmpty) "delete-mor" else "update-mor"
-    commit(spark, root, planned, staged, named, label, addsRows = true) {
+    commit(spark, root, planned, staged, Targets(named), label,
+      addsRows = true) {
       (t, under) =>
         TxnLog.replaceFiles(root, t, action, Set.empty, under(t))
           .copy(deletes = t.deletes ++ posFiles.map(p =>

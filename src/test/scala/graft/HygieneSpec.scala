@@ -36,7 +36,7 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
     // cluster derivation stated, or (b) scale-independent. Adding a
     // NEW literal without a justification entry fails this test;
     // removing one leaves a stale entry that also fails. Parallelism
-    // confs in the driver mains (Bench/Verify/Smoke) are derived from
+    // confs in the entry mains (Verify/Smoke) are derived from
     // host cores (`cpus`), never literals — also asserted.
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -109,7 +109,7 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
         s"${(justified.keySet -- found).toSeq.sorted}")
     // The driver mains size shuffle width from host cores, never a
     // literal: the literal pattern must not match them.
-    Seq("Bench.scala", "Verify.scala", "Smoke.scala").foreach { m =>
+    Seq("Verify.scala", "Smoke.scala").foreach { m =>
       assert(!found.exists(_._1 == m),
         s"$m must derive parallelism from cores, found literal")
     }
@@ -173,16 +173,17 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("tryCommitManifest is called only by the two commit loops") {
-    // Every commit goes through one of the log's two loops:
-    // commitRetryWith (and its one-attempt file-list form tryCommit)
-    // rebases append-shaped commits blindly, and StagedWrite.commit
-    // rebases commits that target planned files over disjoint commits
-    // and throws its Conflict otherwise. Copies of that decision once
-    // drifted from it — hand-written loops that refused any concurrent
-    // commit, and merge/DELETE loops that replanned after any lost race
-    // — so a production call of the raw commit primitive from any other
-    // function fails this audit, as does a refusal of the old "planned
-    // against v<N>" form.
+    // Every commit goes through the log's one loop, StagedWrite.commit
+    // (commitRetryWith is its nothing-staged blind form), or through
+    // tryCommit, the one-attempt file-list form that retries nothing.
+    // The loop rebases each write over the commits its rule lets
+    // commute and throws its Conflict otherwise. Copies of that
+    // decision once drifted from it — hand-written loops that refused
+    // any concurrent commit, merge/DELETE loops that replanned after
+    // any lost race, and a second blind loop — so a production call of
+    // the raw commit primitive from any other function fails this
+    // audit, as does a refusal of the old "planned against v<N>" form.
+    // (The test keeps its name; the two are the loop and tryCommit.)
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
@@ -206,10 +207,9 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
         .flatMap { case (enclosing, n) => Seq.fill(n)(rel -> enclosing) }
     }.sorted
     assert(callers == Seq(
-        "graft/operators/TxnLog.scala" -> "commitRetryWith",
         "graft/operators/TxnLog.scala" -> "tryCommit",
         "graft/sources/StagedWrite.scala" -> "commit"),
-      "commit through TxnLog.commitRetryWith or StagedWrite.commit " +
+      "commit through StagedWrite.commit (or TxnLog.commitRetryWith) " +
         s"instead of calling TxnLog.tryCommitManifest directly: $callers")
     val stale = sources.flatMap { case (rel, lines) =>
       lines.filter(_.contains("planned against v")).map(rel -> _)

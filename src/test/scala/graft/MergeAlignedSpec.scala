@@ -151,8 +151,8 @@ class MergeAlignedSpec extends AnyFunSuite with SparkTestBase {
     val staged = StagedWrite.stage(
       GraftTables.scanFiles(spark, tbl, t0, Seq(f)).filter($"id" =!= 7L),
       tbl, "r0", planned)
-    StagedWrite.commit(spark, tbl, planned, staged, Set(f), "rewrite",
-      addsRows = false) { (t, under) =>
+    StagedWrite.commit(spark, tbl, planned, staged,
+      StagedWrite.Targets(Set(f)), "rewrite", addsRows = false) { (t, under) =>
       TxnLog.replaceFiles(tbl, t, "rewrite", Set(f), under(t))
     }
     val stored = new String(Files.readAllBytes(

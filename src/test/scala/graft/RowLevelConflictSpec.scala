@@ -203,7 +203,8 @@ class RowLevelConflictSpec extends AnyFunSuite with SparkTestBase {
     * loop: replace the `targets`, clear only the planned deletes. */
   private def compactLike(tbl: Path, planned: TxnLog.Manifest,
       staged: StagedWrite.Staged, targets: Set[String]): TxnLog.Committed =
-    StagedWrite.commit(spark, tbl, planned, staged, targets, "compaction",
+    StagedWrite.commit(spark, tbl, planned, staged,
+      StagedWrite.Targets(targets), "compaction",
       addsRows = false) { (t, under) =>
       TxnLog.replaceFiles(tbl, t, "compact", targets, under(t))
         .copy(deletes = t.deletes.filterNot(planned.deletes.toSet))

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TxnLog
+import graft.sources.GraftTables
 
 /** The commit protocol in isolation: put-if-absent atomicity, rebase-
   * and-retry under a real two-thread race, version pinning, and
@@ -842,6 +843,52 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long)].collect().toSet == Set((1L, 10L), (2L, 20L)))
     assert(graft.sources.GraftTables.read(spark, dst)
       .as[(Long, Long)].collect().toSet == Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("cloneShallow of a connector-written table carries row counts " +
+      "and NDV sketches: the commit opens no footer") {
+    import spark.implicits._
+    val src = freshTable()
+    GraftTables.createFrom(src,
+      (1L to 60L).map(i => (i, s"s${i % 7}")).toDF("id", "s"))
+    (61L to 90L).map(i => (i, s"s${i % 11}")).toDF("id", "s")
+      .write.format("graft").mode("append").save(src.toString)
+    val m = TxnLog.tip(src)
+    assert(m.ndv.keySet == Set("id", "s") && m.rows.size == m.files.size, m)
+    val dst = freshTable()
+    Files.delete(dst)
+    val before = TxnLog.footerReads.get()
+    TxnLog.cloneShallow(src, dst)
+    assert(TxnLog.footerReads.get() == before,
+      "the clone re-read footers its source already counted")
+    val c = TxnLog.tip(dst)
+    def abs(f: String) = src.toAbsolutePath.normalize.resolve(f).toString
+    assert(c.rows == m.rows.map { case (f, n) => abs(f) -> n })
+    assert(c.ndv == m.ndv.map { case (col, pf) =>
+      col -> pf.map { case (f, k) => abs(f) -> k }
+    })
+    assert(TxnLog.ndvMerged(c.ndv("s"), c.files) ==
+      TxnLog.ndvMerged(m.ndv("s"), m.files))
+  }
+
+  test("planning and reading a version with a pending equality or " +
+      "position delete runs no shuffle") {
+    import spark.implicits._
+    val t = freshTable()
+    Files.delete(t)
+    GraftTables.createFrom(t, (1L to 200L).map(i => (i, i * 3L)).toDF("k", "v"))
+    TxnLog.deleteByKeyMor(spark, t, Seq(5L, 5L, 17L).toDF("k"), "k", "d0")
+    val (got, jobs) = jobsRun(GraftTables.read(spark, t)
+      .as[(Long, Long)].collect().toSet)
+    assert(got == (1L to 200L).filterNot(Set(5L, 17L)).map(i => (i, i * 3L)).toSet)
+    assert(jobs.nonEmpty && jobs.forall(_.shuffleBytes == 0L), jobs)
+    val f = TxnLog.tip(t).files.head
+    TxnLog.deleteByPosMor(spark, t,
+      Seq((f, 0L), (f, 0L)).toDF("file_path", "pos"), "p0")
+    val (got2, jobs2) = jobsRun(GraftTables.read(spark, t)
+      .as[(Long, Long)].collect().toSet)
+    assert(got2.size == got.size - 1 && got2.subsetOf(got))
+    assert(jobs2.nonEmpty && jobs2.forall(_.shuffleBytes == 0L), jobs2)
   }
 
   test("cloneShallow is a zero-copy metadata commit; the clone " +

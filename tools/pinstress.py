@@ -43,8 +43,8 @@ COMPOSITED = {
     # along verbatim, so identical (user, ts) rows become N-way ties).
     # Override with PINSTRESS_TABLES="orders=o_orderkey,events=event_id,
     # lineitem=l_orderkey" — shifting lineitem.l_orderkey in lockstep
-    # with orders.o_orderkey keeps the FK consistent, which is how the
-    # r18 sf1 anchor (tools/sf1anchor.py) scales the TPC-H trio 10x.
+    # with orders.o_orderkey keeps the FK consistent (the TPC-H trio
+    # scaled 10x).
     "orders": "o_orderkey",
     "events": "event_id",
 }
