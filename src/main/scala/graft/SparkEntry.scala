@@ -2722,7 +2722,7 @@ object SparkEntry {
            SELECT 1, 'append', (SELECT count(*) FROM v1),
                   (SELECT sum(cents) FROM v1)
            UNION ALL
-           SELECT 2, 'cow', (SELECT count(*) FROM v2),
+           SELECT 2, 'merge', (SELECT count(*) FROM v2),
                   (SELECT sum(cents) FROM v2)
            UNION ALL
            SELECT 3, 'compact', (SELECT count(*) FROM v2),

@@ -103,97 +103,6 @@ case class BottomKStrings(
   override def prettyName: String = "bottom_k"
 }
 
-/** [[BottomKStrings]]'s LONG twin: the k smallest DISTINCT signed
-  * Longs, O(k) buffer, partial aggregation, order-independent. Fed
-  * SIGN-FLIPPED xxhash64 values (`h ^ Long.MinValue`, whose signed
-  * order equals the unsigned order of `h`) this is the manifest's
-  * per-file KMV distinct-count sketch ([[graft.operators.TxnLog
-  * .ndvSketchFor]]): sketches merge by union-take-k, and the
-  * estimate (k-1)/frac(h_k) — EXACT below k — gives the optimizer a
-  * distinct count for columns whose type carries no min/max bounds
-  * (strings). NULLs are skipped by the caller's null-guard. */
-case class BottomKLongs(
-    child: Expression, k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.TreeSet[Long]] {
-
-  require(k > 0, s"k must be positive, got $k")
-
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bottom_k_long needs a bigint argument, got ${other.simpleString}")
-  }
-
-  override def createAggregationBuffer(): mutable.TreeSet[Long] =
-    mutable.TreeSet.empty[Long]
-
-  private def add(buf: mutable.TreeSet[Long], v: Long): Unit = {
-    buf += v
-    if (buf.size > k) buf -= buf.last
-  }
-
-  override def update(
-      buf: mutable.TreeSet[Long], input: InternalRow)
-      : mutable.TreeSet[Long] = {
-    val v = child.eval(input)
-    if (v != null) add(buf, v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(
-      b1: mutable.TreeSet[Long], b2: mutable.TreeSet[Long])
-      : mutable.TreeSet[Long] = {
-    b2.foreach(add(b1, _))
-    b1
-  }
-
-  override def eval(buf: mutable.TreeSet[Long]): Any =
-    new GenericArrayData(buf.toSeq)
-
-  override def serialize(buf: mutable.TreeSet[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.TreeSet[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.TreeSet.empty[Long]
-    var i = 0
-    while (i < n) { buf += in.readLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BottomKLongs =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BottomKLongs =
-    copy(inputAggBufferOffset = newOffset)
-
-  override def prettyName: String = "bottom_k_long"
-}
-
-object BottomKLongs {
-
-  /** `bottom_k_long(col, k)` as a Column aggregate. */
-  def asColumn(c: Column, k: Int): Column =
-    ColumnBridge.column(
-      BottomKLongs(ColumnBridge.expression(c), k).toAggregateExpression())
-}
-
 object BottomKStrings {
 
   /** `bottom_k(col, k)` as a Column aggregate. */

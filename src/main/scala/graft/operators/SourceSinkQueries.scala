@@ -169,8 +169,9 @@ object SourceSinkQueries {
     * pipeline needs (re-running a day's job must not truncate the
     * table, as whole-table overwrite would, nor double rows, as append
     * would). The final state is a pure function of (base load,
-    * backfill), so the oracle replays it relationally. The conf is
-    * scoped and restored. */
+    * backfill), so the oracle replays it relationally. Dynamic mode is
+    * an option of that one write: the session conf is never touched, so
+    * a concurrent query on the session keeps its own mode. */
   def sinkPartitionBackfill(spark: SparkSession, dir: String): DataFrame = {
     val out = tmpDir("backfill").resolve("orders").toString
     // Exact integer cents end to end (r17: the 100x composite caught
@@ -188,11 +189,9 @@ object SourceSinkQueries {
     // after the backfill the partition must hold EXACTLY this data.
     val corrected = orders.filter(col("_p") === lit(target))
       .withColumn("cents", col("cents") * 2)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try corrected.write.mode("overwrite").partitionBy("_p").parquet(out)
-    finally spark.conf.set(key, prev)
+    corrected.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_p").parquet(out)
     spark.read.parquet(out)
       .groupBy(col("_p"))
       .agg(count(lit(1)).as("n_orders"),
@@ -254,11 +253,9 @@ object SourceSinkQueries {
       .select(col(key) +: col(partCol) +: valueCols.toSeq.map(c =>
         when(col("s.op").isNotNull, col(s"s.$c"))
           .otherwise(col(s"t.$c")).as(c)): _*)
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partCol).parquet(tbl)
-    finally spark.conf.set(conf, prev)
+    merged.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(tbl)
     cowWitnesses(before, partitionFileSig(tbl),
       parts.map(p => s"$partCol=$p").toSet)
   }
@@ -393,11 +390,9 @@ object SourceSinkQueries {
           coalesce(col("b.n_orders"), lit(0L))).as("n_orders"),
         (coalesce(col("g.sum_cents"), lit(0L)) +
           coalesce(col("b.sum_cents"), lit(0L))).as("sum_cents"))
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_p").parquet(tbl)
-    finally spark.conf.set(conf, prev)
+    merged.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_p").parquet(tbl)
     val (untouchedIntact, affectedRewritten) = cowWitnesses(
       before, partitionFileSig(tbl), parts.map(p => s"_p=$p").toSet)
     val refreshed = spark.read.parquet(tbl)
@@ -472,11 +467,9 @@ object SourceSinkQueries {
         (coalesce(col("g.sum_cents"), lit(0L)) +
           coalesce(col("d.dc"), lit(0L))).as("sum_cents"))
       .filter(col("n_orders") > 0L) // retract emptied groups
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_p").parquet(tbl)
-    finally spark.conf.set(conf, prev)
+    merged.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_p").parquet(tbl)
     val (untouchedIntact, affectedRewritten) = cowWitnesses(
       before, partitionFileSig(tbl), parts.map(p => s"_p=$p").toSet)
     // The ground truth: apply the same changes row-wise, re-aggregate.
@@ -539,10 +532,11 @@ object SourceSinkQueries {
     * (file lists) are the snapshot mechanism every table format builds
     * on, expressed directly. v1 is a range-sorted write; a change
     * batch restating one mid-range key slice produces v2 by FILE-level
-    * copy-on-write: per-file min/max stats (one read-back scan) pick
-    * the files whose range intersects the slice, ONLY those rewrite
-    * (merged with the batch) into new files, and the v2 manifest is
-    * (v1 − affected) + new — old files are never deleted, so v1 stays
+    * copy-on-write ([[TxnLog.mergeCowByKey]]): per-file min/max stats
+    * (one read-back scan) pick the files whose range intersects the
+    * slice, ONLY those rewrite (merged with the batch) into new files,
+    * and the v2 manifest is (v1 − affected) + new — witnessed from the
+    * two manifests. Old files are never deleted, so v1 stays
     * readable byte-for-byte after v2 commits. The query reads BOTH
     * snapshots after the commit and witnesses (a) the rewrite touched
     * a strict subset of files (stats-scoped, like any format's
@@ -579,32 +573,19 @@ object SourceSinkQueries {
     val lo = mn + (mx - mn) * 45 / 100
     val hi = mn + (mx - mn) * 55 / 100
     val batch = orders.filter(col("o_orderkey").between(lo, hi))
-      .select(col("o_orderkey"), (col("cents") * 2).as("cents2"))
-    // Stats-scoped COW: per-file min/max from ONE read-back scan picks
-    // the files the slice can live in; everything else survives into
-    // v2 untouched.
-    val stats = GraftTables.read(spark, tbl, Some(0L))
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("o_orderkey")).as("kmin"), max(col("o_orderkey")).as("kmax"))
-      .collect()
-    val affectedNames = stats.collect {
-      case r if r.getLong(1) <= hi && r.getLong(2) >= lo =>
-        r.getString(0).split('/').last
-    }.toSet
-    val affected = v1.filter(f => affectedNames(f.split('/').last))
-    spark.read.parquet(affected.map(f => tbl.resolve(f).toString): _*)
-      .join(batch, Seq("o_orderkey"), "left")
-      .select(col("o_orderkey"),
-        coalesce(col("cents2"), col("cents")).as("cents"))
-      .coalesce(2).write.parquet(tbl.resolve("delta2").toString)
+      .select(col("o_orderkey"), (col("cents") * 2).as("cents"),
+        lit("upsert").as("op"))
     val v1Before = GraftTables.read(spark, tbl, Some(0L))
       .agg(count(lit(1)), sum(col("cents"))).head()
-    TxnLog.commitRetry(tbl, "cow", tip =>
-      tip.files.filterNot(f => affectedNames(f.split('/').last)) ++
-        TxnLog.parquetsUnder(tbl, "delta2"))
+    // Stats-scoped COW through the engine's merge: v1 declares no key
+    // stats, so the merge reads per-file key bounds back (one scan),
+    // rewrites only the files the slice can live in, and carries
+    // everything else into v2 untouched.
+    TxnLog.mergeCowByKey(spark, tbl, batch, "o_orderkey", "delta2")
     // ... v2 is committed above; re-read pinned v1 AFTER the commit:
     val v1After = GraftTables.read(spark, tbl, Some(0L))
       .agg(count(lit(1)), sum(col("cents"))).head()
+    val affected = v1.filterNot(TxnLog.readManifest(tbl, 1L).files.toSet)
     val scoped = affected.nonEmpty && affected.size < v1.size
     // Reads go through the DataSourceV2 connector since round 13 — the
     // manifest plans the scan, not a helper-resolved file list.
@@ -625,12 +606,14 @@ object SourceSinkQueries {
     *   v0 `create`  — range-sorted base write;
     *   v1 `append`  — a new-keys batch lands as additive files, the
     *                  manifest is (v0 ∪ new);
-    *   v2 `cow`     — a mid-range restatement rewrites ONLY the files
+    *   v2 `merge`   — a mid-range restatement through
+    *                  [[TxnLog.mergeCowByKey]] rewrites ONLY the files
     *                  whose min/max intersect the slice (stats-scoped
     *                  file-level copy-on-write); manifest is
     *                  (v1 − affected) ∪ rewritten;
-    *   v3 `compact` — the same contents coalesced into fewer files, a
-    *                  pure manifest swap readers never notice.
+    *   v3 `compact` — [[TxnLog.compact]]: the same contents coalesced
+    *                  into fewer files, a pure manifest swap readers
+    *                  never notice.
     *
     * The protocol witnesses ride with the data: the log is contiguous
     * with an intact parent chain; a reader that PINNED v1 before the
@@ -682,43 +665,23 @@ object SourceSinkQueries {
     val (mn, mx) = (b.getLong(0), b.getLong(1))
     val lo = mn + (mx - mn) * 45 / 100
     val hi = mn + (mx - mn) * 55 / 100
-    val v1Files = TxnLog.readManifest(tbl, 1L).files
-    val stats = spark.read
-      .parquet(v1Files.map(f => tbl.resolve(f).toString): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("o_orderkey")).as("kmin"),
-        max(col("o_orderkey")).as("kmax"))
-      .collect()
-    val affectedNames = stats.collect {
-      case r if r.getLong(1) <= hi && r.getLong(2) >= lo =>
-        r.getString(0).split('/').last
-    }.toSet
-    val affected = v1Files.filter(f => affectedNames(f.split('/').last))
     val batch = orders.filter(col("o_orderkey").between(lo, hi))
-      .select(col("o_orderkey"), (col("cents") * 2).as("cents2"))
-    spark.read.parquet(affected.map(f => tbl.resolve(f).toString): _*)
-      .join(batch, Seq("o_orderkey"), "left")
-      .select(col("o_orderkey"),
-        coalesce(col("cents2"), col("cents")).as("cents"))
-      .coalesce(2).write.parquet(tbl.resolve("d2").toString)
-    TxnLog.commitRetry(tbl, "cow", tip =>
-      tip.files.filterNot(f => affectedNames(f.split('/').last)) ++
-        TxnLog.parquetsUnder(tbl, "d2"))
+      .select(col("o_orderkey"), (col("cents") * 2).as("cents"),
+        lit("upsert").as("op"))
+    TxnLog.mergeCowByKey(spark, tbl, batch, "o_orderkey", "d2")
     // ...and re-reads the SAME pinned version after it: bit-stable.
     val snapshotIsolated = aggAt(1L) == v1Pinned
     // -- v3: compaction (manifest swap, contents identical) ------------
-    GraftTables.read(spark, tbl, Some(2L)).coalesce(2)
-      .write.parquet(tbl.resolve("d3").toString)
-    TxnLog.commitRetry(tbl, "compact",
-      _ => TxnLog.parquetsUnder(tbl, "d3"))
+    TxnLog.compact(spark, tbl, "d3", nFiles = 2)
     // -- protocol witnesses --------------------------------------------
     val vs = TxnLog.versions(tbl)
     val manifests = vs.map(TxnLog.readManifest(tbl, _))
     val contiguous = vs == (0L to 3L)
     val parentChainOk = manifests.forall(m => m.parent == m.version - 1)
+    val v1Files = manifests(1).files
+    val affected = v1Files.filterNot(manifests(2).files.toSet)
     val rewriteScoped = affected.nonEmpty && affected.size < v1Files.size
-    val compactShrank = TxnLog.readManifest(tbl, 3L).files.size <
-      TxnLog.readManifest(tbl, 2L).files.size
+    val compactShrank = manifests(3).files.size < manifests(2).files.size
     val actions = manifests.map(m => m.version -> m.action).toMap
     val perVersion = vs.map { v =>
       val (n, s) = aggAt(v)
@@ -1023,11 +986,11 @@ object SourceSinkQueries {
     writeSlices(bucketed, "bkt", keepSliceCol = false, 4, tbl, "h",
       "o_orderkey")
     val files = (0 until 4).flatMap(q => TxnLog.parquetsUnder(tbl, s"h$q"))
+    val cs = TxnLog.commitStatsFor(spark, tbl, files, Some("o_orderkey"),
+      Seq("h", "cents"), Nil, ndvAutoMode = false)
     TxnLog.commitRetryWith(tbl, _ => TxnLog.Manifest(0L, -1L, "create",
-      files, TxnLog.keyStats(spark, tbl, files, "o_orderkey"),
-      statsKey = Some("o_orderkey"),
-      colStats = TxnLog.colStatsFor(spark, tbl, files,
-        Seq("h", "cents"))))
+      files, cs.key, statsKey = Some("o_orderkey"),
+      colStats = cs.colStats))
     val (lo, hi) = (hmn + hspan * 30 / 100, hmn + hspan * 40 / 100)
     val inRange = graft.sources.GraftTables.read(spark, tbl)
       .filter(col("h").between(lo, hi))
@@ -3114,14 +3077,13 @@ object SourceSinkQueries {
     def parquets(): Set[java.io.File] =
       root.listFiles().filter(_.getName.endsWith(".parquet")).toSet
     val live = parquets()
-    // Since round 12 liveness derives from the transaction LOG, not a
-    // directory listing (a listing cannot distinguish an orphan from
-    // data — which is the whole reason vacuum exists): the write is
-    // committed as version 0 and the live set is the union of every
+    // Liveness derives from the transaction LOG, not a directory
+    // listing (a listing cannot distinguish an orphan from data —
+    // which is the whole reason vacuum exists): the write is committed
+    // as version 0, and [[TxnLog.vacuum]] keeps the union of every
     // retained manifest's files ([[TxnLog.liveFiles]]).
     TxnLog.commitRetry(tblPath, "create",
       _ => TxnLog.parquetsUnder(tblPath, ""))
-    val manifest = TxnLog.liveFiles(tblPath, TxnLog.versions(tblPath))
     // Aborted-write residue: two stale orphans past the horizon, one
     // fresh orphan inside it (a concurrent writer mid-commit).
     val horizonMs = 60L * 60 * 1000
@@ -3133,10 +3095,7 @@ object SourceSinkQueries {
     }
     val fresh = new java.io.File(root, "part-orphan-fresh.parquet")
     java.nio.file.Files.copy(live.head.toPath, fresh.toPath)
-    val deleted = parquets().filter { f =>
-      !manifest(f.getName) &&
-        f.lastModified() < System.currentTimeMillis() - horizonMs
-    }.map { f => f.delete(); f.getName }
+    val deleted = TxnLog.vacuum(tblPath, horizonMs).deleted
     val after = parquets()
     val staleGone = stale.forall(f => !after.contains(f))
     val freshKept = after.contains(fresh)

@@ -7,9 +7,10 @@ import java.nio.file.{Files, Path, StandardOpenOption}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{GraftTables, StagedWrite}
+import graft.sources.{GraftTables, StagedWrite, WriterStats}
 
 /** A versioned transaction log for a parquet table directory — the
   * commit protocol the lakehouse ops ([[SourceSinkQueries.mergeCow]]
@@ -1125,30 +1126,17 @@ object TxnLog {
   }
 
   /** Per-file [min, max] of `key` for the given (relative) files — the
-    * stats a commit carries so later MERGEs plan from metadata. One
-    * key-column scan of exactly those files. A file whose key column
-    * is entirely NULL yields the EXPLICIT [[EmptyRange]] entry — its
-    * emptiness is a known fact (NULL keys never equi-join, so pruning
-    * it is correct), and under the [[Manifest]] stats convention only
-    * an explicit entry may prune. A zero-row file produces no group
-    * at all and therefore no entry (= unknown, never pruned). */
+    * stats a commit carries so later MERGEs plan from metadata: the key
+    * family of [[commitStatsFor]], one scan of the key column of
+    * exactly those files. A file whose key column is entirely NULL
+    * yields the EXPLICIT [[EmptyRange]] entry (NULL keys never
+    * equi-join, so pruning it is correct); a zero-row file gets no
+    * entry (unknown, never pruned). `key` must be integral. */
   def keyStats(
       spark: SparkSession, table: Path, files: Seq[String],
-      key: String): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty) Map.empty
-    else graft.util.ParquetSchema.read(spark,
-        files.map(f => table.resolve(f).toString))
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"))
-      .collect()
-      .map { r =>
-        val rel = attributeFile(table, r.getString(0), files)
-        if (r.isNullAt(1) || r.isNullAt(2)) rel -> EmptyRange
-        else rel -> (r.getAs[Number](1).longValue,
-          r.getAs[Number](2).longValue)
-      }.toMap
-  }
+      key: String): Map[String, (Long, Long)] =
+    commitStatsFor(spark, table, files, Some(key), Nil, Nil,
+      ndvAutoMode = false).key
 
   /** Per-file ROW COUNTS for the given (relative) files, in ONE scan
     * — the batched replacement for per-file `isEmpty` probes on
@@ -1166,51 +1154,6 @@ object TxnLog {
       .collect()
       .map(r => attributeFile(table, r.getString(0), files) -> r.getLong(1))
       .toMap
-  }
-
-  /** Per-file [min, max] for EVERY column in `cols` — the manifest's
-    * multi-column bounds (`Manifest.colStats`: the Iceberg per-column
-    * manifest bounds / Delta add-file stats idea, generalized beyond
-    * the single merge `statsKey`), computed in ONE scan of exactly
-    * those files regardless of how many columns ride along. Same
-    * entry conventions as [[keyStats]]: an all-NULL column in a file
-    * gets the explicit [[EmptyRange]]; a zero-row file gets no entry
-    * (unknown, never pruned).
-    *
-    * INTEGRAL CONTRACT, enforced loudly: declared columns must exist
-    * in the files' schema and be integral (byte/short/int/long). A
-    * blind BIGINT cast of anything else is a CORRECTNESS hazard, not
-    * a degradation — a TIMESTAMP casts to epoch SECONDS while pushed
-    * Catalyst literals compare in micros, and a cast that nulls out
-    * non-NULL data would write the [[EmptyRange]] entry, pruning
-    * every file; the row-level CoW scan plans its rewrite set from
-    * these bounds, so a wrong prune silently loses rows. Refusing at
-    * stats-computation time keeps a bad declaration from ever
-    * reaching a manifest. */
-  def colStatsFor(
-      spark: SparkSession, table: Path, files: Seq[String],
-      cols: Seq[String]): Map[String, Map[String, (Long, Long)]] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty || cols.isEmpty) return cols.map(_ -> Map.empty[String, (Long, Long)]).toMap
-    val df = graft.util.ParquetSchema.read(spark,
-      files.map(f => table.resolve(f).toString))
-    cols.foreach(graft.sources.WriterStats.requireIntegral(df.schema,
-      "colStats column", _))
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("bigint")).as(s"mn_$c"),
-      max(col(c).cast("bigint")).as(s"mx_$c")))
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> rows.map { r =>
-        val rel = attributeFile(table, r.getString(0), files)
-        val (mnI, mxI) = (1 + 2 * i, 2 + 2 * i)
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) rel -> EmptyRange
-        else rel -> (r.getLong(mnI), r.getLong(mxI))
-      }.toMap
-    }.toMap
   }
 
   /** KMV sketch size per (column, file): 32 sign-flipped hash values
@@ -1254,71 +1197,18 @@ object TxnLog {
     case _ => false
   }
 
-  /** Per-file KMV distinct sketches for `cols` over `files`, in ONE
-    * scan however many columns ride along (the [[colStatsFor]]
-    * discipline). Each entry is `nullCount +: sketch`: element 0 is
-    * the file's exact NULL count for the column (the CBO's
-    * count-stats contract — Spark's aggregate/join estimation only
-    * trusts a distinct count accompanied by a null count), and the
-    * tail is the k smallest distinct SIGN-FLIPPED xxhash64 values of
-    * the column, sorted ascending — flipping makes signed order equal
-    * unsigned hash order, so sketches merge by union-take-k and
-    * [[ndvEstimate]] reads the kth value as a fraction of the hash
-    * space. Works for ANY atomic column type (this is what carries
-    * STRING key cardinality, which min/max bounds cannot). NULLs are
-    * excluded from the sketch (SQL distinct-count semantics). */
-  def ndvSketchFor(
-      spark: SparkSession, table: Path, files: Seq[String],
-      cols0: Seq[String], auto: Boolean = false)
-      : Map[String, Map[String, Seq[Long]]] = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty || (cols0.isEmpty && !(auto && ndvAuto(spark))))
-      return cols0.map(_ -> Map.empty[String, Seq[Long]]).toMap
-    val df = graft.util.ParquetSchema.read(spark,
-      files.map(f => table.resolve(f).toString))
-    cols0.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"ndv column `$c` does not exist in the table schema " +
-          df.schema.fieldNames.mkString("[", ", ", "]"))
-    }
-    // Auto mode (write paths): sketch every join/grouping-plausible
-    // column — strings (which min/max bounds can never size for the
-    // CBO) and integrals — in ADDITION to the declared set, so a
-    // table nobody ran `declare_ndv` on still reaches the optimizer
-    // with string-key cardinality (r19 verdict task 2: opt-in
-    // declaration left every undeclared table CBO-blind). The sketch
-    // rides this same one-scan pass; marginal cost is O(k) per
-    // column per file. `spark.graft.ndv.auto=false` opts out;
-    // `declare_ndv` remains the explicit override either way.
-    val cols =
-      if (!auto || !ndvAuto(spark)) cols0
-      else (cols0 ++ df.schema.fields.collect {
-        case f if ndvAutoEligible(f.dataType) => f.name
-      }).distinct.sorted
-    if (cols.isEmpty)
-      return Map.empty[String, Map[String, Seq[Long]]]
-    val aggs = cols.flatMap(c => Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),
-      graft.functions.BottomKLongs.asColumn(
-        when(col(c).isNotNull,
-          xxhash64(col(c)).bitwiseXOR(lit(Long.MinValue))),
-        NdvSketchK).as(s"kmv_$c")))
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> rows.map { r =>
-        attributeFile(table, r.getString(0), files) ->
-          (r.getLong(1 + 2 * i) +: r.getSeq[Long](2 + 2 * i).toSeq)
-      }.toMap
-    }.toMap
-  }
-
   /** The three per-file stats families a commit carries for the files
-    * it writes — key [min,max] bounds, declared multi-column bounds,
-    * and NDV sketches — as one value, so commit paths can compute all
-    * of them in ONE scan ([[commitStatsFor]]) instead of three. */
+    * it writes: key [min,max] bounds, declared multi-column bounds
+    * (`Manifest.colStats`, the Iceberg per-column bounds idea beyond
+    * the single merge `statsKey`), and NDV entries. An NDV entry is
+    * `nullCount +: sketch`: the file's exact NULL count for the column
+    * (the CBO only trusts a distinct count that comes with a null
+    * count), then the k smallest distinct SIGN-FLIPPED xxhash64 values
+    * of its non-NULL values, ascending — flipping makes signed order
+    * equal unsigned hash order, so sketches merge by union-take-k and
+    * [[ndvEstimate]] reads the kth value as a fraction of the hash
+    * space. Sketches carry the cardinality of any atomic column,
+    * strings included, which bounds cannot. */
   case class CommitStats(
       key: Map[String, (Long, Long)],
       colStats: Map[String, Map[String, (Long, Long)]],
@@ -1328,96 +1218,68 @@ object TxnLog {
     val empty: CommitStats = CommitStats(Map.empty, Map.empty, Map.empty)
   }
 
-  /** [[keyStats]] + [[colStatsFor]] + [[ndvSketchFor]] fused into ONE
-    * `groupBy(input_file_name())` pass over exactly `files` (r21
-    * optimization, guide §1.2: every commit used to launch three
-    * back-to-back jobs that each re-read the files it had just
-    * written — the scans differ only in their aggregate list, which
-    * composes). Aggregate expressions, type checks, entry conventions
-    * (EmptyRange for all-NULL, no entry for zero-row files), and the
-    * auto-NDV column expansion are the three primitives' own, applied
-    * verbatim, so every manifest this writes is byte-identical to the
-    * three-scan form (CommitStatsSpec pins that equivalence). The
-    * primitives stay public for single-family callers (declareNdv,
-    * statsFor bootstraps). */
+  /** The [[CommitStats]] of `files` as they are written — the read-back
+    * of stats for files a write did not fold itself: staged files
+    * under a rebased declaration ([[graft.sources.StagedWrite]]), a
+    * declaration over existing files, key bounds for files a manifest
+    * holds none for. The spec is [[WriterStats.spec]]'s over the
+    * files' schema (same refusals, same auto-NDV expansion), and the
+    * rows go through the staged write's own [[WriterStats.Collector]]:
+    * one job reads exactly the spec's columns of the raw files (pending
+    * deletes are NOT applied — a file's stats cover every row it
+    * holds), each task folds one Collector per file it reads, and a
+    * file read as several splits merges its partial results
+    * ([[WriterStats.FileStats.merge]]). With no file, the declared
+    * sets' empty maps; a spec that collects nothing runs no job. */
   def commitStatsFor(
       spark: SparkSession, table: Path, files: Seq[String],
       statsKey: Option[String],
       colStatCols: Seq[String],
       ndvCols0: Seq[String], ndvAutoMode: Boolean = true): CommitStats = {
-    import org.apache.spark.sql.functions._
-    val wantNdv =
-      ndvCols0.nonEmpty || (ndvAutoMode && ndvAuto(spark))
+    import org.apache.spark.sql.functions.{col, input_file_name}
     if (files.isEmpty)
       return CommitStats(Map.empty,
         colStatCols.map(_ -> Map.empty[String, (Long, Long)]).toMap,
         ndvCols0.map(_ -> Map.empty[String, Seq[Long]]).toMap)
-    if (statsKey.isEmpty && colStatCols.isEmpty && !wantNdv)
-      return CommitStats.empty
-    val df = graft.util.ParquetSchema.read(spark,
+    val raw = graft.util.ParquetSchema.read(spark,
       files.map(f => table.resolve(f).toString))
-    // colStatsFor's integral contract: a non-integral declaration
-    // refuses here, before it can reach a manifest.
-    colStatCols.foreach(graft.sources.WriterStats.requireIntegral(
-      df.schema, "colStats column", _))
-    ndvCols0.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"ndv column `$c` does not exist in the table schema " +
-          df.schema.fieldNames.mkString("[", ", ", "]"))
-    }
-    // ndvSketchFor's auto expansion, verbatim: declared ++ every
-    // join/grouping-plausible (string/integral) schema column.
-    val ndvCols =
-      if (!ndvAutoMode || !ndvAuto(spark)) ndvCols0
-      else (ndvCols0 ++ df.schema.fields.collect {
-        case f if ndvAutoEligible(f.dataType) => f.name
-      }).distinct.sorted
-    // One aggregate list, positionally decoded: key bounds first,
-    // then per-column bounds, then per-column (nullCount, sketch).
-    val keyAggs = statsKey.toSeq.flatMap(k => Seq(
-      min(col(k)).as("k_mn"), max(col(k)).as("k_mx")))
-    val colAggs = colStatCols.flatMap(c => Seq(
-      min(col(c).cast("bigint")).as(s"mn_$c"),
-      max(col(c).cast("bigint")).as(s"mx_$c")))
-    val ndvAggs = ndvCols.flatMap(c => Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),
-      graft.functions.BottomKLongs.asColumn(
-        when(col(c).isNotNull,
-          xxhash64(col(c)).bitwiseXOR(lit(Long.MinValue))),
-        NdvSketchK).as(s"kmv_$c")))
-    val aggs = keyAggs ++ colAggs ++ ndvAggs
-    if (aggs.isEmpty)
-      return CommitStats(Map.empty,
-        colStatCols.map(_ -> Map.empty[String, (Long, Long)]).toMap,
-        Map.empty)
-    val rows = df
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val withRel = rows.map(r => attributeFile(table, r.getString(0), files) -> r)
-    val keyOff = 1
-    val colOff = keyOff + keyAggs.size
-    val ndvOff = colOff + colAggs.size
-    val key = statsKey.fold(Map.empty[String, (Long, Long)]) { _ =>
-      withRel.map { case (rel, r) =>
-        if (r.isNullAt(keyOff) || r.isNullAt(keyOff + 1)) rel -> EmptyRange
-        else rel -> (r.getLong(keyOff), r.getLong(keyOff + 1))
-      }.toMap
-    }
-    val colStats = colStatCols.zipWithIndex.map { case (c, i) =>
-      c -> withRel.map { case (rel, r) =>
-        val (mnI, mxI) = (colOff + 2 * i, colOff + 2 * i + 1)
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) rel -> EmptyRange
-        else rel -> (r.getLong(mnI), r.getLong(mxI))
-      }.toMap
-    }.toMap
-    val ndv = ndvCols.zipWithIndex.map { case (c, i) =>
-      c -> withRel.map { case (rel, r) =>
-        rel -> (r.getLong(ndvOff + 2 * i) +:
-          r.getSeq[Long](ndvOff + 2 * i + 1).toSeq)
-      }.toMap
-    }.toMap
-    CommitStats(key, colStats, ndv)
+    val full = WriterStats.spec(spark, raw.schema, statsKey, colStatCols,
+      ndvCols0, ndvAutoMode)
+    // The Collector reads by ordinal: the spec's columns in schema
+    // order, then the file each row came from.
+    val used = (full.statsKey ++ full.colStatCols ++ full.ndvCols).toSet
+    val spec = full.copy(schema =
+      StructType(raw.schema.filter(f => used(f.name))))
+    val at = spec.schema.length
+    val perSplit =
+      if (spec.isEmpty) Nil
+      else {
+        val qe = raw.select(
+          spec.schema.fieldNames.map(col) :+ input_file_name(): _*).queryExecution
+        // An RDD action run as the frame's SQL execution, so the job
+        // carries its plan, metrics and call site like any query.
+        SQLExecution.withNewExecutionId(qe)(qe.toRdd.mapPartitions { rows =>
+          // A split's rows arrive together, one file after another.
+          val out = scala.collection.mutable.ArrayBuffer
+            .empty[(String, WriterStats.FileStats)]
+          var file: org.apache.spark.unsafe.types.UTF8String = null
+          var c: WriterStats.Collector = null
+          rows.foreach { r =>
+            val f = r.getUTF8String(at)
+            if (f != file) {
+              if (c != null) out += file.toString -> c.result()
+              file = f.clone()
+              c = new WriterStats.Collector(spec)
+            }
+            c.update(r)
+          }
+          if (c != null) out += file.toString -> c.result()
+          out.iterator
+        }.collect()).toSeq
+      }
+    WriterStats.assemble(spec, perSplit
+      .groupMapReduce(p => attributeFile(table, p._1, files))(_._2)(_ merge _)
+      .toSeq)
   }
 
   /** Distinct-count estimate from a MERGED sketch (union of per-file
@@ -1458,7 +1320,8 @@ object TxnLog {
       cols: Seq[String]): Committed =
     commitRetryWith(table, t => t.copy(
       action = "ndv",
-      ndv = t.ndv ++ ndvSketchFor(spark, table, t.files, cols),
+      ndv = t.ndv ++ commitStatsFor(spark, table, t.files, None, Nil, cols,
+        ndvAutoMode = false).ndv,
       txn = None, ts = 0L))
 
   /** Hive-style partition values parsed from files' RELATIVE paths
@@ -1539,7 +1402,7 @@ object TxnLog {
   def deleteByKeyMor(spark: SparkSession, table: Path,
       keys: DataFrame, key: String, subdir: String): Committed = {
     import org.apache.spark.sql.functions.col
-    graft.sources.WriterStats.requireIntegral(keys.schema,
+    WriterStats.requireIntegral(keys.schema,
       "deleteByKeyMor key", key)
     val t0 = tip(table)
     require(t0.version >= 0L,
@@ -1828,7 +1691,7 @@ object TxnLog {
       targetFileBytes: Long = TargetFileBytes,
       onPlanned: Int => Unit = _ => ()): Committed = {
     import org.apache.spark.sql.functions._
-    graft.sources.WriterStats.requireIntegral(batch.schema,
+    WriterStats.requireIntegral(batch.schema,
       "mergeCowByKey key", key)
     val (keyAt, opAt) =
       (batch.schema.fieldIndex(key), batch.schema.fieldIndex("op"))
@@ -2739,9 +2602,8 @@ object TxnLog {
   /** Log-derived vacuum: delete every data file that (a) no RETAINED
     * manifest references and (b) is older than the retention horizon.
     * The age guard is what protects an in-flight writer's
-    * not-yet-committed files — exactly the
-    * [[SourceSinkQueries.sinkVacuumRetention]] discipline, with
-    * liveness from the log instead of a listing. */
+    * not-yet-committed files ([[SourceSinkQueries.sinkVacuumRetention]]
+    * witnesses both clauses). */
   def vacuum(table: Path, horizonMs: Long): Vacuumed = {
     val live = liveFiles(table, versions(table))
     val cutoff = System.currentTimeMillis() - horizonMs

@@ -80,12 +80,12 @@ object StagedWrite {
     * returned function gives `staged` with its stats under that tip's
     * [[TxnLog.Manifest.declaredSets]]. Bounds recorded under the
     * wrong column would silently mis-prune later scans, so a rebase
-    * onto a tip whose sets differ re-computes the stats over the
-    * staged files in one fused read-back scan
-    * ([[TxnLog.commitStatsFor]]); the writer-side stats seed the
-    * staging sets, and every set is computed at most once (the files
-    * are immutable once staged). The one place staged stats follow a
-    * rebase: every [[commit]] takes them from here. */
+    * onto a tip whose sets differ reads the staged files back
+    * ([[TxnLog.commitStatsFor]], one job folding the same
+    * [[WriterStats.Collector]] the write tasks ran); the writer-side
+    * stats seed the staging sets, and every set is computed at most
+    * once (the files are immutable once staged). The one place staged
+    * stats follow a rebase: every [[commit]] takes them from here. */
   private def statsUnder(spark: => SparkSession, root: Path, staged: Staged,
       stagedUnder: TxnLog.Manifest): TxnLog.Manifest => Staged = {
     val cache = scala.collection.mutable.Map(

@@ -9,39 +9,34 @@ import org.apache.spark.sql.types._
 
 import graft.operators.TxnLog
 
-/** WRITER-SIDE commit stats (r22, guide §1.2 "remove passes" / §5):
-  * every lakehouse commit used to RE-READ the files it had just
-  * written to compute their per-file stats — r21 fused the three
-  * stats jobs into one ([[TxnLog.commitStatsFor]]), but one full scan
-  * of the staged bytes per commit remained. The information exists in
-  * the write tasks themselves (they see every row as they write it),
-  * which is where Delta (`AddFile.stats`) and Iceberg
-  * (`DataFile` value bounds/null counts) collect it. This extends
-  * [[StagedWrite]]'s row-count discipline to the full stats families:
-  * the write task folds key [min,max], declared column bounds and
-  * per-column (nullCount, KMV sketch) as it writes, and ships them
-  * back in its task result / commit message — ZERO post-write stats
-  * jobs, which at a 100 TB commit means the staged bytes cross the
-  * storage layer once instead of twice.
+/** Per-file commit stats, the one implementation: every per-file
+  * stats entry a manifest carries comes from a [[Collector]] folded
+  * over that file's rows, the way Delta (`AddFile.stats`) and Iceberg
+  * (`DataFile` value bounds/null counts) collect them. A staged write
+  * folds one per written file inside its write task, as it writes
+  * ([[StagedWrite.parquetWithStats]]), so a commit runs no post-write
+  * stats job. The read-back, [[TxnLog.commitStatsFor]], scans files
+  * already written and folds one Collector per file in the same way;
+  * [[assemble]] builds the [[TxnLog.CommitStats]] of both.
   *
-  * Every convention is [[TxnLog.commitStatsFor]]'s, applied verbatim
-  * so manifests stay byte-identical (CommitStatsSpec pins writer-side
-  * == read-back): the EmptyRange entry for an all-NULL column, no
-  * entry for zero-row files (empty partitions write no file), the
-  * integral-type refusal for declared bound columns, the auto-NDV
-  * expansion over string/integral schema columns, sign-flipped
-  * xxhash64 bottom-k sketches (via Spark's own [[XxHash64Function]],
-  * seed 42 — the `xxhash64()` SQL function's exact hash). The
-  * read-back pass survives as the FALLBACK for commits whose
-  * declaration sets changed under them (a rebase onto a tip that
-  * declared new columns mid-flight) and for bootstrap paths that
-  * compute stats over pre-existing files. */
+  * The conventions therefore hold by construction: the EmptyRange
+  * entry for an all-NULL column, no entry for a zero-row file, the
+  * integral-type refusal for declared bound columns and the stats key,
+  * integral widening to BIGINT, the auto-NDV expansion over
+  * string/integral schema columns, and sign-flipped xxhash64 bottom-k
+  * sketches (Spark's own [[XxHash64Function]], seed 42 — the
+  * `xxhash64()` SQL function's exact hash). */
 object WriterStats {
 
   /** Refuse, on the driver, a column `c` of `schema` whose values
     * manifest bounds cannot hold: they compare as BIGINT, so declared
     * bound columns, stats keys, merge keys and equality-delete keys
-    * must be byte/short/int/long. `what` names the column's role. */
+    * must be byte/short/int/long. `what` names the column's role.
+    * A BIGINT cast of anything else is a correctness hazard: a
+    * TIMESTAMP casts to epoch seconds while pushed literals compare in
+    * micros, and a cast that nulls out data would write the
+    * [[TxnLog.EmptyRange]] entry, so scans and copy-on-write rewrites
+    * would prune files that hold matching rows. */
   def requireIntegral(schema: StructType, what: String, c: String): Unit =
     schema.fields.find(_.name == c).getOrElse(
       sys.error(s"$what `$c` does not exist in the table schema " +
@@ -58,27 +53,26 @@ object WriterStats {
     * shipped inside the write closure / writer factory.
     *
     * `ndvCols0` (the declared set) is kept alongside the expanded
-    * `ndvCols` because [[TxnLog.commitStatsFor]]'s zero-file arm
-    * shapes its result by the DECLARED set; [[assemble]] mirrors
-    * that. */
+    * `ndvCols` because a commit that staged no file still carries an
+    * empty map per DECLARED column ([[assemble]]'s zero-file shape). */
   final case class Spec(
       schema: StructType,
       statsKey: Option[String],
       colStatCols: Seq[String],
       ndvCols0: Seq[String],
       ndvCols: Seq[String]) {
-    /** Nothing to collect: mirrors commitStatsFor's no-scan arm. */
+    /** Nothing to collect: no task folds anything, and the read-back
+      * runs no job. */
     def isEmpty: Boolean =
       statsKey.isEmpty && colStatCols.isEmpty && ndvCols.isEmpty
   }
 
-  /** Build the spec — the driver-side half of commitStatsFor: the
-    * same existence checks, the same integral contract for declared
-    * bound columns AND the stats key (a non-integral declaration must
-    * refuse HERE, before any task creates a file or a bound reaches a
-    * manifest), the same auto-NDV expansion (declared ++ every
-    * string/integral schema column, distinct, sorted) gated on the
-    * same conf. */
+  /** Build the spec: existence checks, the integral contract for
+    * declared bound columns AND the stats key (a non-integral
+    * declaration must refuse HERE, before any task creates a file or a
+    * bound reaches a manifest), and the auto-NDV expansion (declared ++
+    * every string/integral schema column, distinct, sorted) gated on
+    * [[TxnLog.NdvAutoConfKey]]. */
   def spec(
       spark: SparkSession, schema: StructType,
       statsKey: Option[String],
@@ -106,17 +100,31 @@ object WriterStats {
     spec(spark, schema, key, cols, ndvCols)
   }
 
-  /** One written file's folded stats. `key`/`colBounds` use the
-    * manifest's [[TxnLog.EmptyRange]] for an all-NULL column; sketch
-    * arrays are the ≤k smallest distinct sign-flipped hashes, sorted
-    * ascending (TreeSet order) — exactly [[graft.functions
-    * .BottomKLongs]]'s eval order. Plain arrays/tuples so the value
-    * rides a task result or DSv2 commit message unmodified. */
+  /** One file's folded stats. `key`/`colBounds` use the manifest's
+    * [[TxnLog.EmptyRange]] for an all-NULL column; sketch arrays are
+    * the ≤k smallest distinct sign-flipped hashes, sorted ascending.
+    * Plain arrays/tuples so the value rides a task result or DSv2
+    * commit message unmodified. */
   final case class FileStats(
       key: Option[(Long, Long)],
       colBounds: Array[(Long, Long)],
       ndvNulls: Array[Long],
-      ndvSketches: Array[Array[Long]])
+      ndvSketches: Array[Array[Long]]) {
+
+    /** The stats of the rows of both `this` and `that` — two splits of
+      * one file: bounds widen (EmptyRange is the identity), NULL counts
+      * add, sketches union and keep the k smallest. */
+    def merge(that: FileStats): FileStats = {
+      def span(a: (Long, Long), b: (Long, Long)) =
+        (math.min(a._1, b._1), math.max(a._2, b._2))
+      FileStats(
+        key.zip(that.key).map { case (a, b) => span(a, b) },
+        colBounds.zip(that.colBounds).map { case (a, b) => span(a, b) },
+        ndvNulls.zip(that.ndvNulls).map { case (a, b) => a + b },
+        ndvSketches.zip(that.ndvSketches).map { case (a, b) =>
+          (a ++ b).distinct.sorted.take(TxnLog.NdvSketchK) })
+    }
+  }
 
   /** Per-task, per-file stats folder. NOT thread-safe (one per write
     * task, the task updates it inline with each row it writes). */
@@ -186,14 +194,13 @@ object WriterStats {
         if (row.isNullAt(ord)) nulls(i) += 1
         else {
           // Spark's own xxhash64 (seed 42) over the INTERNAL value —
-          // bit-identical to `xxhash64(col)` in the read-back scan —
+          // bit-identical to the `xxhash64(col)` SQL function —
           // sign-flipped so signed order equals unsigned hash order.
           val h = XxHash64Function.hash(row.get(ord, dt), dt, 42L) ^
             Long.MinValue
           val s = sketches(i)
-          // Bottom-k distinct insert (BottomKLongs.add semantics; the
-          // size-k early reject skips values provably not in the
-          // bottom k — identical result, no churn).
+          // Bottom-k distinct insert; the size-k early reject skips
+          // values provably not in the bottom k.
           if (s.size < k) s += h
           else if (h < s.last) {
             s += h
@@ -211,11 +218,10 @@ object WriterStats {
       sketches.map(_.toArray))
   }
 
-  /** Assemble per-file writer results into the [[TxnLog.CommitStats]]
-    * commitStatsFor would have produced over the same files — same
-    * zero-file shapes (declared-set-keyed empty maps), same map
-    * keying (expanded NDV set), no entry for files absent from
-    * `perFile` (zero-row outputs write no file). */
+  /** Assemble per-file results into the [[TxnLog.CommitStats]] a
+    * commit carries: with no file, an empty map per declared column;
+    * maps keyed by the expanded NDV set; no entry for a file absent
+    * from `perFile` (a zero-row file folds no row). */
   def assemble(
       spec: Spec,
       perFile: Seq[(String, FileStats)]): TxnLog.CommitStats = {

@@ -1,20 +1,22 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TxnLog
 
-/** Pins the r21 fused commit-stats pass ([[TxnLog.commitStatsFor]]) to
-  * the three primitives it replaced: for any file set / declaration
-  * set, the fused single-scan result must equal keyStats +
-  * colStatsFor + ndvSketchFor computed separately — including the
-  * EmptyRange convention for all-NULL columns, the no-entry
-  * convention for zero-row files, the auto-NDV column expansion, and
-  * the integral-type refusal. The manifests commits write from the
-  * fused pass are therefore byte-identical to the three-scan form. */
+/** Pins per-file commit stats — the write tasks' fold
+  * ([[graft.sources.WriterStats]]) and the read-back
+  * ([[TxnLog.commitStatsFor]]), which run the same Collector — to an
+  * independent reference local to this spec: a plain Spark SQL
+  * aggregate grouped by `input_file_name()`. Covered: the EmptyRange
+  * convention for all-NULL columns, the no-entry convention for
+  * zero-row files, integral widening (byte/short/int keys and bounds),
+  * string sketches past k distinct values, the auto-NDV column
+  * expansion, files read as several splits, and the integral-type
+  * refusal. */
 class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
 
   private def freshTable(): Path = {
@@ -22,6 +24,45 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
       .resolve(s"t${System.nanoTime()}")
     Files.createDirectories(p)
     p
+  }
+
+  /** The reference: each file's stats by a Spark SQL aggregate grouped
+    * by `input_file_name()` — `min`/`max` of the column cast to BIGINT
+    * (NULL bounds: the EmptyRange entry), an exact NULL count, and the
+    * non-NULL values' `xxhash64 ^ Long.MinValue` collected, sorted and
+    * cut to k. `ndvCols` is the expanded NDV set the result keys. A
+    * zero-row file forms no group, so it gets no entry. */
+  private def reference(t: Path, files: Seq[String], key: Option[String],
+      colCols: Seq[String], ndvCols: Seq[String]): TxnLog.CommitStats = {
+    val bounded = key.toSeq ++ colCols
+    val aggs = bounded.flatMap(c => Seq(
+      min(col(c).cast("bigint")), max(col(c).cast("bigint")))) ++
+      ndvCols.flatMap(c => Seq(
+        count(lit(1)) - count(col(c)),
+        collect_set(when(col(c).isNotNull,
+          xxhash64(col(c)).bitwiseXOR(lit(Long.MinValue))))))
+    val root = t.toAbsolutePath.normalize
+    val byFile = spark.read.parquet(files.map(f => t.resolve(f).toString): _*)
+      .groupBy(input_file_name())
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map(r => root.relativize(Paths.get(new java.net.URI(r.getString(0))))
+        .toString -> r)
+    def bounds(i: Int): Map[String, (Long, Long)] = byFile.map {
+      case (f, r) =>
+        f -> (if (r.isNullAt(1 + 2 * i)) TxnLog.EmptyRange
+          else (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
+    }.toMap
+    TxnLog.CommitStats(
+      key.fold(Map.empty[String, (Long, Long)])(_ => bounds(0)),
+      colCols.indices.map(i => colCols(i) -> bounds(key.size + i)).toMap,
+      ndvCols.zipWithIndex.map { case (c, i) =>
+        val at = 1 + 2 * bounded.size + 2 * i
+        c -> byFile.map { case (f, r) =>
+          f -> (r.getLong(at) +:
+            r.getSeq[Long](at + 1).sorted.take(TxnLog.NdvSketchK))
+        }.toMap
+      }.toMap)
   }
 
   /** Two data files with nulls in the value columns + one file whose
@@ -42,47 +83,38 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
     (t, files)
   }
 
-  test("fused pass equals the three primitives, auto-NDV on") {
+  test("read-back equals the SQL reference, auto-NDV on") {
     val (t, files) = fixture()
-    val key = Some("k")
-    val colCols = Seq("v")
-    val ndvCols = Seq("s")
-    val fused = TxnLog.commitStatsFor(spark, t, files, key, colCols, ndvCols)
-    val sep = (
-      TxnLog.keyStats(spark, t, files, "k"),
-      TxnLog.colStatsFor(spark, t, files, colCols),
-      TxnLog.ndvSketchFor(spark, t, files, ndvCols, auto = true))
-    assert(fused.key == sep._1)
-    assert(fused.colStats == sep._2)
-    assert(fused.ndv == sep._3)
+    val got = TxnLog.commitStatsFor(spark, t, files, Some("k"), Seq("v"),
+      Seq("s"))
     // Auto mode expanded beyond the declared column (k, v eligible).
-    assert(fused.ndv.keySet == Set("k", "v", "s"))
+    assert(got == reference(t, files, Some("k"), Seq("v"),
+      Seq("k", "s", "v")))
+    assert(got.ndv.keySet == Set("k", "v", "s"))
+    assert(TxnLog.keyStats(spark, t, files, "k") == got.key)
   }
 
-  test("fused pass equals the primitives with auto-NDV off") {
+  test("read-back equals the SQL reference with auto-NDV off") {
     val (t, files) = fixture()
     spark.conf.set(TxnLog.NdvAutoConfKey, "false")
     try {
-      val fused = TxnLog.commitStatsFor(spark, t, files,
+      val got = TxnLog.commitStatsFor(spark, t, files,
         Some("k"), Seq("v"), Seq("s"))
-      assert(fused.key == TxnLog.keyStats(spark, t, files, "k"))
-      assert(fused.colStats == TxnLog.colStatsFor(spark, t, files, Seq("v")))
-      assert(fused.ndv ==
-        TxnLog.ndvSketchFor(spark, t, files, Seq("s"), auto = true))
-      assert(fused.ndv.keySet == Set("s"))
+      assert(got == reference(t, files, Some("k"), Seq("v"), Seq("s")))
+      assert(got.ndv.keySet == Set("s"))
     } finally spark.conf.unset(TxnLog.NdvAutoConfKey)
   }
 
   test("all-NULL string file carries EmptyRange-convention ndv and bounds") {
     val (t, files) = fixture()
-    val fused = TxnLog.commitStatsFor(spark, t, files,
+    val got = TxnLog.commitStatsFor(spark, t, files,
       Some("k"), Seq("v"), Seq("s"))
     val fc = files.find(_.startsWith("fc")).get
     // fc's s column is entirely NULL: nullCount 2, empty sketch tail.
-    assert(fused.ndv("s")(fc) == Seq(2L))
+    assert(got.ndv("s")(fc) == Seq(2L))
     // Key/col bounds for fc exist (k, v are non-null there).
-    assert(fused.key(fc) == (60L, 61L))
-    assert(fused.colStats("v")(fc) == (9L, 11L))
+    assert(got.key(fc) == (60L, 61L))
+    assert(got.colStats("v")(fc) == (9L, 11L))
   }
 
   test("empty file list and empty declaration sets return empties, no scan") {
@@ -112,13 +144,57 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
     assert(missing.getMessage.contains("does not exist"))
   }
 
-  /** r22 writer-side stats: the write tasks fold the same three stats
-    * families while writing ([[graft.sources.WriterStats]]); the
-    * assembled result must equal the fused read-back scan over the
-    * exact files the write produced — including EmptyRange for
-    * all-NULL columns, nullable keys, integral widening (byte/short/
-    * int), string KMV sketches past k distinct values, and the
-    * auto-NDV expansion. */
+  test("BYTE, SHORT and INT stats keys read back their widened bounds") {
+    val t = freshTable()
+    spark.range(0, 60).repartitionByRange(3, col("id"))
+      .selectExpr("CAST(id - 20 AS byte) AS b",
+        "CAST(id * 300 AS short) AS h", "CAST(id * 70000 AS int) AS i",
+        "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id AS int) END AS n")
+      .write.parquet(t.resolve("d").toString)
+    val files = TxnLog.parquetsUnder(t, "d")
+    assert(files.size == 3)
+    spark.conf.set(TxnLog.NdvAutoConfKey, "false")
+    try Seq("b", "h", "i", "n").foreach { k =>
+      val want = reference(t, files, Some(k), Nil, Nil).key
+      assert(TxnLog.commitStatsFor(spark, t, files, Some(k), Nil, Nil).key ==
+        want, k)
+      assert(TxnLog.keyStats(spark, t, files, k) == want, k)
+    } finally spark.conf.unset(TxnLog.NdvAutoConfKey)
+  }
+
+  test("a file read as several splits gets one entry, equal to the " +
+      "reference") {
+    val t = freshTable()
+    // Small row groups, so a small split size gives several splits
+    // that each hold rows.
+    spark.range(0, 20000)
+      .selectExpr("id AS k", "CAST(id % 997 AS int) AS v",
+        "concat('s', id % 89) AS s")
+      .coalesce(1).write.option("parquet.block.size", 16384)
+      .parquet(t.resolve("d").toString)
+    val files = TxnLog.parquetsUnder(t, "d")
+    assert(files.size == 1)
+    val want = reference(t, files, Some("k"), Seq("v"), Seq("k", "s", "v"))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    try {
+      val splitsWithRows = spark.read.parquet(t.resolve(files.head).toString)
+        .rdd.mapPartitions(rows => Iterator(rows.size)).collect()
+        .count(_ > 0)
+      assert(splitsWithRows > 1, "the file must be read as several splits")
+      val got = TxnLog.commitStatsFor(spark, t, files, Some("k"), Seq("v"),
+        Seq("s"))
+      assert(got.key.keySet == files.toSet)
+      assert(got == want)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  /** The write tasks fold the same three stats families while writing
+    * ([[graft.sources.WriterStats]]); the assembled result and the
+    * read-back must both equal the reference over the exact files the
+    * write produced — including
+    * EmptyRange for all-NULL columns, integral widening (byte/short/
+    * int), string KMV sketches past k distinct values, and the auto-NDV
+    * expansion. */
   test("writer-side stats equal the read-back scan, auto-NDV on") {
     val t = freshTable()
     // 4 range files; ids >= 75 have NULL v and NULL s, so the last
@@ -140,11 +216,11 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
     assert(files.size == 4)
     val writerSide = graft.sources.WriterStats.assemble(spec,
       staged.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-    val readBack = TxnLog.commitStatsFor(spark, t, files,
-      Some("k"), Seq("v", "b", "h"), Seq("s"))
-    assert(writerSide.key == readBack.key)
-    assert(writerSide.colStats == readBack.colStats)
-    assert(writerSide.ndv == readBack.ndv)
+    val want = reference(t, files, Some("k"), Seq("v", "b", "h"),
+      Seq("b", "h", "k", "s", "v"))
+    assert(writerSide == want)
+    assert(TxnLog.commitStatsFor(spark, t, files,
+      Some("k"), Seq("v", "b", "h"), Seq("s")) == want)
     // Auto expansion reached every string/integral column.
     assert(writerSide.ndv.keySet == Set("k", "v", "s", "b", "h"))
     // The all-NULL arms actually fired.
@@ -169,9 +245,10 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
       val files = staged.map(_._1)
       val writerSide = graft.sources.WriterStats.assemble(spec,
         staged.flatMap { case (rel, _, fs) => fs.map(rel -> _) })
-      val readBack = TxnLog.commitStatsFor(spark, t, files,
-        Some("k"), Seq("v"), Seq("s"))
-      assert(writerSide == readBack)
+      val want = reference(t, files, Some("k"), Seq("v"), Seq("s"))
+      assert(writerSide == want)
+      assert(TxnLog.commitStatsFor(spark, t, files,
+        Some("k"), Seq("v"), Seq("s")) == want)
       // The all-NULL-key file carries the explicit EmptyRange entry.
       assert(writerSide.key.values.toSet.contains(TxnLog.EmptyRange))
       assert(writerSide.ndv.keySet == Set("s"))
@@ -244,27 +321,16 @@ class CommitStatsSpec extends AnyFunSuite with SparkTestBase {
     assert(m.files.forall(f => m.ndv("k").contains(f)))
   }
 
-  test("fused pass runs ONE job where the primitives ran three") {
+  test("the read-back runs ONE job, and none when it collects nothing") {
     val (t, files) = fixture()
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val (_, jobs) = jobsRun(TxnLog.commitStatsFor(spark, t, files,
+      Some("k"), Seq("v"), Seq("s")))
+    assert(jobs.size == 1 && jobs.head.shuffleBytes == 0L, jobs)
+    spark.conf.set(TxnLog.NdvAutoConfKey, "false")
     try {
-      TxnLog.commitStatsFor(spark, t, files, Some("k"), Seq("v"), Seq("s"))
-      Thread.sleep(300) // let listener events drain
-      val fusedJobs = counter.get()
-      counter.set(0)
-      TxnLog.keyStats(spark, t, files, "k")
-      TxnLog.colStatsFor(spark, t, files, Seq("v"))
-      TxnLog.ndvSketchFor(spark, t, files, Seq("s"), auto = true)
-      Thread.sleep(300) // let listener events drain
-      val separateJobs = counter.get()
-      assert(fusedJobs * 3 <= separateJobs,
-        s"fused=$fusedJobs separate=$separateJobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val (_, none) = jobsRun(TxnLog.commitStatsFor(spark, t, files,
+        None, Nil, Nil))
+      assert(none.isEmpty, none)
+    } finally spark.conf.unset(TxnLog.NdvAutoConfKey)
   }
 }

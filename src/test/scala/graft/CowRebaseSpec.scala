@@ -218,4 +218,41 @@ class CowRebaseSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs.isEmpty, jobs)
     assert(TxnLog.tip(tbl).version == 1L)
   }
+
+  test("an INT-key merge that loses a race to declareNdv rebases, and " +
+      "its file carries the key's bounds") {
+    val tbl = graft.util.Scratch.dir("graft_cowrebase")
+      .resolve(s"n${System.nanoTime()}")
+    Files.createDirectories(tbl)
+    (1 to 50).map(i => (i, i * 10L)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl.resolve("lo").toString)
+    (51 to 100).map(i => (i, i * 10L)).toDF("id", "v")
+      .coalesce(1).write.parquet(tbl.resolve("hi").toString)
+    val lo = TxnLog.parquetsUnder(tbl, "lo")
+    val hi = TxnLog.parquetsUnder(tbl, "hi")
+    TxnLog.commitRetry(tbl, "create", _ => lo ++ hi,
+      statsFor = _ => TxnLog.keyStats(spark, tbl, lo ++ hi, "id"),
+      statsKey = Some("id"))
+    // The declaration changes the tip's declared sets, so the rebased
+    // commit reads the staged file's stats back under them, INT key
+    // included.
+    var fired = false
+    val c = TxnLog.mergeCowByKey(spark, tbl,
+      Seq((7, 71L, "upsert")).toDF("id", "v", "op"), "id", "m0",
+      onPlanned = _ => if (!fired) {
+        fired = true
+        TxnLog.declareNdv(spark, tbl, Seq("v"))
+      })
+    assert(c == TxnLog.Committed(2L, 1), c)
+    val tip = TxnLog.tip(tbl)
+    assert(tip.action == "merge" && tip.parent == 1L, tip)
+    assert(!lo.exists(tip.files.contains) && hi.forall(tip.files.contains))
+    val rewritten = tip.files.filterNot(hi.contains)
+    assert(rewritten.size == 1 && rewritten.head.startsWith("m0/"), rewritten)
+    assert(tip.statsKey.contains("id") &&
+      tip.stats.get(rewritten.head).contains((1L, 50L)), tip)
+    assert(tip.files.forall(tip.ndv("v").contains), tip.ndv)
+    assert(GraftTables.read(spark, tbl).as[(Int, Long)].collect().toSet ==
+      (1 to 100).map(i => (i, if (i == 7) 71L else i * 10L)).toSet)
+  }
 }

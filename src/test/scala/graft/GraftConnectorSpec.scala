@@ -1878,7 +1878,8 @@ class GraftConnectorSpec extends AnyFunSuite with SparkTestBase {
     TxnLog.commitRetryWith(tbl, _ => TxnLog.Manifest(0L, -1L, "create",
       base, TxnLog.keyStats(spark, tbl, base, "id"),
       statsKey = Some("id"),
-      colStats = TxnLog.colStatsFor(spark, tbl, base, Seq("v"))))
+      colStats = TxnLog.commitStatsFor(spark, tbl, base, None, Seq("v"), Nil,
+        ndvAutoMode = false).colStats))
     // Another writer created the table first: the create degrades to
     // an append.
     GraftTables.createFrom(tbl,

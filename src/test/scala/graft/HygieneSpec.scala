@@ -115,35 +115,70 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("writer-side stats are staged and assembled in ONE place") {
-    // The staging decision — driver-validated spec, task-side write,
-    // task reports folded into CommitStats — lives in
-    // StagedWrite.stage / StagedWrite.Staged.of. Hand-written copies
-    // of that sequence drift apart (they once sized rewrites from two
-    // different sources), so any production call of the task-side
-    // write or of the stats assembler outside StagedWrite.scala fails
-    // this audit, as does a second call inside it.
+  /** Main-source calls matching `callPat` (group 1 names the callee)
+    * as (file, enclosing def, callee), sorted: comment lines skipped,
+    * each call attributed to the last `def` above it. */
+  private def callers(
+      callPat: scala.util.matching.Regex): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
-    val callPat =
-      """(?<!def )\b(parquetWithStats|WriterStats\.assemble)\s*\(""".r
-    val calls: Seq[(String, String)] = java.nio.file.Files.walk(root)
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val defPat = """\bdef\s+(\w+)""".r
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { f =>
         val rel = root.relativize(f).toString
         new String(java.nio.file.Files.readAllBytes(f)).linesIterator
           .map(_.trim)
           .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
             l.startsWith("//"))
-          .flatMap(l => callPat.findAllMatchIn(l).map(m => rel -> m.group(1)))
-      }
-    val home = "graft/sources/StagedWrite.scala"
-    assert(calls.sorted == Seq(home -> "WriterStats.assemble",
-        home -> "parquetWithStats"),
-      "stage through StagedWrite.stage (or fold DSv2 task reports " +
-        "with StagedWrite.Staged.of) instead of calling the task-side " +
-        s"write or the assembler directly: ${calls.sorted}")
+          .scanLeft(("", Seq.empty[String])) { case ((enclosing, _), l) =>
+            (defPat.findFirstMatchIn(l).fold(enclosing)(_.group(1)),
+              callPat.findAllMatchIn(l).map(_.group(1)).toSeq)
+          }
+          .flatMap { case (enclosing, callees) =>
+            callees.map((rel, enclosing, _))
+          }
+      }.sorted
+  }
+
+  test("writer-side stats are staged and assembled in ONE place") {
+    // Per-file stats have one implementation: WriterStats.Collector
+    // folds rows, WriterStats.assemble builds the commit stats. The
+    // staged writes (StagedWrite.stage's task-side write, and the two
+    // DSv2 writers' tasks, whose reports Staged.of folds) and the one
+    // read-back (TxnLog.commitStatsFor) are their only users. Copies
+    // of the stats rules once lived in five places and disagreed on
+    // INT keys, so any other production use of the Collector, the
+    // assembler or the task-side write fails this audit, as does a
+    // groupBy(input_file_name()) stats aggregate in TxnLog.scala.
+    val calls = callers(("""(?<!def )\b(parquetWithStats|""" +
+      """WriterStats\.assemble|WriterStats\.Collector)\s*\(""").r)
+    assert(calls == Seq(
+        ("graft/operators/TxnLog.scala", "commitStatsFor", "WriterStats.Collector"),
+        ("graft/operators/TxnLog.scala", "commitStatsFor", "WriterStats.assemble"),
+        ("graft/sources/GraftDelta.scala", "createWriter", "WriterStats.Collector"),
+        ("graft/sources/GraftRowLevel.scala", "createWriter",
+          "WriterStats.Collector"),
+        ("graft/sources/StagedWrite.scala", "of", "WriterStats.assemble"),
+        ("graft/sources/StagedWrite.scala", "parquetWithStats",
+          "WriterStats.Collector"),
+        ("graft/sources/StagedWrite.scala", "stage", "parquetWithStats")),
+      "stage through StagedWrite.stage (or fold DSv2 task reports with " +
+        "StagedWrite.Staged.of), and read stats back through " +
+        s"TxnLog.commitStatsFor: $calls")
+    val code = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("src/main/scala/graft/operators/TxnLog.scala")))
+      .linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+        l.startsWith("//"))
+      .mkString("\n")
+    val statsAggs = java.util.regex.Pattern.quote("groupBy(input_file_name()")
+      .r.findAllMatchIn(code)
+      .map(m => code.substring(m.start, code.indexOf(".collect()", m.start)))
+      .filter(q => Seq("min(", "max(", "xxhash64", "BottomK").exists(q.contains))
+      .toSeq
+    assert(statsAggs.isEmpty, s"per-file stats aggregates in TxnLog: $statsAggs")
   }
 
   test("staged stats follow a rebase in ONE place") {
@@ -151,25 +186,20 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
     // sets changed must re-derive the staged files' stats under the
     // new sets. StagedWrite.statsUnder owns that decision (seeded
     // with the writer-side stats, memoized per set); three hand-kept
-    // copies of it once drifted apart, so any production call of the
-    // read-back stats scan outside StagedWrite.scala fails this audit.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
-    val callPat = """(?<!def )\bcommitStatsFor\s*\(""".r
-    val callers = java.nio.file.Files.walk(root)
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap { f =>
-        val rel = root.relativize(f).toString
-        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
-          .map(_.trim)
-          .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
-            l.startsWith("//"))
-          .flatMap(l => callPat.findAllMatchIn(l).map(_ => rel))
-      }
-    assert(callers == Seq("graft/sources/StagedWrite.scala"),
+    // copies of it once drifted apart. The read-back's other callers
+    // read files no write is staging: keyStats (the merge's bootstrap
+    // of files without bounds), declareNdv (a declaration over the
+    // live files) and one fixture's create. Any other production call
+    // of the read-back fails this audit.
+    val calls = callers("""(?<!def )\b(commitStatsFor)\s*\(""".r)
+      .map { case (rel, enclosing, _) => rel -> enclosing }
+    assert(calls == Seq(
+        "graft/operators/SourceSinkQueries.scala" -> "tableMulticolSkippingQuery",
+        "graft/operators/TxnLog.scala" -> "declareNdv",
+        "graft/operators/TxnLog.scala" -> "keyStats",
+        "graft/sources/StagedWrite.scala" -> "statsUnder"),
       "take rebased stats from StagedWrite.statsUnder instead of " +
-        s"calling TxnLog.commitStatsFor directly: $callers")
+        s"calling TxnLog.commitStatsFor directly: $calls")
   }
 
   test("tryCommitManifest is called only by the two commit loops") {
@@ -184,36 +214,20 @@ class HygieneSpec extends AnyFunSuite with SparkTestBase {
     // the raw commit primitive from any other function fails this
     // audit, as does a refusal of the old "planned against v<N>" form.
     // (The test keeps its name; the two are the loop and tryCommit.)
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"no source at $root")
-    val defPat = """\bdef\s+(\w+)""".r
-    val callPat = """(?<!def )\btryCommitManifest\s*\(""".r
-    val sources: Seq[(String, Seq[String])] = java.nio.file.Files
-      .walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .toSeq.map { f =>
-        root.relativize(f).toString ->
-          new String(java.nio.file.Files.readAllBytes(f)).linesIterator
-            .map(_.trim).toSeq
-      }
-    // Each call is attributed to the last `def` above it.
-    val callers = sources.flatMap { case (rel, lines) =>
-      lines.filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
-          l.startsWith("//"))
-        .scanLeft(("", 0)) { case ((enclosing, _), l) =>
-          (defPat.findFirstMatchIn(l).fold(enclosing)(_.group(1)),
-            callPat.findAllMatchIn(l).size)
-        }
-        .flatMap { case (enclosing, n) => Seq.fill(n)(rel -> enclosing) }
-    }.sorted
-    assert(callers == Seq(
+    val calls = callers("""(?<!def )\b(tryCommitManifest)\s*\(""".r)
+      .map { case (rel, enclosing, _) => rel -> enclosing }
+    assert(calls == Seq(
         "graft/operators/TxnLog.scala" -> "tryCommit",
         "graft/sources/StagedWrite.scala" -> "commit"),
       "commit through StagedWrite.commit (or TxnLog.commitRetryWith) " +
-        s"instead of calling TxnLog.tryCommitManifest directly: $callers")
-    val stale = sources.flatMap { case (rel, lines) =>
-      lines.filter(_.contains("planned against v")).map(rel -> _)
-    }
+        s"instead of calling TxnLog.tryCommitManifest directly: $calls")
+    import scala.jdk.CollectionConverters._
+    val stale = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        new String(java.nio.file.Files.readAllBytes(f)).linesIterator
+          .filter(_.contains("planned against v")).map(f.toString -> _.trim)
+      }
     assert(stale.isEmpty, s"refuse-any commit copies: $stale")
   }
 

@@ -237,7 +237,7 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     assert(TxnLog.lastTxn(t, "never-committed").isEmpty)
   }
 
-  test("keyStats/colStatsFor attribute ranges by FULL PATH, not basename") {
+  test("keyStats/commitStatsFor attribute ranges by FULL PATH") {
     val s = spark; import s.implicits._
     val t = freshTable()
     // Two files with IDENTICAL basenames in different subdirectories
@@ -256,8 +256,9 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     val ks = TxnLog.keyStats(spark, t, files, "id")
     assert(ks == Map("a/part-0.parquet" -> (1L, 10L),
       "b/part-0.parquet" -> (1000L, 2000L)))
-    val cs = TxnLog.colStatsFor(spark, t, files, Seq("id"))
-    assert(cs("id") == ks)
+    val cs = TxnLog.commitStatsFor(spark, t, files, None, Seq("id"), Nil)
+    assert(cs.colStats("id") == ks)
+    assert(cs.ndv("id").keySet == files.toSet)
     val counts = TxnLog.rowCounts(spark, t, files)
     assert(counts == Map("a/part-0.parquet" -> 10L,
       "b/part-0.parquet" -> 1001L))
@@ -276,25 +277,26 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     assert(counts.values.toSeq == Seq(3L))
   }
 
-  test("colStatsFor REFUSES non-integral and missing declared columns") {
+  test("commitStatsFor REFUSES non-integral and missing declared columns") {
     val s = spark; import s.implicits._
     val t = freshTable()
     Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "name", "score")
       .coalesce(1).write.parquet(t.resolve("d").toString)
     val files = TxnLog.parquetsUnder(t, "d")
     // Integral column: fine.
-    assert(TxnLog.colStatsFor(spark, t, files, Seq("id"))("id")
-      .values.toSeq == Seq((1L, 2L)))
+    def colStats(c: String) =
+      TxnLog.commitStatsFor(spark, t, files, None, Seq(c), Nil).colStats(c)
+    assert(colStats("id").values.toSeq == Seq((1L, 2L)))
     // A string column would cast to all-NULL = EmptyRange = every
     // file wrongly pruned; a double silently truncates. Both refuse.
     val e1 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("name")))
+      colStats("name"))
     assert(e1.getMessage.contains("non-integral"))
     val e2 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("score")))
+      colStats("score"))
     assert(e2.getMessage.contains("non-integral"))
     val e3 = intercept[RuntimeException](
-      TxnLog.colStatsFor(spark, t, files, Seq("no_such_col")))
+      colStats("no_such_col"))
     assert(e3.getMessage.contains("does not exist"))
   }
 
@@ -1274,7 +1276,8 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
       val fs = TxnLog.parquetsUnder(t, s"a$i")
       TxnLog.commitRetryWith(t, tp => tp.copy(action = "append",
         files = tp.files ++ fs,
-        ndv = TxnLog.ndvSketchFor(spark, t, fs, Seq("u")),
+        ndv = TxnLog.commitStatsFor(spark, t, fs, None, Nil, Seq("u"),
+          ndvAutoMode = false).ndv,
         txn = None, ts = 0L))
     }
     val tip = TxnLog.tip(t)
@@ -1504,7 +1507,7 @@ class TxnLogSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     def estimate(n: Long, base: Long, k: Int): Long = {
       // Max-heap of the k smallest flipped hashes — the same bottom-k
-      // the BottomKLongs aggregate maintains per file.
+      // the stats Collector maintains per file.
       val pq = new java.util.PriorityQueue[java.lang.Long](
         k + 1, java.util.Comparator.reverseOrder[java.lang.Long]())
       var v = 0L
